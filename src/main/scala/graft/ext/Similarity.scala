@@ -216,21 +216,11 @@ object Similarity {
     df.withColumn("bucket", bucketBits.reduce((a: Column, b: Column) => a.bitwiseOR(b)))
   }
 
-  /**
-   * IVF (inverted-file) ANN: Lloyd-iterated centroids partition the
-   * corpus into `nCentroids` cells; each query probes its `nProbe`
-   * nearest cells and scores only those candidates exactly. The classic
-   * scale path when LSH recall is too blunt: candidate count scales
-   * with corpus/nCentroids × nProbe.
-   *
-   * Centroids are tiny (nCentroids × dims doubles) and are the ONLY
-   * thing collected to the driver — assignment and scoring stay
-   * distributed. Init is deterministic (hash-ranked corpus sample).
-   */
   /** Nearest-centroid ids of `v` as a plan-time expression: squared L2
     * via -2·v·c + ||c||² (||v||² constant per row), ascending sort →
     * first `probes` centroid ids. Shared by training, assignment, and
-    * probing, so the three can never diverge. */
+    * probing, so the three can never diverge. No centroids (an empty
+    * or all-null corpus) give a null id array: no cell. */
   private def nearestCentroidCol(v: Column, cents: Array[Seq[Double]],
       probes: Int): Column = {
     val scored = cents.zipWithIndex.map { case (cent, i) =>
@@ -238,91 +228,124 @@ object Similarity {
       val normSq = cent.map(x => x * x).sum
       struct((lit(normSq) - lit(2.0) * dot(v, centCol)).as("d"), lit(i).as("cid"))
     }
-    slice(transform(array_sort(array(scored: _*)), s => s.getField("cid")), 1, probes)
+    if (cents.isEmpty) lit(null).cast("array<int>")
+    else slice(transform(array_sort(array(scored: _*)), s => s.getField("cid")), 1, probes)
   }
 
   /**
-   * Lloyd-iterated centroid training — the index-BUILD step, factored
-   * out so [[ivfTopK]] (train-per-query, the oracle-replayable form)
-   * and [[ensureIvfIndex]] (train-once-persist, the serving form)
-   * share one definition. Deterministic: md5-ranked init (replayable
-   * in DuckDB, unlike xxhash64), exact integer-nano-unit means
-   * (order-independent long sums — a float `avg` would follow
-   * partitioning order). Centroids are the ONLY thing collected.
+   * The one deterministic k-means of this object: `m` independent
+   * codebooks of up to `k` centroids, each over a contiguous
+   * `dims/m`-wide slice of `vecCol`, trained on the checkpointed
+   * `(idCol, vecCol)` frame `base`. `codes` maps the current codebooks
+   * to an `array<int>` expression holding each row's `m` cell ids.
+   * IVF is `m = 1` with [[nearestCentroidCol]]; PQ is `m` subspaces
+   * with the `pqCodes` kernel.
+   *
+   *  - Init: the `k` rows first by md5 rank of (seed, id) — replayable
+   *    in DuckDB, unlike xxhash64 — the SAME member rows for every
+   *    codebook. Fewer rows give fewer centroids; an empty frame gives
+   *    `m` empty codebooks.
+   *  - Each Lloyd pass is ONE scan job: the assignment and the 1e-9
+   *    grid quantization stay whole-stage codegen in one projection;
+   *    per-partition long partials (sums, counts) merge driver-side
+   *    through `RDD.reduce`. Long additions are order-independent, so
+   *    the means do not follow partitioning order (a float `avg`
+   *    would). No shuffle; the driver holds one m·k·(dims/m) partial
+   *    at a time. A null vector element adds nothing to its sum but
+   *    its row still counts, as in a SQL `sum` / `count(*)` mean.
+   *  - An empty cell carries its previous centroid forward.
+   *  - A null vector takes no part in init or in any pass. A vector
+   *    shorter than the widest init row fails the pass with Spark's
+   *    array index error (ANSI mode, Spark's default).
    */
-  def trainIvfCentroids(corpus: DataFrame, nCentroids: Int = 16,
-      iters: Int = 3, seed: Long = 42L, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Array[Seq[Double]] = {
-    // Materialize the narrow (id, vec) projection ONCE: the init rank
-    // job and every Lloyd iteration otherwise re-run the full upstream
-    // lineage (parquet scan + any derived embedding) — guide §5 "reuse
-    // before recompute". Partitioning stays as planned (no coalesce):
-    // at corpus scale the per-iteration aggregation rides the scan's
-    // real parallelism.
-    val c = corpus.select(col(idCol), col(vecCol)).localCheckpoint()
-    var centroids: Array[Seq[Double]] = c
+  private def lloyd(base: DataFrame, m: Int, k: Int, iters: Int, seed: Long,
+      idCol: String, vecCol: String)(
+      codes: Array[Array[Seq[Double]]] => Column): Array[Array[Seq[Double]]] = {
+    val live = base.where(col(vecCol).isNotNull)
+    val init = live
       .orderBy(graft.functions.Rng.uniform(seed, "ivf/init", col(idCol)), col(idCol))
-      .limit(nCentroids)
-      .select(col(vecCol)).collect()
+      .limit(k).select(col(vecCol)).collect()
       .map(_.getSeq[Any](0).map(x => x.asInstanceOf[Number].doubleValue()))
-    val dims = centroids.headOption.map(_.length).getOrElse(0)
+    val dims = if (init.isEmpty) 0 else init.map(_.length).max
+    val sub = dims / m
+    val kk = init.length
+    var books = Array.tabulate(m)(s => init.map(_.slice(s * sub, (s + 1) * sub)))
     var it = 0
     while (it < iters && dims > 0) {
-      // ONE job per iteration (was: posexplode → groupBy(cid, pos) →
-      // collect = a dims× Generate feeding an exchange plus two AQE
-      // stage-jobs): the assignment and the 1e-9 grid quantization stay
-      // whole-stage codegen in this projection — the per-row hot path
-      // never leaves generated code — and the per-partition partial
-      // (sums, counts) merge driver-side through RDD.reduce, whose long
-      // additions are order-independent, so the resulting means are
-      // bitwise the old grouped sums. No shuffle, no AQE stages: at
-      // corpus scale each Lloyd pass is exactly one map-side scan of
-      // the checkpointed frame, and the driver holds one
-      // nCentroids×dims partial at a time (not one per partition).
-      val proj = c.select((element_at(
-          nearestCentroidCol(col(vecCol), centroids, 1), 1).as("cid") +:
+      val proj = live.select((codes(books).as("__codes") +:
         (0 until dims).map(i =>
           round(element_at(col(vecCol), i + 1).cast("double") * lit(1e9))
             .cast("long").as(s"__l$i"))): _*)
-      val k = centroids.length
-      val nDims = dims
       val (sums, counts) = proj.queryExecution.toRdd.mapPartitions { rows =>
-        val s = Array.ofDim[Long](k, nDims)
-        val n = new Array[Long](k)
+        val s = Array.ofDim[Long](m, kk, sub)
+        val n = Array.ofDim[Long](m, kk)
         while (rows.hasNext) {
           val r = rows.next()
-          val cid = r.getInt(0)
-          n(cid) += 1L
-          var i = 0
-          while (i < nDims) {
-            // null grid cell ⇔ null vector element: the old sum()
-            // skipped it while count(lit(1)) still counted the row
-            if (!r.isNullAt(i + 1)) s(cid)(i) += r.getLong(i + 1)
-            i += 1
+          val cs = r.getArray(0)
+          var si = 0
+          while (si < m) {
+            val cid = cs.getInt(si)
+            n(si)(cid) += 1L
+            var p = 0
+            while (p < sub) {
+              val c = 1 + si * sub + p
+              if (!r.isNullAt(c)) s(si)(cid)(p) += r.getLong(c)
+              p += 1
+            }
+            si += 1
           }
         }
         Iterator.single((s, n))
       }.reduce { case ((s1, n1), (s2, n2)) =>
-        var ci = 0
-        while (ci < k) {
-          n1(ci) += n2(ci)
-          var i = 0
-          while (i < nDims) { s1(ci)(i) += s2(ci)(i); i += 1 }
-          ci += 1
+        var si = 0
+        while (si < m) {
+          var ci = 0
+          while (ci < kk) {
+            n1(si)(ci) += n2(si)(ci)
+            var p = 0
+            while (p < sub) { s1(si)(ci)(p) += s2(si)(ci)(p); p += 1 }
+            ci += 1
+          }
+          si += 1
         }
         (s1, n1)
       }
-      centroids = centroids.zipWithIndex.map { case (old, i) =>
-        // empty cells carry the previous centroid forward; same op
-        // order as the old SQL mean expression:
-        // sum.cast(double) / (count.cast(double) * 1e9)
-        if (counts(i) == 0L) old
-        else (0 until nDims).map(j => sums(i)(j).toDouble / (counts(i).toDouble * 1e9))
+      // same op order as the SQL mean the oracle replays:
+      // sum.cast(double) / (count.cast(double) * 1e9)
+      books = Array.tabulate(m, kk) { (si, j) =>
+        if (counts(si)(j) == 0L) books(si)(j)
+        else (0 until sub).map(p =>
+          sums(si)(j)(p).toDouble / (counts(si)(j).toDouble * 1e9))
       }
       it += 1
     }
-    centroids
+    books
   }
+
+  /** IVF training over the checkpointed `(idCol, vecCol)` projection
+    * of `corpus`, plus that SAME projection with each row's nearest
+    * `cid` — the train-then-assign step every IVF/SemDeDup entry point
+    * shares, so assignment never re-scans the source. Every input row
+    * is assigned, a null vector included (it lands in cell 0). */
+  private def trainAndAssign(corpus: DataFrame, nCentroids: Int, iters: Int,
+      seed: Long, idCol: String, vecCol: String): (Array[Seq[Double]], DataFrame) = {
+    val base = corpus.select(col(idCol), col(vecCol)).localCheckpoint()
+    val centroids = lloyd(base, 1, nCentroids, iters, seed, idCol, vecCol)(
+      cs => nearestCentroidCol(col(vecCol), cs.head, 1)).head
+    (centroids, base.withColumn("cid",
+      element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1)))
+  }
+
+  /**
+   * Lloyd-iterated IVF centroid training — the index-BUILD step, the
+   * `m = 1` case of the shared Lloyd pass (`lloyd`): `nCentroids`
+   * full-width centroids, md5-ranked init, exact integer-nano-unit
+   * means. Centroids are the ONLY thing collected.
+   */
+  def trainIvfCentroids(corpus: DataFrame, nCentroids: Int = 16,
+      iters: Int = 3, seed: Long = 42L, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Array[Seq[Double]] =
+    trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)._1
 
   // ===== Product quantization (PQ) ====================================
 
@@ -345,111 +368,31 @@ object Similarity {
   /**
    * Product-quantization codebooks: the `dims`-dim space split into
    * `m` contiguous `dims/m`-dim subspaces, each clustered into `k`
-   * sub-centroids by the SAME deterministic Lloyd loop as the IVF
-   * index ([[trainIvfCentroids]]: md5-ranked init — identical member
-   * set for every subspace — and grid-exact integer-nano means) over
-   * the L2-normalized corpus. Returns `m` codebooks of `k`
-   * sub-centroids. After encoding a vector is `m` small codes
-   * (k ≤ 256 ⇒ m bytes) instead of `dims·4` float bytes — the
-   * classic ~32× compression that keeps billion-vector indexes in
-   * RAM; the codebooks are m·k·(dims/m) doubles, driver-held and
-   * embedded as plan-time literals.
+   * sub-centroids by the shared Lloyd pass (`lloyd`, the same one as
+   * [[trainIvfCentroids]]) over the L2-normalized corpus, checkpointed
+   * once. Every subspace's assignment comes from one `pqCodes` kernel
+   * call per row (normalize = false — the frame already holds the
+   * normalized vector, and re-normalizing an L2-unit vector is NOT a
+   * bit-level no-op). Returns `m` codebooks of `k` sub-centroids.
+   * After encoding a vector is `m` small codes (k ≤ 256 ⇒ m bytes)
+   * instead of `dims·4` float bytes — the classic ~32× compression
+   * that keeps billion-vector indexes in RAM; the codebooks are
+   * m·k·(dims/m) doubles, driver-held and embedded as plan-time
+   * literals.
    */
   def pqTrain(corpus: DataFrame, m: Int = 4, k: Int = 16, iters: Int = 3,
       seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding", dims: Int = 64): Array[Array[Seq[Double]]] = {
     require(m > 0 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val sub = dims / m
-    val nrm = norm(col(vecCol))
-    // Materialize the normalized vector ONCE (one codegen projection,
-    // eager localCheckpoint): the Lloyd loop then runs ONE job per
-    // iteration — every subspace's assignment comes from a single
-    // pqCodes kernel call per row, and all m·k means reduce in the
-    // same pass (not m separate trainings). This is the index-BUILD
-    // step; at corpus scale the input is a bounded training sample,
-    // exactly like [[ensureIvfIndex]]'s build.
-    // Bounded partition count: the training frame is index-build-sized
-    // (a sample at corpus scale), and every Lloyd job pays per-task
-    // overhead — 8 tasks beat 200 for a frame this shape.
+    val v = col(vecCol)
+    // a null vector stays null (pqNormSlice alone gives an array of
+    // nulls, which the Lloyd pass could not tell from a vector)
     val base = corpus.select(col(idCol),
-        pqNormSlice(col(vecCol), nrm, 0, dims).as("__vn"))
-      .coalesce(8).localCheckpoint()
-    // md5-ranked init: the SAME member rows for every subspace
-    // (trainIvfCentroids' rule — one rank job, k rows collected)
-    val initRows = base
-      .orderBy(graft.functions.Rng.uniform(seed, "ivf/init", col(idCol)),
-        col(idCol))
-      .limit(k).collect()
-      .map(_.getSeq[Any](1).map(x => x.asInstanceOf[Number].doubleValue()))
-    var books: Array[Array[Seq[Double]]] =
-      (0 until m).map(s => initRows.map(_.slice(s * sub, (s + 1) * sub))).toArray
-    var it = 0
-    while (it < iters) {
-      // ONE job per iteration (was: a dims× posexplode → groupBy(s,
-      // cid, p) → collect = Generate + exchange + two AQE stage-jobs
-      // per Lloyd pass): the pqCodes assignment kernel (normalize =
-      // false — the frame already holds vn; re-normalizing an L2-unit
-      // vector is NOT a bit-level no-op) and the 1e-9 grid
-      // quantization stay whole-stage codegen in this projection; the
-      // per-partition partial (sums, counts) merge driver-side through
-      // RDD.reduce, whose long additions are order-independent, so the
-      // per-(s, cid, p) means are bitwise the old grouped sums. Empty
-      // cells carry the previous centroid forward.
-      val proj = base.select((graft.plans.NativeFunctions
-          .pqCodes(col("__vn"), books.map(_.toSeq).toSeq, normalize = false)
-          .as("__codes") +:
-        (0 until dims).map(i =>
-          round(element_at(col("__vn"), i + 1).cast("double") * lit(1e9))
-            .cast("long").as(s"__l$i"))): _*)
-      val mS = m
-      val kS = k
-      val subS = sub
-      val (sums, counts) = proj.queryExecution.toRdd.mapPartitions { rows =>
-        val s = Array.ofDim[Long](mS, kS, subS)
-        val n = Array.ofDim[Long](mS, kS)
-        while (rows.hasNext) {
-          val r = rows.next()
-          val codes = r.getArray(0)
-          var si = 0
-          while (si < mS) {
-            val cid = codes.getInt(si)
-            n(si)(cid) += 1L
-            var p = 0
-            while (p < subS) {
-              val colIdx = 1 + si * subS + p
-              if (!r.isNullAt(colIdx)) s(si)(cid)(p) += r.getLong(colIdx)
-              p += 1
-            }
-            si += 1
-          }
-        }
-        Iterator.single((s, n))
-      }.reduce { case ((s1, n1), (s2, n2)) =>
-        var si = 0
-        while (si < mS) {
-          var ci = 0
-          while (ci < kS) {
-            n1(si)(ci) += n2(si)(ci)
-            var p = 0
-            while (p < subS) { s1(si)(ci)(p) += s2(si)(ci)(p); p += 1 }
-            ci += 1
-          }
-          si += 1
-        }
-        (s1, n1)
-      }
-      books = books.zipWithIndex.map { case (book, s) =>
-        book.zipWithIndex.map { case (old, j) =>
-          // same op order as the old SQL mean expression:
-          // sum.cast(double) / (count.cast(double) * 1e9)
-          if (counts(s)(j) == 0L) old
-          else (0 until sub).map(p =>
-            sums(s)(j)(p).toDouble / (counts(s)(j).toDouble * 1e9))
-        }
-      }
-      it += 1
-    }
-    books
+        when(v.isNotNull, pqNormSlice(v, norm(v), 0, dims)).as("__vn"))
+      .localCheckpoint()
+    lloyd(base, m, k, iters, seed, idCol, "__vn")(books =>
+      graft.plans.NativeFunctions.pqCodes(col("__vn"),
+        books.map(_.toSeq).toSeq, normalize = false))
   }
 
   /** PQ encoding: each (normalized) vector → its `m` nearest
@@ -583,20 +526,17 @@ object Similarity {
   }
 
   /** Cell assignment of every corpus vector under the deterministic
-    * k-means — the shared substrate of [[ivfTopK]], [[ensureIvfIndex]]
-    * and [[semDedup]], exposed for cell-balance diagnostics: IVF probe
-    * cost and SemDeDup pair cost both scale with cell sizes, so a
-    * skewed assignment is the first thing to check before either runs
-    * at scale. Returns `(idCol, cid)`. */
+    * k-means — the shared train-then-assign step (`trainAndAssign`) of
+    * [[ivfTopK]], [[ensureIvfIndex]] and [[semDedup]], exposed for
+    * cell-balance diagnostics: IVF probe cost and SemDeDup pair cost
+    * both scale with cell sizes, so a skewed assignment is the first
+    * thing to check before either runs at scale. The assignment reads
+    * the training checkpoint, not the source. Returns `(idCol, cid)`. */
   def assignCells(corpus: DataFrame, nCentroids: Int = 16, iters: Int = 3,
       seed: Long = 42L, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol))
-    val centroids = trainIvfCentroids(c, nCentroids, iters, seed, idCol, vecCol)
-    c.withColumn("cid",
-        element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1))
+      vecCol: String = "embedding"): DataFrame =
+    trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)._2
       .select(col(idCol), col("cid"))
-  }
 
   /**
    * Per-dimension distribution stats — the whitening/normalization
@@ -641,10 +581,8 @@ object Similarity {
   def clusterInertia(corpus: DataFrame, nCentroids: Int = 16,
       iters: Int = 3, seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol))
-    val centroids = trainIvfCentroids(c, nCentroids, iters, seed, idCol, vecCol)
-    val assigned = c.withColumn("cid",
-      element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1))
+    val (centroids, assigned) =
+      trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)
     val d2 = centroids.zipWithIndex.map { case (cent, i) =>
       val centCol = array(cent.map(lit): _*)
       val normSq = cent.map(x => x * x).sum
@@ -714,8 +652,9 @@ object Similarity {
   /**
    * SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
    * the embedding space with the SAME deterministic k-means as the IVF
-   * index ([[trainIvfCentroids]] — one definition, so the ANN index
-   * and the dedup pass can share an assignment), then flag a vector as
+   * index (the shared Lloyd pass `lloyd` and train-then-assign step
+   * `trainAndAssign` — one definition, so the ANN index and the dedup
+   * pass share an assignment), then flag a vector as
    * a semantic duplicate when ANY smaller-id vector in its cluster is
    * within `threshold` cosine. Returns `(idCol, cid, kept)` for every
    * input vector.
@@ -733,9 +672,9 @@ object Similarity {
    * Pairwise comparison happens WITHIN a cluster only — the whole
    * point of SemDeDup: candidates are Σ|cell|² instead of n², and a
    * cell's pairs are an equi-join on its integer cell id, never a
-   * cross join. The assignment frame is localCheckpoint-materialized
-   * so the k-means assignment lineage runs once for both sides of the
-   * self-join (the [[cosinePairs]] argument). SIZE `nCentroids` with
+   * cross join. The assignment is a narrow projection over the
+   * training checkpoint, so both sides of the self-join read
+   * checkpointed blocks, never the source lineage. SIZE `nCentroids` with
    * [[semDedupCentroids]] (|cell| ≈ const target) — the default 16 is
    * bench-scale only; pre-flight a new corpus with [[assignCells]]'s
    * size rollup. Cells larger than `maxCellSize` are excluded from
@@ -748,11 +687,7 @@ object Similarity {
       iters: Int = 3, seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding",
       maxCellSize: Int = MaxCellSize): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol))
-    val centroids = trainIvfCentroids(c, nCentroids, iters, seed, idCol, vecCol)
-    val assigned = c.withColumn("cid",
-      element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1))
-      .localCheckpoint()
+    val assigned = trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)._2
     val paired =
       if (maxCellSize == Int.MaxValue) assigned
       else {
@@ -777,7 +712,7 @@ object Similarity {
    * embedding pipeline runs before trusting ANN/SemDeDup decisions
    * (mis-encoded, corrupt, or off-manifold vectors sit far from every
    * centroid, so they surface at the bottom of their cell's cosine
-   * ranking). Shares [[trainIvfCentroids]]'s deterministic k-means, so
+   * ranking). Shares the train-then-assign step `trainAndAssign`, so
    * the report describes exactly the clustering IVF and SemDeDup use.
    * Returns `(idCol, cid, rank, cos_centroid)`, rank 1 = farthest.
    *
@@ -789,10 +724,8 @@ object Similarity {
       iters: Int = 3, seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(k > 0, "k must be positive")
-    val c = corpus.select(col(idCol), col(vecCol))
-    val centroids = trainIvfCentroids(c, nCentroids, iters, seed, idCol, vecCol)
-    val assigned = c.withColumn("cid",
-      element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1))
+    val (centroids, assigned) =
+      trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)
     val centCos = centroids.zipWithIndex.map { case (cv, i) =>
       when(col("cid") === i, cosine(col(vecCol), array(cv.map(lit): _*)))
     }
@@ -819,14 +752,23 @@ object Similarity {
       .groupBy("cid").agg(count(lit(1)).as("n"))
       .where(col("n") > maxCellSize)
 
+  /**
+   * IVF (inverted-file) ANN: Lloyd-iterated centroids partition the
+   * corpus into `nCentroids` cells; each query probes its `nProbe`
+   * nearest cells and scores only those candidates exactly. The classic
+   * scale path when LSH recall is too blunt: candidate count scales
+   * with corpus/nCentroids × nProbe.
+   *
+   * Centroids are tiny (nCentroids × dims doubles) and are the ONLY
+   * thing collected to the driver — assignment and scoring stay
+   * distributed. Init is deterministic (hash-ranked corpus sample).
+   */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4, iters: Int = 3, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       queryIdCol: String = "query_id"): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol))
-    val centroids = trainIvfCentroids(c, nCentroids, iters, seed, idCol, vecCol)
-    val assigned = c.withColumn("cid",
-      element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1))
+    val (centroids, assigned) =
+      trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)
     probeRanked(assigned, queries, centroids, k, nProbe, idCol, vecCol, queryIdCol)
   }
 
@@ -884,14 +826,12 @@ object Similarity {
       } else {
         clear(centP); clear(assignP)
         import spark.implicits._
-        val centroids = trainIvfCentroids(corpus, nCentroids, iters, seed, idCol, vecCol)
+        val (centroids, assigned) =
+          trainAndAssign(corpus, nCentroids, iters, seed, idCol, vecCol)
         centroids.zipWithIndex.map { case (cv, i) => (i, cv) }.toSeq
           .toDF("cid", "cv")
           .write.mode("overwrite").saveAsTable(centTbl)
-        corpus.select(col(idCol), col(vecCol))
-          .withColumn("cid",
-            element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1))
-          .write.partitionBy("cid").mode("overwrite").saveAsTable(assignTbl)
+        assigned.write.partitionBy("cid").mode("overwrite").saveAsTable(assignTbl)
       }
     }
   }
@@ -954,9 +894,9 @@ object Similarity {
   }
 
   /**
-   * Per-group mean vectors on the 1e-9 integer grid — the
-   * [[trainIvfCentroids]] mean construction (order-independent long
-   * sums; a float `avg` would follow partitioning order) as a
+   * Per-group mean vectors on the 1e-9 integer grid — the mean
+   * construction of the shared Lloyd pass (`lloyd`: order-independent
+   * long sums; a float `avg` would follow partitioning order) as a
    * DataFrame operator: `(groupCol, centroid)` with the mean restored
    * to doubles in dimension order. The corpus "data map" primitive:
    * one centroid per label/source/language summarizes a slice's

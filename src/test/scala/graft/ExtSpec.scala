@@ -2770,6 +2770,59 @@ class ExtSpec extends SparkSpec {
       Similarity.pqTrain(vecs, m = 3, k = 2, dims = 4)
   }
 
+  test("k-means degenerate inputs: null vectors sit out IVF and PQ training, short vectors fail with the index error, empty frames train nothing") {
+    val live = Seq(
+      (0L, Array(1f, 2f, 3f, 4f)), (1L, Array(3f, 0f, 1f, 2f)),
+      (2L, Array(2f, 2f, 0f, 1f)), (4L, Array(0f, 1f, 1f, 1f)))
+    val withNull = (live :+ ((3L, null: Array[Float]))).toDF("vec_id", "embedding")
+    // reference: the 1e-9 grid mean of one group, the null row skipped
+    def gridMean(xs: Seq[Double]): Double =
+      xs.map(x => BigDecimal(x * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP)
+        .toLong).sum.toDouble / (xs.length.toDouble * 1e9)
+    def meanOf(vs: Seq[Seq[Double]]): Seq[Double] =
+      vs.head.indices.map(p => gridMean(vs.map(_(p))))
+    val raw = live.map(_._2.toSeq.map(_.toDouble))
+    // one cell: the centroid is the mean of every non-null vector
+    Similarity.trainIvfCentroids(withNull, nCentroids = 1, iters = 2)
+      .toSeq shouldBe Seq(meanOf(raw))
+    // PQ (m = 2, k = 1): each codebook is the mean of the normalized
+    // subvectors, normalized by the same left-fold norm as the engine
+    val normed = raw.map { v =>
+      val nrm = math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
+      v.map(_ / nrm)
+    }
+    Similarity.pqTrain(withNull, m = 2, k = 1, iters = 2, dims = 4)
+      .map(_.toSeq).toSeq shouldBe
+      Seq(Seq(meanOf(normed.map(_.take(2)))), Seq(meanOf(normed.map(_.drop(2)))))
+    // assignment still reports every input row; the null one lands in
+    // cell 0 (all its centroid distances are null and tie to cid 0)
+    val cells = Similarity.assignCells(withNull, nCentroids = 2).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    cells.keySet shouldBe Set(0L, 1L, 2L, 3L, 4L)
+    cells(3L) shouldBe 0
+    // a vector shorter than dims fails with Spark's array index error —
+    // never an NPE inside a task, never a silently diluted mean
+    val short = (live :+ ((5L, Array(1f, 1f, 1f)))).toDF("vec_id", "embedding")
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    Seq[() => Any](
+      () => Similarity.trainIvfCentroids(short, nCentroids = 2, iters = 1),
+      () => Similarity.pqTrain(short, m = 2, k = 1, iters = 1, dims = 4)
+    ).foreach { train =>
+      val chain = causes(intercept[Exception](train()))
+      chain.exists(_.isInstanceOf[NullPointerException]) shouldBe false
+      chain.exists(c => String.valueOf(c.getMessage)
+        .contains("INVALID_ARRAY_INDEX")) shouldBe true
+    }
+    // empty frames: IVF has no centroids and assigns no row, PQ has m
+    // empty codebooks
+    val none = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    Similarity.trainIvfCentroids(none).length shouldBe 0
+    Similarity.assignCells(none).count() shouldBe 0L
+    Similarity.pqTrain(none, m = 2, k = 2, dims = 4)
+      .map(_.length).toSeq shouldBe Seq(0, 0)
+  }
+
   test("urlTrapFlags: thresholds are strict, 2x repeats are not loops, pathless URLs pass") {
     val urls = Seq(
       (0L, "h.com/a/b"),                        // normal

@@ -755,6 +755,13 @@ class ScaleSpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().toSeq shouldBe retrain.collect().toSeq
   }
 
+  test("assignCells reuses the training checkpoint: no second scan of the source") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val cells = Similarity.assignCells(emb)
+    cells.count() shouldBe emb.count()
+    cells.queryExecution.executedPlan.toString should not include "FileScan"
+  }
+
   test("persisted PQ index: probe matches encode-per-query, no Lloyd or encode at probe time") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.where($"vec_id" < 5)
