@@ -4280,7 +4280,7 @@ object SparkEntry {
     // is resolved once into a _SUCCESS-guarded warehouse table
     // (Dedup.ensureClusters — the x_sim_ivf_probe pattern) and the
     // report is two cheap aggregations over the persisted frame; no
-    // LSH/verify/pointer-doubling in the probe plan (ScaleSpec-pinned).
+    // LSH/verify/contraction in the probe plan (ScaleSpec-pinned).
     // Identical output to resolving inline, so the oracle is unchanged.
     "x_dedup_sizes" -> ((s, dir) => {
       Dedup.ensureClusters(s, jaccardClustersTableName(dir)) {

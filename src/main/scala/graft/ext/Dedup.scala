@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -933,7 +934,6 @@ object Dedup {
       pruneRareWindows: Boolean = true,
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
     require(windowTokens > 0, "windowTokens must be positive")
-    import org.apache.spark.sql.expressions.Window
     val eligible = docs.where(size(tokens(col(textCol))) >= windowTokens)
     val wins = positionalGramRows(eligible, idCol, textCol, windowTokens)
       .select(col(idCol), col("pos"), xxhash64(col("__g")).as("w"))
@@ -1002,7 +1002,6 @@ object Dedup {
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
     require(minRunTokens >= windowTokens,
       "minRunTokens must be at least windowTokens (shorter runs are invisible)")
-    import org.apache.spark.sql.expressions.Window
     val eligible = docs.where(size(tokens(col(textCol))) >= windowTokens)
     val wins = positionalGramRows(eligible, idCol, textCol, windowTokens)
       .select(col(idCol), col("pos"), xxhash64(col("__g")).as("w"))
@@ -1087,7 +1086,6 @@ object Dedup {
   def selfRepeatRuns(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", windowTokens: Int = 8): DataFrame = {
     require(windowTokens > 0, "windowTokens must be positive")
-    import org.apache.spark.sql.expressions.Window
     val eligible = docs.where(size(tokens(col(textCol))) >= windowTokens)
     val wins = positionalGramRows(eligible, idCol, textCol, windowTokens)
       .select(col(idCol), col("pos"), xxhash64(col("__g")).as("w"))
@@ -1169,7 +1167,6 @@ object Dedup {
   private[graft] def winnowFingerprintsWindowed(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", gramN: Int = 3,
       window: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val hashed = positionalGramRows(docs, idCol, textCol, gramN)
       .select(col(idCol), col("pos"), md5Key(col("__g")).as("__h"))
     val wcnt = Window.partitionBy(col(idCol))
@@ -1370,8 +1367,7 @@ object Dedup {
     val membership = src
       .select(col(idCol), xxhash64(col(textCol)).as("__dg"))
       .withColumn("__grp",
-        min(col(idCol)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__dg"))))
+        min(col(idCol)).over(Window.partitionBy(col("__dg"))))
       .select(col(idCol), col("__grp"))
       .localCheckpoint()
     val exactEdges = membership.where(col(idCol) =!= col("__grp"))
@@ -1409,111 +1405,29 @@ object Dedup {
    * Duplicate-cluster resolution: given near-dup pairs (a, b), assign
    * every document its cluster representative (the minimum doc id
    * reachable through pair edges) — the "keep one copy" step of a
-   * dedup pipeline.
+   * dedup pipeline. Emits `(id, rep)` for every id that appears in a
+   * pair; an id absent from the output had no near-dup and is its own
+   * representative (the [[applyDedup]] / split-by-cluster convention).
+   * A pair with a null endpoint and a self-pair `(x, x)` name no edge,
+   * so they add no row; ids of any orderable type resolve to the
+   * minimum id (the min string for string ids).
    *
-   * Implemented as iterative min-label propagation over the edge frame
-   * (each round: label = min(own, neighbors')) combined with pointer
-   * doubling (rep <- rep's rep), which shortcuts chains so convergence
-   * is O(log diameter) rounds — the same asymptotics as the
-   * large-star/small-star alternation, with one edge join plus one
-   * (much smaller) label self-join per round. Near-dup graphs are
-   * overwhelmingly tiny cliques (diameter 1-2), so most inputs converge
-   * in 2 rounds; maxRounds=16 covers diameters up to 2^16. Lineage is
-   * truncated per round so plans stay flat. If the budget is exhausted
-   * without convergence this THROWS rather than silently returning
-   * wrong representatives (the oracle compares transitive closure).
+   * Components come from [[LinkGraph.contractComponents]], the
+   * engine's one connected-components loop (shared with
+   * [[LinkGraph.hostComponents]]): hash-ordered min contraction,
+   * expected O(log n) rounds on any component shape — a 400-id chain
+   * in shuffled id order included — over a working edge set that
+   * shrinks every round. One window per component root then names the
+   * representative. If `maxRounds` is exhausted without convergence
+   * this THROWS rather than silently returning wrong representatives
+   * (the oracle compares transitive closure).
    */
   def duplicateClusters(pairs: DataFrame, aCol: String = "a",
-      bCol: String = "b", maxRounds: Int = 16): DataFrame = {
-    // pairs is typically the output of an expensive verification join;
-    // materialize its narrow (a, b) projection ONCE so the two-sided
-    // union below reads a checkpoint instead of evaluating the whole
-    // upstream pipeline twice.
-    val p = pairs.select(col(aCol).as("a"), col(bCol).as("b")).localCheckpoint()
-    val parts = LinkGraph.loopPartitions(p, 2L * p.count())
-    // Both edge directions, symmetrized once and checkpointed
-    // PRE-PARTITIONED and PRE-SORTED on `y` — the key of every round's
-    // neighbor join, so the loop never re-shuffles or re-sorts the
-    // edge set (guide §2.4; the hostRank loop-invariant posture, same
-    // explicit scale-adaptive partition count so AQE cannot coalesce
-    // the recorded partitioning away). No distinct(): pair inputs are
-    // already deduplicated by their producers, and even duplicate
-    // edges cannot change a min-aggregation — a distinct here would
-    // only add a full shuffle of the edge set per call.
-    val edges = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
-      p.select(col("a").as("x"), col("b").as("y"))
-        .union(p.select(col("b").as("x"), col("a").as("y"))),
-      Seq("y"), parts)
-    // Convergence check without an extra join: per-id labels only ever
-    // decrease, so the total label sum strictly decreases every round
-    // until the fixpoint — equal sums ⇔ converged. (An edge-alignment
-    // check — "every edge joins equal reps" — was tried and measured
-    // SLOWER: two extra edge-sized joins per round outweigh the one
-    // no-change round the sum test needs to observe.) For long ids —
-    // every engine caller — the sum FOLDS INTO the per-round label
-    // checkpoint's materialization job (exact BigInt fold, bitwise the
-    // decimal aggregate it replaces), so no separate aggregation job
-    // runs; other id types keep the decimal aggregate.
-    val longIds = p.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    def labelSum(df: DataFrame): BigInt =
-      BigInt(df.agg(sum(col("rep").cast("decimal(38,0)"))).head()
-        .getDecimal(0).toBigInteger)
-    // Labels ride the bridge too, keyed on `id` with the SAME partition
-    // count as the edges: every round's neighbor join then plans
-    // NEITHER an exchange NOR a sort on either side (edges declared
-    // hash(y)/sorted, labels hash(id→y via alias)/sorted). The merge
-    // hints pin the scale-correct strategy — at corpus scale the label
-    // frame is as big as the pair graph's node set, so broadcasting it
-    // (what AQE picks from bench-sized stats) is wrong at 100 TB and
-    // locally costs one broadcast-materialization job per round.
-    def checkpointLabels(df: DataFrame): (DataFrame, BigInt) =
-      if (longIds) {
-        val (out, _, s) = org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointHashedWithLongSum(df, Seq("id"), parts, "rep")
-        (out, s)
-      } else {
-        val out = org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointHashed(df, Seq("id"), parts)
-        (out, labelSum(out))
-      }
-    // Seed labels with the distance-1 minimum (min of self and direct
-    // neighbors) straight from the edge scan — one aggregation replaces
-    // the first propagation round. Both edge directions are present, so
-    // every node appears as `x`.
-    var (labels, prevSum) = checkpointLabels(
-      edges.groupBy(col("x")).agg(min(col("y")).as("mn"))
-        .select(col("x").as("id"), least(col("x"), col("mn")).as("rep")))
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      val viaNeighbor = edges
-        .join(labels.withColumnRenamed("id", "y").hint("merge"), "y")
-        .select(col("x").as("id"), col("rep"))
-      val merged = labels.select("id", "rep").union(viaNeighbor)
-        .groupBy("id").agg(min("rep").as("rep"))
-      // pointer doubling: follow the representative's representative.
-      // Every rep IS a node id, so the self-join resolves one extra hop
-      // per round — chains collapse exponentially instead of linearly.
-      // (The two merged legs share one exchange via ReusedExchange; the
-      // right leg's alias keeps hash(id→rep), so only the left leg
-      // re-partitions.)
-      val next = merged
-        .join(merged.select(col("id").as("rep"), col("rep").as("rep2"))
-          .hint("merge"), Seq("rep"), "left")
-        .select(col("id"), least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"))
-      val (nextLabels, nextSum) = checkpointLabels(next)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      labels = nextLabels
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"duplicateClusters did not converge within $maxRounds rounds " +
-          "(component diameter > 2^rounds); raise maxRounds")
-    labels
-  }
+      bCol: String = "b", maxRounds: Int = 50): DataFrame =
+    LinkGraph.contractComponents(
+        pairs.select(col(aCol).as("a"), col(bCol).as("b")), maxRounds)
+      .select(col("id"),
+        min(col("id")).over(Window.partitionBy("root")).as("rep"))
 
   /**
    * Apply a dedup decision: drop every clustered document except its

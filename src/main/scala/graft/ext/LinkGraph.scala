@@ -148,7 +148,52 @@ object LinkGraph {
   def hostRank(edges: DataFrame, srcCol: String = "src_host",
       dstCol: String = "dst_host", iterations: Int = 10,
       dampingNum: Long = 85L, dampingDen: Long = 100L,
-      checkpointEvery: Int = 3, weightCol: String = ""): DataFrame = {
+      checkpointEvery: Int = 3, weightCol: String = ""): DataFrame =
+    powerIteration(edges, srcCol, dstCol, weightCol, None, iterations,
+      dampingNum, dampingDen, checkpointEvery)
+
+  /**
+   * SEEDED host rank (the TrustRank shape, Gyöngyi/Garcia-Molina/
+   * Pedersen 2004): the same damped power iteration as [[hostRank]]
+   * but with ALL teleport mass concentrated on a curated seed set —
+   * {{{
+   * rank'(h) = seed(h)·base + (dampingNum · Σ contrib) div dampingDen
+   * base     = ((dampingDen − dampingNum) · RankScale div dampingDen) div nSeeds
+   * }}}
+   * — so trust flows OUTWARD from the seeds along links: a host
+   * unreachable from every seed settles at exactly 0 (not the uniform
+   * teleport floor), which is precisely what makes the seeded variant
+   * the standard spam-demotion / quality-propagation prior for corpus
+   * curation (rank a crawl by proximity to a vetted allowlist instead
+   * of raw popularity). Same INTEGER fixed-point arithmetic, same
+   * 8-byte-hash iteration shape, same fixed-K reproducibility-and-
+   * oracle rationale as [[hostRank]] — literally the same loop, with
+   * the teleport flag set on seeds only (seeding every host reproduces
+   * [[hostRank]] bit for bit, spec-pinned). Seeds that never appear in
+   * the edge set are ignored (they carry no links to propagate over);
+   * requires at least one seed present. Initial rank is `RankScale
+   * div nSeeds` on seeds, 0 elsewhere.
+   */
+  def hostRankSeeded(edges: DataFrame, seeds: DataFrame,
+      srcCol: String = "src_host", dstCol: String = "dst_host",
+      seedCol: String = "host", iterations: Int = 10,
+      dampingNum: Long = 85L, dampingDen: Long = 100L,
+      checkpointEvery: Int = 3): DataFrame =
+    powerIteration(edges, srcCol, dstCol, "",
+      Some(seeds.select(col(seedCol).as("host"))), iterations,
+      dampingNum, dampingDen, checkpointEvery)
+
+  /** The one power iteration behind [[hostRank]] and
+    * [[hostRankSeeded]]. Every host carries a teleport flag `s` — 1 on
+    * every host when `seeds` is None, 1 on seed hosts only otherwise —
+    * and `ns` (the flagged-host count) divides the teleport mass:
+    * unseeded, `s · base = base` and `ns = n`, so both rankings run one
+    * recurrence. Unweighted edges carry `w = 1`, where
+    * `(rank div totw) · w` is exactly `rank div outdeg`. */
+  private def powerIteration(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: String, seeds: Option[DataFrame],
+      iterations: Int, dampingNum: Long, dampingDen: Long,
+      checkpointEvery: Int): DataFrame = {
     require(checkpointEvery > 0, "checkpointEvery must be positive")
     require(iterations >= 0, "iterations must be non-negative")
     require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
@@ -178,23 +223,35 @@ object LinkGraph {
     // repartition(p, dst_h) feeding the groupBy, whose output
     // co-partitions with dict for the next join. K rounds paid ~3
     // exchanges each before; now K + 3 one-time repartitions total.
-    val p = loopPartitions(edges, e0.count())
+    val p = loopPartitions(e0, e0.count())
+    val hosts = e0.select(col("__s").as("host"))
+      .union(e0.select(col("__d").as("host")))
+      .distinct()
+    // the teleport flag: a literal 1 unseeded (Spark folds it away, so
+    // hostRank plans exactly the uniform recurrence), a stored column
+    // when seeded
+    val (flagged, s) = seeds match {
+      case None => (hosts, lit(1L))
+      case Some(sd) =>
+        (hosts.join(sd.distinct().withColumn("__seed", lit(1L)), Seq("host"), "left")
+          .select(col("host"), coalesce(col("__seed"), lit(0L)).as("s")), col("s"))
+    }
     val dict = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
-      e0.select(col("__s").as("host"))
-        .union(e0.select(col("__d").as("host")))
-        .distinct()
-        .select(xxhash64(col("host")).as("h"), col("host")),
-      Seq("h"), p)
-    val n = dict.count() // hosts, not pages — the bounded vertex set
-    if (n == 0L)
+      flagged.select(xxhash64(col("host")).as("h"), col("*")), Seq("h"), p)
+    // hosts, not pages — the bounded vertex set; unseeded, every host
+    // is flagged, so this one count is n
+    val ns = dict.where(s === 1L).count()
+    if (ns == 0L) {
+      require(seeds.isEmpty, "no seed host appears in the edge set")
       return dict.select(col("host"), lit(0L).as("rank"))
+    }
     val eh = e0.select(xxhash64(col("__s")).as("src_h"),
       xxhash64(col("__d")).as("dst_h"), col("__w").as("w"))
     val deg = eh.groupBy("src_h").agg(sum(col("w")).as("totw"))
     val edgesDeg = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
       eh.join(deg, "src_h"), Seq("src_h"), p)
-    val base = ((dampingDen - dampingNum) * RankScale / dampingDen) / n
-    var pr = dict.select(col("h"), lit(RankScale / n).as("rank"))
+    val base = ((dampingDen - dampingNum) * RankScale / dampingDen) / ns
+    var pr = dict.select(col("h"), (s * lit(RankScale / ns)).as("rank"))
     var k = 0
     while (k < iterations) {
       val contrib = pr.join(edgesDeg, pr("h") === edgesDeg("src_h"))
@@ -206,86 +263,7 @@ object LinkGraph {
       // same rows)
       val inc = contrib.repartition(p, col("dst_h"))
         .groupBy("dst_h").agg(sum(col("c")).as("inc"))
-      pr = dict.select(col("h"))
-        .join(inc, col("h") === col("dst_h"), "left")
-        .select(col("h"),
-          expr(s"${base}L + (${dampingNum}L * coalesce(inc, 0L))" +
-            s" div ${dampingDen}L").as("rank"))
-      k += 1
-      if (k % checkpointEvery == 0 && k < iterations)
-        // periodic lineage truncation, layout-recording so the next
-        // round's rank×edges join stays exchange- and sort-free
-        pr = org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointHashed(pr, Seq("h"), p)
-    }
-    pr.join(dict, "h").select(col("host"), col("rank"))
-  }
-
-  /**
-   * SEEDED host rank (the TrustRank shape, Gyöngyi/Garcia-Molina/
-   * Pedersen 2004): the same damped power iteration as [[hostRank]]
-   * but with ALL teleport mass concentrated on a curated seed set —
-   * {{{
-   * rank'(h) = seed(h)·base + (dampingNum · Σ contrib) div dampingDen
-   * base     = ((dampingDen − dampingNum) · RankScale div dampingDen) div nSeeds
-   * }}}
-   * — so trust flows OUTWARD from the seeds along links: a host
-   * unreachable from every seed settles at exactly 0 (not the uniform
-   * teleport floor), which is precisely what makes the seeded variant
-   * the standard spam-demotion / quality-propagation prior for corpus
-   * curation (rank a crawl by proximity to a vetted allowlist instead
-   * of raw popularity). Same INTEGER fixed-point arithmetic, same
-   * 8-byte-hash iteration shape, same fixed-K reproducibility-and-
-   * oracle rationale as [[hostRank]]. Seeds that never appear in the
-   * edge set are ignored (they carry no links to propagate over);
-   * requires at least one seed present. Initial rank is `RankScale
-   * div nSeeds` on seeds, 0 elsewhere.
-   */
-  def hostRankSeeded(edges: DataFrame, seeds: DataFrame,
-      srcCol: String = "src_host", dstCol: String = "dst_host",
-      seedCol: String = "host", iterations: Int = 10,
-      dampingNum: Long = 85L, dampingDen: Long = 100L,
-      checkpointEvery: Int = 3): DataFrame = {
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    require(iterations >= 0, "iterations must be non-negative")
-    require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
-      "damping must be a fraction in [0, 1]")
-    val e0 = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .where(col(srcCol) =!= col(dstCol))
-      .distinct()
-      .localCheckpoint()
-    val seedSet = seeds.select(col(seedCol).as("host")).distinct()
-      .withColumn("__seed", lit(1L))
-    // loop-invariant frames pre-partitioned (explicit scale-adaptive
-    // count) and pre-sorted on their per-round join keys — the
-    // hostRank posture: one shuffle per round, placed so its output
-    // co-partitions with dict
-    val p = loopPartitions(edges, e0.count())
-    val dict = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
-      e0.select(col("__s").as("host"))
-        .union(e0.select(col("__d").as("host")))
-        .distinct()
-        .join(seedSet, Seq("host"), "left")
-        .select(xxhash64(col("host")).as("h"), col("host"),
-          coalesce(col("__seed"), lit(0L)).as("s")),
-      Seq("h"), p)
-    val ns = dict.where(col("s") === 1L).count() // seeds IN the graph
-    require(ns > 0L, "no seed host appears in the edge set")
-    val eh = e0.select(xxhash64(col("__s")).as("src_h"),
-      xxhash64(col("__d")).as("dst_h"))
-    val deg = eh.groupBy("src_h").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
-      eh.join(deg, "src_h"), Seq("src_h"), p)
-    val base = ((dampingDen - dampingNum) * RankScale / dampingDen) / ns
-    var pr = dict.select(col("h"),
-      (col("s") * lit(RankScale / ns)).as("rank"))
-    var k = 0
-    while (k < iterations) {
-      val contrib = pr.join(edgesDeg, pr("h") === edgesDeg("src_h"))
-        .select(col("dst_h"), expr("(rank div outdeg)").as("c"))
-      val inc = contrib.repartition(p, col("dst_h"))
-        .groupBy("dst_h").agg(sum(col("c")).as("inc"))
-      pr = dict.select(col("h"), col("s"))
+      pr = dict.select(col("h"), s.as("s"))
         .join(inc, col("h") === col("dst_h"), "left")
         .select(col("h"),
           expr(s"s * ${base}L + (${dampingNum}L * coalesce(inc, 0L))" +
@@ -313,128 +291,147 @@ object LinkGraph {
    * from pure reachability with no hash in sight) and `comp_size`
    * counts the component's hosts.
    *
-   * Algorithm: hash-min CONTRACTION. Hosts iterate as 8-byte
-   * `xxhash64` keys (hash-identity convention; text joins back once
-   * at the end). Each round, over the CONTRACTED label graph:
-   * {{{
-   * m(v)    = min(v, min over neighbors of v)      // local min
-   * comp(h) = m(comp(h))                           // compose mapping
-   * E'      = { (m(a), m(b)) : (a,b) ∈ E, m(a) ≠ m(b) } distinct
-   * }}}
-   * — every vertex with a smaller neighbor merges into it and LEAVES
-   * the edge set, so the working graph shrinks geometrically
-   * (expected O(log n) rounds under hash-randomized labels — xxhash64
-   * order is independent of host names, so adversarial monotone
-   * chains don't exist in practice; `maxIterations` is the runaway
-   * bound, not a precision knob). Contrast with one-hop label
-   * propagation, which pays O(diameter) rounds over the FULL edge set
-   * every round; here later rounds ride edge frames orders of
-   * magnitude smaller. The component's minimum hash can never merge
-   * away (it is its own local min), so when the edge set empties,
-   * every component has contracted onto exactly its min-hash vertex —
-   * the exact fixpoint, reached when the driver-side edge count (the
-   * accepted `resolveRedirects` action posture) hits zero. Per-round
-   * frames are read twice (mapping composition + edge relabel) —
-   * `localCheckpoint` per round, the twice-read cadence, unlike
-   * `hostRank`'s single-consumer chain.
-   *
-   * All iteration exchanges key on 8-byte hashes; `min` is exactly
-   * associative/commutative, so the fixpoint is bit-reproducible
-   * across partitionings and retries (no fixed-point arithmetic even
-   * needed — easier than [[hostRank]]).
-   *
-   * Failure contract: hitting `maxIterations` with edges remaining
-   * THROWS (the `require` below) rather than returning a partial
-   * partition — components define downstream quotas and dedup keys,
-   * so a silently-unconverged answer is corruption, not degradation.
-   * Worst case is O(n) rounds only under an adversarial
-   * monotone-hash ordering, which xxhash64 of host names precludes
-   * in practice; the default bound of 50 covers graphs astronomically
-   * past any real host count at the expected O(log n).
+   * Hosts enter [[contractComponents]] (the engine's one
+   * connected-components loop, shared with
+   * [[Dedup.duplicateClusters]]) as 8-byte `xxhash64` keys — the
+   * hash-identity convention, so no host text rides an iterated
+   * shuffle. The kernel's `(id, root)` answer comes back as `(h, lbl)`
+   * and host text joins back once at the end, where one window per
+   * root label takes the min name and the size. Self-loops never
+   * enter the vertex set. `maxIterations` is the kernel's runaway
+   * bound: hitting it THROWS rather than returning a partial partition
+   * — components define downstream quotas and dedup keys, so a
+   * silently-unconverged answer is corruption, not degradation.
    */
   def hostComponents(edges: DataFrame, srcCol: String = "src_host",
       dstCol: String = "dst_host", maxIterations: Int = 50): DataFrame = {
-    require(maxIterations > 0, "maxIterations must be positive")
+    // read twice (the dictionary and the kernel's hashed pairs):
+    // checkpoint so the upstream edge derivation runs once
     val e0 = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .where(col(srcCol) =!= col(dstCol))
-      .distinct()
+      .where(col("__s") =!= col("__d"))
       .localCheckpoint()
-    // dict pre-partitioned on h (hostRank rationale, explicit
-    // scale-adaptive count): the initial comp projection aliases h as
-    // lbl, so round 1's composition join and the final name join are
-    // exchange-free
-    val nDirected = e0.count()
-    val dict = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
-      e0.select(col("__s").as("host"))
-        .union(e0.select(col("__d").as("host")))
-        .distinct()
-        .select(xxhash64(col("host")).as("h"), col("host")),
-      Seq("h"), loopPartitions(edges, nDirected))
-    val eh = e0.select(xxhash64(col("__s")).as("a"), xxhash64(col("__d")).as("b"))
-    // undirected: symmetrize once; hash-keyed from here on (and the
-    // relabel step preserves symmetry, so it stays symmetrized).
-    // Dedup rides the hash(a) layout instead of a hash(a, b) distinct:
-    // hash(a) clusters every (a, b) duplicate into one partition, so
-    // dropDuplicates needs no further exchange and the checkpointed
-    // frame comes out partitioned on `a` — which is exactly the key of
-    // next round's local-min groupBy AND the first relabel join, making
-    // both exchange-free (guide §2.4; same fusion per round below).
-    // Partition counts are explicit and re-derived per round from the
-    // edge count the convergence check already takes — contraction
-    // shrinks the frame geometrically, so later rounds ride fewer,
-    // still-full partitions instead of the initial spread.
-    var (e, remaining) = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointHashedWithCount(
-        eh.union(eh.select(col("b").as("a"), col("a").as("b"))),
-        Seq("a"), loopPartitions(edges, 2L * nDirected),
-        dedupAfter = Seq("a", "b"))
-    var comp = dict.select(col("h"), col("h").as("lbl"))
+    // hash → name dictionary, deduplicated on the 8-byte hash (min keeps
+    // it deterministic), so its one exchange co-partitions with the
+    // name join below
+    val dict = e0.select(col("__s").as("host")).union(e0.select(col("__d").as("host")))
+      .select(xxhash64(col("host")).as("h"), col("host"))
+      .groupBy("h").agg(min(col("host")).as("host"))
+    val lbl = contractComponents(
+        e0.select(xxhash64(col("__s")).as("a"), xxhash64(col("__d")).as("b")),
+        maxIterations)
+      .select(col("id").as("h"), col("root").as("lbl"))
+    // hash label → canonical NAME label: the component's min host name
+    val byLbl = Window.partitionBy("lbl")
+    lbl.join(dict, "h").select(col("host"),
+      min(col("host")).over(byLbl).as("component"),
+      count(lit(1)).over(byLbl).as("comp_size"))
+  }
+
+  /**
+   * Connected components of an undirected pair graph — the engine's
+   * ONE connected-components loop, behind [[hostComponents]] and
+   * [[Dedup.duplicateClusters]]. `pairs` carries endpoint columns `a`
+   * and `b` (any orderable type; both coerce to one type first). A pair
+   * with a null endpoint, or with `a = b`, names no edge and adds no
+   * vertex; duplicate pairs and either direction are equivalent.
+   * Emits `(id, root)` for every vertex, where `root` is the id of the
+   * component's minimum vertex in `(xxhash64(id), id)` order — a
+   * label, not a canonical name: callers derive their own canonical
+   * id per root (min id, min host name).
+   *
+   * Algorithm: hash-min CONTRACTION. Each round, over the CONTRACTED
+   * label graph:
+   * {{{
+   * m(v)    = min(v, min over neighbors of v)      // local min
+   * comp(x) = m(comp(x))                           // compose mapping
+   * E'      = { (m(a), m(b)) : (a,b) ∈ E, m(a) ≠ m(b) } distinct
+   * }}}
+   * — every vertex with a smaller neighbor merges into it and LEAVES
+   * the edge set, so the working graph shrinks geometrically. The
+   * hash-first order is independent of the ids' own order, so a chain
+   * of consecutive (or otherwise monotone) ids contracts in expected
+   * O(log n) rounds rather than the O(n) a raw-id order would pay;
+   * the id tie-break makes the order total, so a hash collision can
+   * never merge two components. The component's minimum vertex can
+   * never merge away (it is its own local min), so when the edge set
+   * empties every component has contracted onto exactly that vertex —
+   * the exact fixpoint, reached when the edge count the per-round
+   * checkpoint already takes hits zero (no separate convergence job).
+   * Later rounds ride edge frames orders of magnitude smaller than the
+   * input, unlike one-hop label propagation over the full edge set.
+   *
+   * Layout: the symmetrized edge frame is checkpointed hash(a)-laid
+   * with the `(a, b)` dedup riding that layout (the bridge's
+   * `dedupAfter`), which is exactly the key of the next round's
+   * local-min groupBy and first relabel join — both exchange-free.
+   * Each round's new edge frame re-derives its partition count from the
+   * remaining edge count ([[loopPartitions]]); the first checkpoint,
+   * taken before any count exists, uses the session's shuffle-partition
+   * ceiling. The vertex → label map is a single-consumer chain of
+   * narrow joins against the checkpointed `m`s, truncated every 8
+   * rounds.
+   *
+   * All iteration exchanges key on the `(hash, id)` vertex structs; `min` is exactly associative/commutative, so the answer is
+   * bit-reproducible across partitionings and retries. Hitting
+   * `maxRounds` with edges remaining THROWS rather than returning a
+   * partial partition; the default 50 sits far above the expected
+   * O(log n) rounds.
+   */
+  private[ext] def contractComponents(pairs: DataFrame,
+      maxRounds: Int = 50): DataFrame = {
+    require(maxRounds > 0, "maxRounds must be positive")
+    val bridge = org.apache.spark.sql.graft.CheckpointBridge
+    // `array` coerces both endpoints to one type BEFORE hashing (an int
+    // 5 and a long 5 must be one vertex); both directions come from one
+    // read of `pairs`, which is typically an expensive verification join
+    def vertex(c: Column): Column = struct(xxhash64(c).as("k"), c.as("v"))
+    val (x, y) = (col("__p")(0), col("__p")(1))
+    val sym = pairs.select(array(col("a"), col("b")).as("__p"))
+      .where(x =!= y)
+      .select(explode(array(
+        struct(vertex(x).as("a"), vertex(y).as("b")),
+        struct(vertex(y).as("a"), vertex(x).as("b")))).as("__e"))
+      .select(col("__e.a").as("a"), col("__e.b").as("b"))
+    // `parts` is the count e is laid out with: m takes it too, so the
+    // local-min groupBy and the first relabel join stay exchange-free
+    var parts = sym.sparkSession.sessionState.conf.numShufflePartitions
+    var (e, remaining) = bridge.localCheckpointHashedWithCount(sym, Seq("a"),
+      parts, dedupAfter = Seq("a", "b"))
+    // kept only when e is empty (then so is this); round 1 replaces it
+    // with its local-min map, which covers every vertex (e is symmetric)
+    var comp = e.select(col("a").as("__id"), col("a").as("__lbl"))
     var k = 0
-    while (remaining > 0L && k < maxIterations) {
-      // local min per still-live label vertex (symmetric e: one side
-      // suffices); vertices already contracted away keep their label.
-      // e is hash(a)-partitioned, so the groupBy plans no exchange and
-      // m's bridge checkpoint re-records the hash(__v) layout for its
-      // THREE consumers (composition join + both relabel joins).
-      val m = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashed(
+    while (remaining > 0L && k < maxRounds) {
+      // local min per live label vertex (symmetric e: one side
+      // suffices); e is hash(a)-laid, so the groupBy plans no exchange,
+      // and m's checkpoint records hash(__v) for its three consumers
+      val m = bridge.localCheckpointHashed(
         e.groupBy("a").agg(min(col("b")).as("__mb"))
           .select(col("a").as("__v"), least(col("a"), col("__mb")).as("__m")),
-        Seq("__v"), loopPartitions(edges, remaining))
-      // comp is a SINGLE-consumer chain (next round's composition join;
-      // the final name join) — no checkpoint per round: each round
-      // nests one narrow join against an already-checkpointed m, and
-      // the whole chain evaluates once at the end (the hostRank
-      // checkpointEvery rationale); periodic truncation below keeps
-      // the plan shallow if contraction ever runs long.
-      comp = comp.join(m, comp("lbl") === col("__v"), "left")
-        .select(col("h"), coalesce(col("__m"), col("lbl")).as("lbl"))
+        Seq("__v"), parts)
+      comp =
+        if (k == 0) m.select(col("__v").as("__id"), col("__m").as("__lbl"))
+        else comp.join(m, col("__lbl") === col("__v"), "left")
+          .select(col("__id"), coalesce(col("__m"), col("__lbl")).as("__lbl"))
       if ((k + 1) % 8 == 0) comp = comp.localCheckpoint()
-      // the bridge's eager materialization IS the convergence count —
-      // no separate count job per round
-      val (e2, r2) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointHashedWithCount(
-          e.join(m.select(col("__v").as("__va"), col("__m").as("__ma")),
-              col("a") === col("__va"))
-            .join(m.select(col("__v").as("__vb"), col("__m").as("__mb2")),
-              col("b") === col("__vb"))
-            .select(col("__ma").as("a"), col("__mb2").as("b"))
-            .where(col("a") =!= col("b")),
-          Seq("a"), loopPartitions(edges, remaining),
-          dedupAfter = Seq("a", "b"))
+      parts = loopPartitions(e, remaining)
+      val (e2, r2) = bridge.localCheckpointHashedWithCount(
+        e.join(m.select(col("__v").as("__va"), col("__m").as("__ma")),
+            col("a") === col("__va"))
+          .join(m.select(col("__v").as("__vb"), col("__m").as("__mb2")),
+            col("b") === col("__vb"))
+          .select(col("__ma").as("a"), col("__mb2").as("b"))
+          .where(col("a") =!= col("b")),
+        Seq("a"), parts, dedupAfter = Seq("a", "b"))
       e = e2
       remaining = r2
       k += 1
     }
-    require(remaining == 0L,
-      s"hostComponents did not converge in $maxIterations rounds " +
-        s"($remaining contracted edges remain)")
-    val lbl = comp
-    // hash label → canonical NAME label: the component's min host name
-    val named = lbl.join(dict, "h")
-    val comps = named.groupBy("lbl")
-      .agg(min(col("host")).as("component"), count(lit(1)).as("comp_size"))
-    named.join(comps, "lbl")
-      .select(col("host"), col("component"), col("comp_size"))
+    if (remaining > 0L)
+      throw new IllegalStateException(
+        s"connected components did not converge in $maxRounds rounds " +
+          s"($remaining contracted edges remain); raise the round bound")
+    comp.select(col("__id.v").as("id"), col("__lbl.v").as("root"))
   }
 
   /**

@@ -513,8 +513,8 @@ object Warc {
    * refetch nor separately count a page it reaches via redirects).
    *
    * Pointer doubling over the FUNCTIONAL redirect map (one Location
-   * per fetched URL), the pattern proven in `Dedup.duplicateClusters`:
-   * each round composes the map with itself (`dst <- map(dst)`,
+   * per fetched URL, so every chain has exactly one direction to
+   * follow): each round composes the map with itself (`dst <- map(dst)`,
    * accumulating hop counts), so a chain of length L resolves in
    * ceil(log2 L) rounds of narrow joins. URLs enter the rounds as
    * 8-byte `xxhash64` keys against a distinct `(hash, url)`

@@ -45,36 +45,15 @@ object CheckpointBridge {
       dedupAfter: Seq[String] = Nil): DataFrame =
     localCheckpointHashedWithCount(df, keys, numParts, sort, dedupAfter)._1
 
-  /** [[localCheckpointHashedWithCount]] additionally folding an exact
-    * column SUM into the same eager-materialization job — iterative
-    * callers whose convergence test is a sum over the frame they just
-    * checkpointed (duplicateClusters' label sum) save a whole
-    * aggregation (partial agg + single-partition exchange = two AQE
-    * stage-jobs) per round. `sumCol` must be a LongType column; the
-    * sum is exact (per-partition overflow spills to BigInt), bitwise
-    * the `sum(col.cast(decimal(38,0)))` it replaces — long addition
-    * reordered is still exact integer addition. */
-  def localCheckpointHashedWithLongSum(df: DataFrame, keys: Seq[String],
-      numParts: Int, sumCol: String, sort: Boolean = true)
-      : (DataFrame, Long, BigInt) = {
-    val idx = df.schema.fieldIndex(sumCol)
-    require(df.schema(idx).dataType ==
-      org.apache.spark.sql.types.LongType, s"$sumCol must be LongType")
-    localCheckpointHashedImpl(df, keys, numParts, sort, Nil, Some(idx)) match {
-      case (out, n, Some(s)) => (out, n, s)
-      case (out, n, None)    => (out, n, BigInt(0)) // unreachable
-    }
-  }
-
   /** Eagerly local-checkpoint `df` laid out as `numParts` hash
     * partitions of `keys` (sorted within partitions by `keys` when
     * `sort`), recording that layout for downstream planning, and
     * return the row count the eager materialization already takes —
     * iterative callers whose convergence check is a count of the same
     * frame save one job per round by reading it here instead of
-    * re-running `df.count()`. (The count/sum forms are self-contained —
-    * no shared mutable state, so concurrent query construction from
-    * several driver threads cannot cross-attribute counts.)
+    * re-running `df.count()`. (Self-contained — no shared mutable
+    * state, so concurrent query construction from several driver
+    * threads cannot cross-attribute counts.)
     *
     * `dedupAfter` (when non-empty) applies `dropDuplicates(dedupAfter)`
     * AFTER the layout: `keys` must be a subset of `dedupAfter`, so the
@@ -86,14 +65,6 @@ object CheckpointBridge {
   def localCheckpointHashedWithCount(df: DataFrame, keys: Seq[String],
       numParts: Int, sort: Boolean = true,
       dedupAfter: Seq[String] = Nil): (DataFrame, Long) = {
-    val (out, n, _) =
-      localCheckpointHashedImpl(df, keys, numParts, sort, dedupAfter, None)
-    (out, n)
-  }
-
-  private def localCheckpointHashedImpl(df: DataFrame, keys: Seq[String],
-      numParts: Int, sort: Boolean, dedupAfter: Seq[String],
-      sumIdx: Option[Int]): (DataFrame, Long, Option[BigInt]) = {
     require(keys.nonEmpty, "at least one partitioning key required")
     require(numParts > 0, "numParts must be positive")
     require(dedupAfter.isEmpty || keys.forall(dedupAfter.contains),
@@ -127,30 +98,7 @@ object CheckpointBridge {
     rdd.localCheckpoint()
     // ONE action materializes the checkpoint (an action on a child of a
     // checkpoint-marked RDD checkpoints the parent) AND takes the count
-    // — plus, when asked, the exact long-column sum the caller's
-    // convergence test needs, so no separate aggregation job runs.
-    // Per-partition sums accumulate in a long and spill to BigInt on
-    // overflow: exact for any row count, order-independent.
-    val (count, sum) = sumIdx match {
-      case None => (rdd.count(), None)
-      case Some(idx) =>
-        val parts = rdd.mapPartitions { rows =>
-          var n = 0L
-          var big = BigInt(0)
-          var acc = 0L
-          while (rows.hasNext) {
-            val r = rows.next()
-            n += 1L
-            if (!r.isNullAt(idx)) {
-              val v = r.getLong(idx)
-              try acc = Math.addExact(acc, v)
-              catch { case _: ArithmeticException => big += acc; acc = v }
-            }
-          }
-          Iterator.single((n, big + acc))
-        }.collect()
-        (parts.map(_._1).sum, Some(parts.map(_._2).sum))
-    }
+    val count = rdd.count()
     val output = ds.queryExecution.analyzed.output
     val byName = output.map(a => a.name -> a).toMap
     val keyAttrs = keys.map(k => byName.getOrElse(k,
@@ -167,6 +115,6 @@ object CheckpointBridge {
         sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
     (Dataset.ofRows(spark,
       LogicalRDD(output, rdd, partitioning, ordering, isStreaming = false)(
-        spark, stats, None)), count, sum)
+        spark, stats, None)), count)
   }
 }

@@ -948,6 +948,50 @@ class ExtSpec extends SparkSpec {
     Seq(20L, 21L, 22L, 23L).map(out) shouldBe Seq(20L, 20L, 20L, 20L)
   }
 
+  test("duplicate clusters: 100- and 400-id paths in shuffled id order converge at the default bound") {
+    // a path whose ids are a seeded shuffle: consecutive path steps
+    // jump around the id order, the shape that defeats raw-id label
+    // propagation; contraction orders vertices by hash and must land
+    // every id on the path's min id well inside the default bound
+    val rnd = new scala.util.Random(11)
+    Seq(100, 400).foreach { n =>
+      val ids = rnd.shuffle((0 until n).map(i => 1000L + 7L * i))
+      val path = ids.zip(ids.tail)
+      val out = Dedup.duplicateClusters(path.toDF("a", "b")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      withClue(s"n=$n: ") {
+        out shouldBe refComponents(path).map { case (id, (rep, _)) => id -> rep }
+        out.values.toSet shouldBe Set(1000L)
+      }
+    }
+  }
+
+  test("duplicate clusters: degenerate pairs — nulls dropped, self-pairs add no id, strings resolve to the min string") {
+    def clusters(df: org.apache.spark.sql.DataFrame) =
+      Dedup.duplicateClusters(df).collect()
+        .map(r => r.get(0) -> r.get(1)).toMap
+    // a null endpoint names no edge: id 3 (only ever paired with null)
+    // gets no row, and no (null, _) row appears
+    val withNull = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (null, 3L), (4L, null), (2L, 4L)).toDF("a", "b")
+    clusters(withNull) shouldBe
+      Map(1L -> 1L, 2L -> 1L, 4L -> 1L)
+    // a self-pair adds no vertex (absent ids are their own rep)
+    clusters(Seq((5L, 5L), (6L, 7L)).toDF("a", "b")) shouldBe
+      Map(6L -> 6L, 7L -> 6L)
+    // string ids: representative is the min string of the component
+    val strPairs = Seq("m" -> "c", "c" -> "x", "q" -> "b", "z" -> "z")
+    clusters(strPairs.toDF("a", "b")) shouldBe
+      refComponents(strPairs).map { case (id, (rep, _)) => id -> rep }
+    // duplicate pairs (either direction) change nothing; empty input
+    // yields an empty frame
+    val dup = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L))
+    clusters(dup.toDF("a", "b")) shouldBe
+      refComponents(dup).map { case (id, (rep, _)) => id -> rep }
+    Dedup.duplicateClusters(Seq.empty[(Long, Long)].toDF("a", "b"))
+      .count() shouldBe 0L
+  }
+
   test("batch decode (mapPartitions): typed output, deterministic, matches payload size") {
     val media = Multimodal.asMediaFrame(docs)
     val out = Multimodal.decodeBatched(media).collect().sortBy(_.media_id)

@@ -238,24 +238,26 @@ class LinkGraphSpec extends SparkSpec {
         Seq("nope").toDF("host")).collect()
   }
 
-  /** Independent reference model: textbook union-find over the same
-    * edge list, component labeled by its min host name. */
-  private def refComponents(
-      edges: Seq[(String, String)]): Map[String, (String, Long)] = {
-    val e = edges.filter { case (s, d) => s != d }
-    val hosts = (e.map(_._1) ++ e.map(_._2)).distinct
-    val parent = scala.collection.mutable.Map(hosts.map(h => h -> h): _*)
-    def find(x: String): String =
-      if (parent(x) == x) x
-      else { val r = find(parent(x)); parent(x) = r; r }
-    e.foreach { case (s, d) =>
-      val (rs, rd) = (find(s), find(d)); if (rs != rd) parent(rs) = rd }
-    val byRoot = hosts.groupBy(find)
-    byRoot.values.flatMap { members =>
-      val label = members.min
-      val size = members.size.toLong
-      members.map(_ -> ((label, size)))
-    }.toMap
+  test("hostRankSeeded with every host seeded ≡ hostRank, bit for bit") {
+    // the two rankings share one power iteration: flagging every host
+    // as a seed must reproduce the uniform-teleport ranks exactly
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "c",
+      "d" -> "a", "e" -> "d", "c" -> "f", "f" -> "f", "a" -> "b")
+    val df = edges.toDF("src_host", "dst_host")
+    val all = Seq("a", "b", "c", "d", "e", "f", "f").toDF("host")
+    def ranks(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val plain = ranks(LinkGraph.hostRank(df))
+    plain shouldBe refRank(edges)
+    ranks(LinkGraph.hostRankSeeded(df, all)) shouldBe plain
+    ranks(LinkGraph.hostRankSeeded(df, all, iterations = 4)) shouldBe
+      ranks(LinkGraph.hostRank(df, iterations = 4))
+    // empty edges: hostRank ranks no host; seeded still rejects the
+    // seed set, since no seed can appear in an empty graph
+    val empty = Seq.empty[(String, String)].toDF("src_host", "dst_host")
+    LinkGraph.hostRank(empty).count() shouldBe 0L
+    an[IllegalArgumentException] should be thrownBy
+      LinkGraph.hostRankSeeded(empty, all).collect()
   }
 
   private def compsOf(

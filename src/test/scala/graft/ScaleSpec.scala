@@ -819,7 +819,7 @@ class ScaleSpec extends SparkSpec {
     probe.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
     // probe plan: bare parquet scan of the persisted clusters — no
-    // joins, no checkpoint scans, no pointer-doubling anywhere
+    // joins, no checkpoint scans, no contraction loop anywhere
     val plan = probe.queryExecution.executedPlan.toString
     plan should include("FileScan")
     plan should not include "Join"

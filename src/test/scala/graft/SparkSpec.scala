@@ -31,4 +31,23 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   def longSeriesOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.select("t", "value").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+
+  /** Independent reference model for every connected-components answer:
+    * textbook union-find over the same edge list, each vertex mapped to
+    * its component's (min vertex, size). Self-pairs add no vertex. */
+  def refComponents[T: Ordering](edges: Seq[(T, T)]): Map[T, (T, Long)] = {
+    val e = edges.filter { case (s, d) => s != d }
+    val vs = (e.map(_._1) ++ e.map(_._2)).distinct
+    val parent = scala.collection.mutable.Map(vs.map(v => v -> v): _*)
+    def find(x: T): T =
+      if (parent(x) == x) x
+      else { val r = find(parent(x)); parent(x) = r; r }
+    e.foreach { case (s, d) =>
+      val (rs, rd) = (find(s), find(d)); if (rs != rd) parent(rs) = rd }
+    vs.groupBy(find).values.flatMap { members =>
+      val label = members.min
+      val size = members.size.toLong
+      members.map(_ -> ((label, size)))
+    }.toMap
+  }
 }
