@@ -134,22 +134,11 @@ object Bench {
       if (d == null) new java.io.File(".") else d
     }
     // Round number, resolved ONCE for both the triage baseline pick
-    // and the round-stamped copy below: SPARK_GRAFT_ROUND when set;
-    // otherwise 1 + the highest committed BENCH_r*.json.
-    val thisRound: Option[Int] = {
-      val explicit = sys.env.get("SPARK_GRAFT_ROUND")
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      lazy val inferred = {
-        val roundRe = """BENCH_r(\d+)\.json""".r
-        val prior = Option(detailDir.listFiles()).getOrElse(Array.empty)
-          .flatMap(f => f.getName match {
-            case roundRe(n) => Some(n.toInt)
-            case _          => None
-          })
-        if (prior.nonEmpty) Some(prior.max + 1) else None
-      }
-      explicit.orElse(inferred)
-    }
+    // and the round-stamped copy below: SPARK_GRAFT_ROUND, or none —
+    // then no round-stamped copy is written (a number inferred from the
+    // committed BENCH_r*.json files mis-stamps any re-run).
+    val thisRound: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND")
+      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
     def prevMins(dir: java.io.File): Map[String, Double] = {
       val roundRe = """BENCH_detail_r(\d+)\.json""".r
       val files = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -165,16 +154,24 @@ object Bench {
       // driver's post-round 8-core sweep round-stamped itself r22, and
       // triaging a 32-core sweep against 8-core minima flags everything
       // (or nothing) wrong. A detail without a cpus stamp (pre-r22
-      // rounds — all 32-core) is accepted as-is.
+      // rounds — all 32-core) is accepted, with a warning.
       def cpusOk(txt: String): Boolean =
         """"cpus":(-?\d+)""".r.findFirstMatchIn(txt)
           .forall(_.group(1) == cpusStamp.toString)
-      val chosenTxt: Option[String] =
-        stamped.sortBy(-_._1).view.flatMap { case (_, f) => read(f) }
-          .find(cpusOk)
+      val chosen: Option[(String, String)] =
+        stamped.sortBy(-_._1).view.flatMap { case (_, f) => read(f).map(f.getName -> _) }
+          .find(c => cpusOk(c._2))
           .orElse(files.find(_.getName == "BENCH_detail.json")
-            .flatMap(read).filter(cpusOk))
-      chosenTxt.flatMap { txt =>
+            .flatMap(f => read(f).map(f.getName -> _)).filter(c => cpusOk(c._2)))
+      chosen.foreach { case (name, txt) =>
+        if (name == "BENCH_detail.json")
+          System.err.println(s"[bench] WARNING: ghost triage baselines against the " +
+            s"unstamped $name (no round-stamped detail at $cpusStamp cpus)")
+        if (!txt.contains("\"cpus\":"))
+          System.err.println(s"[bench] WARNING: ghost triage baseline $name has no " +
+            s"cpus stamp; its core count is assumed to be $cpusStamp")
+      }
+      chosen.map(_._2).flatMap { txt =>
         """"queries_min":\{([^}]*)\}""".r.findFirstMatchIn(txt).map {
           m => m.group(1).split(",").flatMap { kv =>
             val i = kv.lastIndexOf(':')
@@ -238,17 +235,17 @@ object Bench {
           System.err.println(s"[bench] detail write to $path failed: ${e.getMessage}")
       }
     writeDetail(detailPath)
-    // ALSO write a round-stamped copy, BENCH_detail_r{N}.json: the
-    // driver overwrites BENCH_detail.json every round and keeps only a
-    // ~2k-char stdout tail in BENCH_rN.json, so without this the
-    // cross-round per-query series needs git archaeology. The round
-    // number comes from SPARK_GRAFT_ROUND when set; otherwise it is
-    // inferred as 1 + the highest committed BENCH_r*.json — correct
-    // for the round whose bench runs ONCE, but a re-run after the
-    // round's BENCH_rN.json lands would mis-stamp N+1, which the env
-    // override avoids.
-    thisRound.foreach { n =>
-      writeDetail(new java.io.File(detailDir, s"BENCH_detail_r$n.json").getPath)
+    // ALSO write a round-stamped copy, BENCH_detail_r{N}.json, when
+    // SPARK_GRAFT_ROUND names the round: every round overwrites
+    // BENCH_detail.json and its BENCH_rN.json keeps only a ~2k-char
+    // stdout tail, so without this the cross-round per-query series
+    // needs git archaeology.
+    thisRound match {
+      case Some(n) =>
+        writeDetail(new java.io.File(detailDir, s"BENCH_detail_r$n.json").getPath)
+      case None =>
+        System.err.println("[bench] SPARK_GRAFT_ROUND is not set: no round-stamped " +
+          "BENCH_detail_rN.json written")
     }
     println(s"""{"metric":"detail","queries_median":$qsMed,"sf":"$sfDir"}""")
     println(s"""{"metric":"detail","queries":$qs,"sf":"$sfDir"}""")

@@ -136,21 +136,26 @@ object BlueprintParser {
     val commons: Map[String, JsonNode] = fields(root.get("commons"))
 
     val generators = Option(root.get("generators")).toSeq
-      .flatMap(_.elements().asScala)
-      .map { g =>
+      .flatMap(_.elements().asScala).zipWithIndex
+      .map { case (g, i) =>
         val own = fields(g.get("config"))
         // precedence: code default < commons < generator.config
         ResolvedGenerator(
-          id = g.get("id").asText(),
-          shape = g.get("shape").asText(),
+          id = required(g, "id", s"generator #$i"),
+          shape = required(g, "shape", s"generator #$i"),
           config = Config(commons ++ own))
       }
+    // Generators are keyed by id everywhere (per-generator statistics,
+    // RNG streams, target routing): two generators under one id would
+    // merge into one interleaved series.
+    val dups = generators.map(_.id).diff(generators.map(_.id).distinct).distinct
+    require(dups.isEmpty, s"duplicate generator ids: ${dups.mkString(", ")}")
 
     val targets = Option(root.get("targets")).toSeq
-      .flatMap(_.elements().asScala)
-      .map { t =>
+      .flatMap(_.elements().asScala).zipWithIndex
+      .map { case (t, i) =>
         val raw0 = fields(t)
-        val tpe = t.get("type").asText()
+        val tpe = required(t, "type", s"target #$i")
         val raw =
           if (tpe == "s3" && !raw0.contains("bucket"))
             raw0 + ("bucket" -> mapper.getNodeFactory.textNode(defaultBucket))
@@ -165,6 +170,11 @@ object BlueprintParser {
       }
 
     Blueprint(generators, targets)
+  }
+
+  private def required(node: JsonNode, key: String, what: String): String = {
+    require(node.hasNonNull(key), s"$what has no '$key'")
+    node.get(key).asText()
   }
 
   private def fields(node: JsonNode): Map[String, JsonNode] =

@@ -6,38 +6,23 @@ import graft.blueprint.Blueprint
 
 /**
  * End-to-end materialization — the Spark analog of the reference's
- * `generate_datapoints` (src/main.py:643-665): per generator
- * generate → noise → anomalies → int-cast, union'd into ONE long frame
- * `(generator_id, t, value LONG)` so Catalyst sees a single fused plan
- * per blueprint.
+ * `generate_datapoints` (src/main.py:643-665): generate → scale → noise →
+ * anomalies → int-cast over ONE long frame `(generator_id, t, value LONG)`.
+ * Each transform is one stage over all generators of the blueprint,
+ * their parameters carried as per-`generator_id` rows (see [[Transforms]]),
+ * so Catalyst plans one fused plan per blueprint whose size grows with
+ * neither the generator count nor the number of distinct parameter
+ * values (only distinct formulas, which are code, add a branch each).
  */
 object Engine {
 
   def materialize(spark: SparkSession, bp: Blueprint, seed: Long): DataFrame = {
     require(bp.generators.nonEmpty, "blueprint has no generators")
-    // Plan-size control at high generator counts: a blueprint is one
-    // frame per generator union'd together, which is fine at 6
-    // generators but makes Catalyst chew a 10,000-branch union at
-    // fleet scale. Square/constant generators without noise/anomalies
-    // are pure functions of (t, params), so they collapse into ONE
-    // range scan × broadcast parameter table ([[Generators.squareBulk]]).
-    val (bulkable, individual) = bp.generators.partition { g =>
-      (g.shape == "square" || g.shape == "constant") &&
-        !g.config.noiseEnabled && g.config.anomalies.isEmpty
-    }
-    val bulkFrame =
-      if (bulkable.isEmpty) Nil
-      else Seq(Transforms.intCast(Generators.squareBulk(spark, bulkable))
-        .select(col(Transforms.Gid), col("t"), col("value")))
-    val perGen = individual.map { gen =>
-      val raw = Generators.forSpec(spark, gen, seed)
-      val noised = Transforms.applyNoise(raw, gen.config, seed)
-      val withAnomalies = Transforms.applyAnomalies(
-        noised, gen.config.anomalies, gen.config.numPoints, seed, gen.id)
-      Transforms.intCast(withAnomalies)
-        .select(col(Transforms.Gid), col("t"), col("value"))
-    }
-    (bulkFrame ++ perGen).reduce(_ unionByName _)
+    val gens = bp.generators
+    val noised = Transforms.applyNoise(Generators.series(spark, gens, seed), gens, seed)
+    Transforms.intCast(Transforms.applyAnomalies(noised,
+      gens.map(g => (g.id, g.config.anomalies, g.config.numPoints)), seed))
+      .select(col(Transforms.Gid), col("t"), col("value"))
   }
 
   /**
@@ -51,8 +36,8 @@ object Engine {
   }
 
   /**
-   * Full blueprint execution (EP2 + EP3, SURVEY §3): materialize, route
-   * each target's view, apply its delivery mode, and produce the
+   * Full blueprint execution (EP2 + EP3, SURVEY §3): materialize and
+   * route each target's view, apply its delivery mode, and produce the
    * per-target activity frame a cluster job would write/deliver:
    *
    *  - s3/put   → fake-object corpus frame (key, body, content_type, acl)
@@ -62,16 +47,22 @@ object Engine {
    *    `slice_size`, grouped mode per `group_datapoints`)
    *
    * Returned keyed by target index (targets have no ids in the
-   * reference). One materialized series frame feeds every target —
-   * Catalyst reuses the plan; at scale, persist `series` first.
+   * reference). A target's routed view is the sub-blueprint of the
+   * generators it names, materialized on its own, so its plan holds only
+   * their sources and the stages they take. (A routing filter over the
+   * whole blueprint's series does not reach the statistics side of the
+   * stage joins: each target would re-derive every generator's
+   * statistics.) A target naming no generator of the blueprint routes
+   * the whole blueprint's series to nothing.
    */
   def execute(spark: SparkSession, bp: Blueprint, seed: Long,
       timestamp: Column = date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss").cast("timestamp"))
       : Seq[(Int, String, DataFrame)] = {
     import graft.sources.Sinks
-    val series = Engine.materialize(spark, bp, seed)
     bp.targets.zipWithIndex.map { case (target, i) =>
-      val routed = Dispatch.routeToTarget(series, target)
+      val own = bp.generators.filter(g => target.generators.contains(g.id))
+      val routed = Dispatch.routeToTarget(
+        materialize(spark, if (own.isEmpty) bp else bp.copy(generators = own), seed), target)
       val sliceSize = target.raw.long("slice_size", 0L)
       val sliced =
         if (sliceSize > 0 && !target.groupDatapoints)

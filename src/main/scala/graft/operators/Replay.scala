@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.blueprint.Config
 
@@ -21,7 +21,14 @@ object Replay {
   import Transforms.Gid
 
   def fromTextFile(spark: SparkSession, id: String, path: String,
-      cfg: Config): DataFrame = {
+      cfg: Config): DataFrame =
+    Transforms.scaleRange(textSource(spark, id, path, cfg.numPoints),
+      cfg.signalMin, cfg.signalMax)
+
+  /** The replay file as the generator's raw series: slot N is the N-th
+    * non-blank line, zero-padded / truncated to `n`, not yet scaled. */
+  private[operators] def textSource(spark: SparkSession, id: String,
+      path: String, n: Long): DataFrame = {
     val lines = spark.read.textFile(path).toDF("line")
       .withColumn("__file_pos", monotonically_increasing_id())
       .where(trim(col("line")) =!= "")
@@ -33,7 +40,7 @@ object Replay {
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("__file_pos")).cast("long") - 1)
       .select(col("t"), trim(col("line")).cast("long").cast("double").as("value"))
-    alignAndScale(spark, id, indexed, cfg)
+    align(spark, id, indexed, n)
   }
 
   /**
@@ -44,17 +51,14 @@ object Replay {
    */
   def fromFrame(spark: SparkSession, id: String, indexed: DataFrame,
       cfg: Config): DataFrame =
-    alignAndScale(spark, id,
-      indexed.select(col("t").cast("long"), col("value").cast("double")), cfg)
+    Transforms.scaleRange(align(spark, id,
+      indexed.select(col("t").cast("long"), col("value").cast("double")),
+      cfg.numPoints), cfg.signalMin, cfg.signalMax)
 
-  private def alignAndScale(spark: SparkSession, id: String,
-      indexed: DataFrame, cfg: Config): DataFrame = {
-    val n = cfg.numPoints
-    // zero-pad short series / truncate long ones (src/main.py:524-529)
-    val grid = spark.range(0, n).toDF("t")
-    val aligned = grid.join(indexed.where(col("t") < n), Seq("t"), "left")
+  /** Zero-pad short series / truncate long ones (src/main.py:524-529). */
+  private def align(spark: SparkSession, id: String, indexed: DataFrame,
+      n: Long): DataFrame =
+    spark.range(0, n).toDF("t").join(indexed.where(col("t") < n), Seq("t"), "left")
       .select(lit(id).as(Gid), col("t"),
         coalesce(col("value"), lit(0.0)).as("value"))
-    Transforms.scaleRange(aligned, cfg.signalMin, cfg.signalMax)
-  }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.blueprint.{AnomalySpec, Config}
+import graft.blueprint.{AnomalySpec, Config, ResolvedGenerator}
 import graft.dsl.Formula
 import graft.functions.Rng
 
@@ -10,14 +10,85 @@ import graft.functions.Rng
  * Per-series transforms over the canonical long IR frame
  * `(generator_id STRING, t LONG, value DOUBLE)` — SURVEY §2.2.
  *
- * All operators are `DataFrame => DataFrame`, shuffle-light by design:
- * the only aggregations are per-generator scalar min/max (tiny results,
- * broadcast back), never `Window.partitionBy()` over the whole frame and
- * never `collect()` — so plans scale with data volume, not series count.
+ * Every statistic runs through one kernel, [[perGenerator]]: a
+ * `groupBy(generator_id)` aggregate, broadcast back and joined on
+ * `generator_id`. A whole blueprint takes each transform ONCE: one
+ * aggregate for all its generators, whose per-generator bounds ride in
+ * that statistics table as data (a driver-side `(id, lo, hi)` table
+ * joined in before the broadcast) and are read by one expression. So the
+ * plan, and the work per row, scale with data volume and the number of
+ * transform stages, not with the series count or with how many distinct
+ * parameter values the series have. Only code is not data: each distinct
+ * anomaly formula is one branch of a [[pick]], which costs a row
+ * O(log formulas) comparisons. No `Window.partitionBy()` over the whole
+ * frame, no `collect()`.
+ *
+ * The single-series entry points ([[scaleRange]], [[applyNoise]],
+ * [[applyAnomalies]]) run the same stages with one `[lo, hi]` for every
+ * row.
  */
 object Transforms {
 
   val Gid = "generator_id"
+
+  /**
+   * The one statistics kernel: aggregate `aggs` per generator over the
+   * rows where `in` holds, add the stage's per-generator parameters with
+   * `params`, broadcast the statistics back, rewrite `value` and drop
+   * them again. The join is a left join: generators outside `in` find no
+   * statistics row, and a later stage that reads none of these columns
+   * (noise draws ignore `value`) drops the join, and this aggregate, from
+   * its plan.
+   */
+  private def perGenerator(df: DataFrame, in: Column, aggs: Seq[Column],
+      params: DataFrame => DataFrame = identity)(value: Column): DataFrame = {
+    val stats = params(df.where(in).groupBy(Gid).agg(aggs.head, aggs.tail: _*)
+      .withColumnRenamed(Gid, "__sg"))
+    byGenerator(df, stats, Gid -> "__sg")
+      .withColumn("value", value)
+      .drop(stats.columns: _*)
+  }
+
+  /**
+   * Left-joins a small per-generator table on `keys` (pairs of `df` and
+   * table columns, the generator id first), matched by one 8-byte hash
+   * of the keys and then by the keys themselves. A string join key would
+   * make Spark build the broadcast as a byte-map holding a whole memory
+   * page (16 MB with a 2 GB heap on local[2]) per statistics table, alive
+   * until the broadcast is cleaned; a long key builds a hash map sized
+   * to the table. The key comparison stays a residual condition, so a
+   * hash collision can never merge two generators.
+   */
+  private def byGenerator(df: DataFrame, table: DataFrame, keys: (String, String)*): DataFrame =
+    df.join(broadcast(table),
+      xxhash64(keys.map(k => col(k._1)): _*) === xxhash64(keys.map(k => col(k._2)): _*) &&
+        coalesce(keys.map { case (a, b) => col(a) === col(b) }.reduce(_ && _), lit(false)),
+      "left")
+
+  /**
+   * A stage's per-generator bounds: the generators `(id, lo, hi)` lists,
+   * and their bounds joined into the statistics table as `__lo`/`__hi`.
+   */
+  private def bounds(rows: Seq[(String, Double, Double)]): (Column, DataFrame => DataFrame) =
+    col(Gid).isin(rows.map(_._1): _*) -> { stats =>
+      import stats.sparkSession.implicits._
+      byGenerator(stats, rows.toDF("__pg", "__lo", "__hi"), "__sg" -> "__pg").drop("__pg")
+    }
+
+  /** One `[lo, hi]` for every row of the frame. */
+  private def bounds(lo: Double, hi: Double): (Column, DataFrame => DataFrame) =
+    lit(true) -> (_.withColumn("__lo", lit(lo)).withColumn("__hi", lit(hi)))
+
+  /**
+   * `values(i)` where `index` is `i`: a balanced tree of CASEs, so a row
+   * takes O(log n) comparisons to reach its branch.
+   */
+  private[operators] def pick(index: Column, values: IndexedSeq[Column], from: Int = 0): Column =
+    if (values.size == 1) values.head
+    else {
+      val (l, r) = values.splitAt(values.size / 2)
+      when(index < from + l.size, pick(index, l, from)).otherwise(pick(index, r, from + l.size))
+    }
 
   /**
    * Min-max rescale each generator's series to [lo, hi], then ceil —
@@ -31,19 +102,32 @@ object Transforms {
    *    and C libm `sin` may differ in the last ulp; without quantization
    *    a 1-ulp difference at the series argmin flips `ceil` by 1).
    */
-  def scaleRange(df: DataFrame, lo: Double, hi: Double): DataFrame = {
-    val stats = df.groupBy(Gid)
-      .agg(min("value").as("__mn"), max("value").as("__mx"))
-    df.join(broadcast(stats), Gid)
-      .withColumn("value", scaledExpr(col("value"), col("__mn"), col("__mx"), lo, hi))
-      .drop("__mn", "__mx")
-  }
+  def scaleRange(df: DataFrame, lo: Double, hi: Double): DataFrame =
+    minMaxStage(df, bounds(lo, hi), col("value"))(identity)
+
+  /** [[scaleRange]] over a whole blueprint: each listed generator
+    * `(id, lo, hi)` is rescaled to its own bounds; unlisted generators
+    * pass through unscaled. */
+  def scaleRange(df: DataFrame, rows: Seq[(String, Double, Double)]): DataFrame =
+    if (rows.isEmpty) df else minMaxStage(df, bounds(rows), col("value"))(identity)
+
+  /** Min-max rescale `x` per generator to its `[__lo, __hi]` (the stage's
+    * generators only) and fold the result into `value` with `f`. */
+  private def minMaxStage(df: DataFrame, stage: (Column, DataFrame => DataFrame),
+      x: Column)(f: Column => Column): DataFrame =
+    perGenerator(df, stage._1, Seq(min(x).as("__mn"), max(x).as("__mx")), stage._2)(
+      when(col("__lo").isNull, col("value")).otherwise(
+        f(scaledExpr(x, col("__mn"), col("__mx"), col("__lo"), col("__hi")))))
 
   /** The scale expression itself, reusable on any column. */
-  def scaledExpr(v: Column, mn: Column, mx: Column, lo: Double, hi: Double): Column = {
+  def scaledExpr(v: Column, mn: Column, mx: Column, lo: Double, hi: Double): Column =
+    scaledExpr(v, mn, mx, lit(lo), lit(hi))
+
+  /** [[scaledExpr]] with the bounds as columns (per-generator data). */
+  def scaledExpr(v: Column, mn: Column, mx: Column, lo: Column, hi: Column): Column = {
     val std = (v - mn) / (mx - mn)
-    val scaled = std * lit(hi - lo) + lit(lo)
-    when(mx === mn, lit(lo).cast("double"))
+    val scaled = std * (hi - lo) + lo
+    when(mx === mn, lo.cast("double"))
       .otherwise(ceil(round(scaled, 9)).cast("double"))
   }
 
@@ -54,21 +138,21 @@ object Transforms {
    * add, clamp at 0. Disabled unless both bounds are nonzero (the
    * truthiness gate at src/main.py:599).
    */
-  def applyNoise(df: DataFrame, cfg: Config, seed: Long): DataFrame = {
-    if (!cfg.noiseEnabled) df
-    else {
-      val noisy = df.withColumn("__noise",
-        Rng.gaussian(seed, "noise", col(Gid), col("t")))
-      val stats = noisy.groupBy(Gid)
-        .agg(min("__noise").as("__nmn"), max("__noise").as("__nmx"))
-      noisy.join(broadcast(stats), Gid)
-        .withColumn("__noise",
-          scaledExpr(col("__noise"), col("__nmn"), col("__nmx"),
-            cfg.noiseMin, cfg.noiseMax))
-        .withColumn("value", greatest(lit(0.0), col("value") + col("__noise")))
-        .drop("__noise", "__nmn", "__nmx")
-    }
+  def applyNoise(df: DataFrame, cfg: Config, seed: Long): DataFrame =
+    if (!cfg.noiseEnabled) df else noiseStage(df, bounds(cfg.noiseMin, cfg.noiseMax), seed)
+
+  /** [[applyNoise]] over a whole blueprint: one noise stage for every
+    * generator whose config enables noise, each at its own bounds. */
+  def applyNoise(df: DataFrame, gens: Seq[ResolvedGenerator], seed: Long): DataFrame = {
+    val noisy = gens.filter(_.config.noiseEnabled)
+      .map(g => (g.id, g.config.noiseMin, g.config.noiseMax))
+    if (noisy.isEmpty) df else noiseStage(df, bounds(noisy), seed)
   }
+
+  private def noiseStage(df: DataFrame, stage: (Column, DataFrame => DataFrame),
+      seed: Long): DataFrame =
+    minMaxStage(df, stage, Rng.gaussian(seed, "noise", col(Gid), col("t")))(
+      noise => greatest(lit(0.0), col("value") + noise))
 
   /**
    * Anomaly injection — reference `apply_anomalies` (src/main.py:606-641).
@@ -83,12 +167,23 @@ object Transforms {
    * scope; specs apply sequentially like the reference's loop).
    *
    * Slot sampling happens driver-side from the deterministic seed — the
-   * sampled-slot table is `counts` rows, broadcast into the join.
+   * sampled-slot table is `counts` rows per generator, broadcast into
+   * the join. `df` holds generator `generatorId`'s series.
    */
   def applyAnomalies(df: DataFrame, specs: Seq[AnomalySpec], numPoints: Long,
-      seed: Long, generatorId: String): DataFrame = {
-    specs.zipWithIndex.foldLeft(df) { case (cur, (spec, i)) =>
-      applyOneAnomaly(cur, spec, numPoints, seed, generatorId, i)
+      seed: Long, generatorId: String): DataFrame =
+    applyAnomalies(df, Seq((generatorId, specs, numPoints)), seed)
+
+  /** [[applyAnomalies]] over a whole blueprint, `(id, specs, num_points)`
+    * per generator: spec index 0 of every generator in one stage, then
+    * index 1, … A generator with fewer specs passes the later stages
+    * unchanged. */
+  def applyAnomalies(df: DataFrame, gens: Seq[(String, Seq[AnomalySpec], Long)],
+      seed: Long): DataFrame = {
+    val depth = if (gens.isEmpty) 0 else gens.map(_._2.size).max
+    (0 until depth).foldLeft(df) { (cur, i) =>
+      val specs = gens.collect { case (id, s, n) if s.size > i => (id, s(i), n) }
+      anomalyStage(cur, specs, seed, i)
     }
   }
 
@@ -114,34 +209,30 @@ object Transforms {
       .distinct
   }
 
-  private def applyOneAnomaly(df: DataFrame, spec: AnomalySpec, n: Long,
-      seed: Long, generatorId: String, specIdx: Int): DataFrame = {
+  /** Spec index `specIdx` of each listed generator: a `(generator_id, t,
+    * formula index)` slot table and a [[pick]] over the distinct formulas. */
+  private def anomalyStage(df: DataFrame, specs: Seq[(String, AnomalySpec, Long)],
+      seed: Long, specIdx: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val start = math.min(spec.start.getOrElse(0L), n - 1)
-    val end = math.min(spec.end.getOrElse(n - 1), n - 1)
-    if (spec.counts <= 0 || end < start) return df
-
-    val slots = anomalySlots(spec, n, seed, generatorId, specIdx)
-    val slotDf = slots.toDF("t").withColumn("__anom", lit(true))
-
-    // Pre-injection aggregates feed datapoint_max / max(datapoints) refs.
-    val stats = df.groupBy(Gid).agg(
-      floor(max("value")).cast("double").as(Formula.DpMaxCol), // int(np.max(..))
-      min("value").as(Formula.DpMinCol),
-      count("*").cast("double").as(Formula.DpLenCol))
-
-    val formulaCol: Column = spec.formula match {
-      case Some(src) => Formula.compile(src)
-      case None      => pow(col(Formula.DpMaxCol) + lit(1.0), 2.0)
+    val formulas = specs.map(_._2.formula).distinct
+    val slots = specs.flatMap { case (id, spec, n) =>
+      val f = formulas.indexOf(spec.formula)
+      anomalySlots(spec, n, seed, id, specIdx).map(t => (id, t, f))
     }
+    if (slots.isEmpty) return df
 
-    df.join(broadcast(stats), Gid)
-      .join(broadcast(slotDf), Seq("t"), "left")
-      .withColumn("value",
-        when(col("__anom").isNotNull, formulaCol.cast("double"))
-          .otherwise(col("value")))
-      .drop("__anom", Formula.DpMaxCol, Formula.DpMinCol, Formula.DpLenCol)
+    val formulaCol = pick(col("__f"), formulas.map(_.fold(
+      pow(col(Formula.DpMaxCol) + lit(1.0), 2.0))(Formula.compile).cast("double")).toIndexedSeq)
+    // Pre-injection aggregates feed datapoint_max / max(datapoints) refs.
+    perGenerator(
+      byGenerator(df, slots.toDF("__sg", "__st", "__f"), Gid -> "__sg", "t" -> "__st")
+        .drop("__sg", "__st"), col(Gid).isin(specs.map(_._1): _*),
+      Seq(floor(max("value")).cast("double").as(Formula.DpMaxCol), // int(np.max(..))
+        min("value").as(Formula.DpMinCol),
+        count("*").cast("double").as(Formula.DpLenCol)))(
+      when(col("__f").isNotNull, formulaCol).otherwise(col("value")))
+      .drop("__f")
   }
 
   /**

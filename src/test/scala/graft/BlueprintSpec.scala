@@ -65,6 +65,20 @@ class BlueprintSpec extends AnyFunSuite with Matchers {
     b(1).counts shouldBe 2L
   }
 
+  test("blueprints the engine cannot key fail at parse time with a named error") {
+    def err(json: String): String =
+      intercept[IllegalArgumentException](BlueprintParser.parse(json)).getMessage
+    err("""{"generators":[{"id":"g","shape":"constant"},{"id":"h","shape":"square"},
+          | {"id":"g","shape":"sinusoidal"}]}""".stripMargin) should include("duplicate generator ids: g")
+    err("""{"generators":[{"shape":"constant"}]}""") should include("generator #0 has no 'id'")
+    err("""{"generators":[{"id":"g","shape":"constant"},{"id":"h"}]}""") should
+      include("generator #1 has no 'shape'")
+    err("""{"generators":[{"id":"g","shape":null}]}""") should include("generator #0 has no 'shape'")
+    err("""{"generators":[{"id":"g","shape":"constant"}],
+          | "targets":[{"type":"s3"},{"generators":["g"]}]}""".stripMargin) should
+      include("target #1 has no 'type'")
+  }
+
   test("s3 targets get the default bucket only when absent (src/main.py:1096-1098)") {
     bp.targets(0).raw.string("bucket", "") shouldBe "stack-bucket"
     bp.targets(1).raw.string("bucket", "") shouldBe "explicit"

@@ -97,28 +97,42 @@ class EngineSpec extends SparkSpec {
     all(metrics.map(_.getAs[String]("metric_name")).toSeq) shouldBe "Timeseries"
   }
 
-  test("bulk generation: square/constant fleet collapses to one range scan, same values") {
-    val gens = (0 until 40).map { i =>
-      if (i % 2 == 0)
-        s"""{"id":"g$i","shape":"constant","config":{"num_points":${50 + i},"constant":$i}}"""
-      else
-        s"""{"id":"g$i","shape":"square","config":{"num_points":${50 + i},"low_value":$i,"low_width":2,"high_value":${i * 3},"high_width":3}}"""
-    }.mkString(",")
+  test("one generation path: mixed 40-generator fleet reads one range, same values") {
+    // sinusoidal (noise on every other one), square (an anomaly on every
+    // other one), constant, random (noise and a formula anomaly on every
+    // other one), cycling
+    def shape(i: Int): String = i % 4 match {
+      case 0 => s""""shape":"sinusoidal","config":{"num_points":${50 + i},"frequency":0.0${i % 9 + 1}""" +
+        (if (i % 8 == 0) ""","noise_min":1,"noise_max":4}""" else "}")
+      case 1 => s""""shape":"square","config":{"num_points":${50 + i},"low_value":$i,"low_width":2,"high_value":${i * 3},"high_width":3""" +
+        (if (i % 8 == 1) ""","anomalies":{"start":5,"end":30,"counts":3}}""" else "}")
+      case 2 => s""""shape":"constant","config":{"num_points":${50 + i},"constant":$i}"""
+      case _ => s""""shape":"random","config":{"num_points":${50 + i},"type":"uniform"""" +
+        (if (i % 8 == 3) ""","noise_min":1,"noise_max":2,"anomalies":{"start":0,"end":40,"counts":2,"formula":"max(datapoints) + t"}}""" else "}")
+    }
+    val gens = (0 until 40).map(i => s"""{"id":"g$i",${shape(i)}}""").mkString(",")
     val bp = BlueprintParser.parse(s"""{"generators":[$gens],"targets":[]}""")
-    val bulk = Engine.materialize(spark, bp, 42L)
-    // one range scan in the whole plan (not 40)
-    val nRanges = "Range \\(".r.findAllIn(bulk.queryExecution.executedPlan.toString).length
-    nRanges shouldBe 1
-    // values identical to the per-generator path
-    val g7 = bulk.where($"generator_id" === "g7").orderBy("t")
-      .collect().map(_.getLong(2)).toSeq
-    val expected = graft.operators.Transforms.intCast(
-      graft.operators.Generators.square(spark, "g7",
-        graft.blueprint.Config.of("""{"num_points":57,"low_value":7,"low_width":2,"high_value":21,"high_width":3}""")))
-      .orderBy("t").collect().map(_.getLong(2)).toSeq
-    g7 shouldBe expected
-    bulk.count() shouldBe (0 until 40).map(50 + _).sum.toLong
+    val fleet = Engine.materialize(spark, bp, 42L)
+    // one range source in the whole plan (not 40): every statistics pass
+    // re-reads the same `range(maxN)`
+    val ranges = "Range \\([^)]*\\)".r.findAllIn(fleet.queryExecution.executedPlan.toString).toSet
+    ranges.size shouldBe 1
+    ranges.head should startWith("Range (0, 89,")
+    // values identical to each generator materialized alone (the 40
+    // small jobs run concurrently to keep the spec fast)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val byGen = longRows(fleet).groupBy(_._1)
+    val alone = bp.generators.map(g => Future(
+      g.id -> longRows(Engine.materialize(spark, bp.copy(generators = Seq(g)), 42L))))
+    alone.map(Await.result(_, scala.concurrent.duration.Duration.Inf)).foreach {
+      case (id, rows) => withClue(id) { rows shouldBe byGen(id) }
+    }
+    fleet.count() shouldBe (0 until 40).map(50 + _).sum.toLong
   }
+
+  private def longRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(r => (r._1, r._2)).toSeq
 
   test("execute: full blueprint → one activity frame per target (EP2+EP3)") {
     val bp = BlueprintParser.parse(

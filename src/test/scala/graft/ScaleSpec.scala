@@ -959,6 +959,33 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
+  test("materialize plans one stage per transform: as many exchanges for 60 generators as for 6") {
+    val shapes = Seq(
+      """"shape":"sinusoidal","config":{"frequency":0.01,"noise_min":1,"noise_max":3}""",
+      """"shape":"square","config":{"low_value":1,"high_value":4,"low_width":3,"high_width":2,"anomalies":{"start":5,"end":50,"counts":3}}""",
+      """"shape":"constant","config":{"constant":3}""",
+      """"shape":"random","config":{"type":"uniform","noise_min":1,"noise_max":2,"anomalies":{"start":5,"end":50,"counts":2,"formula":"max(datapoints) + t"}}""",
+      """"shape":"random","config":{"type":"gauss","mu":3}""",
+      """"shape":"sinusoidal","config":{"frequency":0.02}""")
+    // `distinct`: every generator gets its own signal_max and noise bounds
+    def plan(n: Int, distinct: Boolean): String = {
+      val gens = (0 until n).map { i =>
+        val shape = shapes(i % shapes.size)
+        val own = s""","signal_max":${100 + i},"noise_min":${1 + i},"noise_max":${70 + 2 * i}}"""
+        s"""{"id":"g$i",${if (distinct) shape.dropRight(1) + own else shape}}"""
+      }.mkString(",")
+      val bp = graft.blueprint.BlueprintParser.parse(
+        s"""{"commons":{"num_points":200},"generators":[$gens],"targets":[]}""")
+      graft.operators.Engine.materialize(spark, bp, 42L).queryExecution.executedPlan.toString
+    }
+    def count(re: String, plan: String): Int = re.r.findAllIn(plan).length
+    val six = plan(6, distinct = false)
+    count("Exchange", six) should be > 0
+    // per-generator bounds are data: no branch per distinct value
+    for (p <- Seq(plan(60, distinct = false), plan(60, distinct = true)); re <- Seq("Exchange", "CASE WHEN"))
+      withClue(re) { count(re, p) shouldBe count(re, six) }
+  }
+
   test("typed API: Dataset[DataPoint] round-trips the IR frame") {
     val bp = graft.blueprint.BlueprintParser.parse(
       """{"generators":[{"id":"g","shape":"constant","config":{"num_points":5,"constant":3}}],

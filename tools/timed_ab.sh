@@ -1,6 +1,7 @@
 #!/bin/bash
 # Load-gated TimeQueries runner for the noisy-neighbor box (r21 protocol):
-# waits for 1-min loadavg < 0.5, runs TimeQueries min-of-4 on the given
+# waits for 1-min loadavg < 0.5 (up to 90x10 s; a timed-out wait is
+# logged and the try launches anyway), runs TimeQueries min-of-4 on the given
 # queries (x_vocab_stats control always prepended), and accepts the session
 # only if the control min is <= $CONTROL_MAX (default 0.30 s; committed
 # uncontended band is 0.19-0.28). Retries up to $TRIES sessions.
@@ -10,10 +11,12 @@ OUT="$1"; shift
 TRIES=${TRIES:-6}
 CONTROL_MAX=${CONTROL_MAX:-0.30}
 for t in $(seq 1 "$TRIES"); do
+  gated=0
   for i in $(seq 1 90); do
-    awk '{exit !($1 < 0.5)}' /proc/loadavg && break
+    awk '{exit !($1 < 0.5)}' /proc/loadavg && { gated=1; break; }
     sleep 10
   done
+  [ "$gated" = 1 ] || echo "[timed_ab] WARNING: try $t load gate timed out after 90x10 s; launching anyway" >&2
   echo "[timed_ab] try $t launching at load $(cut -d' ' -f1 /proc/loadavg)" >&2
   SPARK_GRAFT_TIME_RUNS=4 sbt "runMain graft.examples.TimeQueries /root/testdata/sf0.1 x_vocab_stats $*" 2>/dev/null \
     | grep TIME_MIN > "$OUT.try$t"
