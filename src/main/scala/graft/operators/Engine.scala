@@ -16,13 +16,17 @@ import graft.blueprint.Blueprint
  */
 object Engine {
 
+  import Transforms.Gid
+
   def materialize(spark: SparkSession, bp: Blueprint, seed: Long): DataFrame = {
     require(bp.generators.nonEmpty, "blueprint has no generators")
     val gens = bp.generators
-    val noised = Transforms.applyNoise(Generators.series(spark, gens, seed), gens, seed)
+    val noise = gens.filter(_.config.noiseEnabled).map(g => (g.id, g.config.noiseMin, g.config.noiseMax))
+    val noised = Transforms.scaleAndNoise(Generators.source(spark, gens, seed),
+      Generators.scaling(gens), noise, seed)
     Transforms.intCast(Transforms.applyAnomalies(noised,
       gens.map(g => (g.id, g.config.anomalies, g.config.numPoints)), seed))
-      .select(col(Transforms.Gid), col("t"), col("value"))
+      .select(col(Gid), col("t"), col("value"))
   }
 
   /**
@@ -36,9 +40,9 @@ object Engine {
   }
 
   /**
-   * Full blueprint execution (EP2 + EP3, SURVEY §3): materialize and
-   * route each target's view, apply its delivery mode, and produce the
-   * per-target activity frame a cluster job would write/deliver:
+   * Full blueprint execution (EP2 + EP3, SURVEY §3): derive the series
+   * once, route each target's view from it, apply its delivery mode, and
+   * produce the per-target activity frame a cluster job would write/deliver:
    *
    *  - s3/put   → fake-object corpus frame (key, body, content_type, acl)
    *  - s3/get   → GetObject request frame
@@ -47,34 +51,34 @@ object Engine {
    *    `slice_size`, grouped mode per `group_datapoints`)
    *
    * Returned keyed by target index (targets have no ids in the
-   * reference). A target's routed view is the sub-blueprint of the
-   * generators it names, materialized on its own, so its plan holds only
-   * their sources and the stages they take. (A routing filter over the
-   * whole blueprint's series does not reach the statistics side of the
-   * stage joins: each target would re-derive every generator's
-   * statistics.) A target naming no generator of the blueprint routes
-   * the whole blueprint's series to nothing.
+   * reference). Like the reference, which generates a batch once and fans
+   * it out (src/main.py:643-707, 766-828), `execute` runs the whole
+   * blueprint's materialization jobs when it is called (if it has a
+   * target) into one eager local checkpoint (each generator id stored as
+   * its blueprint index), and every target frame reads that checkpoint
+   * through [[Dispatch.routeToTarget]]. The checkpoint is this call's own,
+   * not a cache entry: its frames keep what it derived, a later call
+   * derives afresh.
    */
   def execute(spark: SparkSession, bp: Blueprint, seed: Long,
       timestamp: Column = date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss").cast("timestamp"))
       : Seq[(Int, String, DataFrame)] = {
     import graft.sources.Sinks
+    val ids = bp.generators.map(_.id)
+    lazy val series = materialize(spark, bp, seed)
+      .select(udf(ids.zipWithIndex.toMap).apply(col(Gid)).as("__g"), col("t"), col("value"))
+      .localCheckpoint()
+      .select(typedLit(ids).apply(col("__g")).as(Gid), col("t"), col("value"))
     bp.targets.zipWithIndex.map { case (target, i) =>
-      val own = bp.generators.filter(g => target.generators.contains(g.id))
-      val routed = Dispatch.routeToTarget(
-        materialize(spark, if (own.isEmpty) bp else bp.copy(generators = own), seed), target)
+      val routed = Dispatch.routeToTarget(series, target)
       val sliceSize = target.raw.long("slice_size", 0L)
-      val sliced =
-        if (sliceSize > 0 && !target.groupDatapoints)
-          Dispatch.sliceDatapoints(routed, sliceSize)
-        else routed
+      val sliced = if (sliceSize > 0 && !target.groupDatapoints)
+        Dispatch.sliceDatapoints(routed, sliceSize) else routed
       val frame = (target.tpe, target.raw.string("action", "get")) match {
         case ("s3", "put")  => Sinks.fakeObjects(sliced, target, seed)
         case ("s3", _)      => Sinks.getRequests(sliced, target, seed)
         case ("cloudwatch", _) => Sinks.metricData(sliced, bp, timestamp)
-        case _ =>
-          Dispatch.envelopes(sliced, timestamp,
-            targetJson(target), target.groupDatapoints)
+        case _ => Dispatch.envelopes(sliced, timestamp, targetJson(target), target.groupDatapoints)
       }
       (i, target.tpe, frame)
     }

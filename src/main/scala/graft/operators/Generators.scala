@@ -11,7 +11,7 @@ import graft.functions.{Rng, Samplers}
  * canonical long IR frame `(generator_id STRING, t LONG, value DOUBLE)`,
  * fully codegen-friendly Column math.
  *
- * One generation path, [[series]], serves a whole blueprint and every
+ * One generation path, [[source]], serves a whole blueprint and every
  * per-shape entry point. The analytic shapes (sinusoidal, square,
  * constant, random, prefix-free custom) are ONE `spark.range(maxN)`
  * crossed with a parameter table (one row per generator, filtered to
@@ -21,8 +21,8 @@ import graft.functions.{Rng, Samplers}
  * table. So the plan grows with neither the generator count nor the
  * number of distinct parameter values, only with distinct formulas.
  * Prefix-referencing custom formulas and `real` replays are their own
- * sources, unioned in; then one scale stage rescales the shapes the
- * reference scales.
+ * sources, unioned in; then one scale stage ([[Transforms.scaleAndNoise]])
+ * rescales the shapes the reference scales.
  *
  * The reference dispatches by reflection (`'get_%s_timeseries' % shape`,
  * src/main.py:654-657); we dispatch with a match in [[kernelOf]].
@@ -33,10 +33,11 @@ object Generators {
 
   /** Dispatch on shape — mirror of the reference's reflective registry. */
   def forSpec(spark: SparkSession, gen: ResolvedGenerator, seed: Long): DataFrame =
-    series(spark, Seq(gen), seed)
+    Transforms.scaleAndNoise(source(spark, Seq(gen), seed), scaling(Seq(gen)), Nil, seed)
 
-  /** The scaled series of `gens`, one long frame (before noise/anomalies). */
-  def series(spark: SparkSession, gens: Seq[ResolvedGenerator], seed: Long): DataFrame = {
+  /** The series of `gens` before the scale stage, one long frame. */
+  private[operators] def source(spark: SparkSession, gens: Seq[ResolvedGenerator],
+      seed: Long): DataFrame = {
     val (analytic, own) = gens.map(g => g -> kernelOf(g)).partition(_._2.isDefined)
     val analyticFrame =
       if (analytic.isEmpty) Nil
@@ -46,9 +47,15 @@ object Generators {
         Replay.textSource(spark, g.id, g.config.string("key", ""), g.config.numPoints)
       else prefixSource(spark, g.id, formulaOf(g), g.config.numPoints)
     }
-    Transforms.scaleRange((analyticFrame ++ ownFrames).reduce(_ unionByName _),
-      gens.filter(scaled).map(g => (g.id, g.config.signalMin, g.config.signalMax)))
+    (analyticFrame ++ ownFrames).reduce(_ unionByName _)
   }
+
+  /** `(id, signal_min, signal_max)` of the generators the reference scales:
+    * all but constant, square and `random/triangular` (src/main.py:540-544). */
+  private[operators] def scaling(gens: Seq[ResolvedGenerator]): Seq[(String, Double, Double)] =
+    gens.filterNot(g => g.shape == "constant" || g.shape == "square" ||
+      g.shape == "random" && g.config.string("type", "uniform") == "triangular")
+      .map(g => (g.id, g.config.signalMin, g.config.signalMax))
 
   /**
    * S1 — sinusoidal (src/main.py:479-498): TimeSynth samples `num_points`
@@ -139,14 +146,6 @@ object Generators {
       if (Formula.usesPrefix(ast)) None else Some(Expr(ast))
     case "real" => None
     case other => throw new IllegalArgumentException(s"unknown shape '$other'")
-  }
-
-  /** The reference scales every shape but constant, square and
-    * `random/triangular` (src/main.py:540-544 returns it unscaled). */
-  private def scaled(g: ResolvedGenerator): Boolean = g.shape match {
-    case "constant" | "square" => false
-    case "random" => g.config.string("type", "uniform") != "triangular"
-    case _ => true
   }
 
   private def formulaOf(g: ResolvedGenerator): Formula.Ast =

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.blueprint.{AnomalySpec, Config, ResolvedGenerator}
+import graft.blueprint.{AnomalySpec, Config}
 import graft.dsl.Formula
 import graft.functions.Rng
 
@@ -12,16 +12,16 @@ import graft.functions.Rng
  *
  * Every statistic runs through one kernel, [[perGenerator]]: a
  * `groupBy(generator_id)` aggregate, broadcast back and joined on
- * `generator_id`. A whole blueprint takes each transform ONCE: one
- * aggregate for all its generators, whose per-generator bounds ride in
- * that statistics table as data (a driver-side `(id, lo, hi)` table
- * joined in before the broadcast) and are read by one expression. So the
- * plan, and the work per row, scale with data volume and the number of
- * transform stages, not with the series count or with how many distinct
- * parameter values the series have. Only code is not data: each distinct
- * anomaly formula is one branch of a [[pick]], which costs a row
- * O(log formulas) comparisons. No `Window.partitionBy()` over the whole
- * frame, no `collect()`.
+ * `generator_id`. A whole blueprint takes each transform ONCE (scale and
+ * noise share one, [[scaleAndNoise]]): one aggregate for all its
+ * generators, whose per-generator bounds ride in that statistics table as
+ * data (a driver-side table joined in before the broadcast) and are read
+ * by one expression. So the plan, and the work per row, scale with data
+ * volume and the number of transform stages, not with the series count
+ * or with how many distinct parameter values the series have. Only code
+ * is not data: each distinct anomaly formula is one branch of a [[pick]],
+ * which costs a row O(log formulas) comparisons. No
+ * `Window.partitionBy()` over the whole frame, no `collect()`.
  *
  * The single-series entry points ([[scaleRange]], [[applyNoise]],
  * [[applyAnomalies]]) run the same stages with one `[lo, hi]` for every
@@ -36,9 +36,7 @@ object Transforms {
    * rows where `in` holds, add the stage's per-generator parameters with
    * `params`, broadcast the statistics back, rewrite `value` and drop
    * them again. The join is a left join: generators outside `in` find no
-   * statistics row, and a later stage that reads none of these columns
-   * (noise draws ignore `value`) drops the join, and this aggregate, from
-   * its plan.
+   * statistics row and keep their `value`.
    */
   private def perGenerator(df: DataFrame, in: Column, aggs: Seq[Column],
       params: DataFrame => DataFrame = identity)(value: Column): DataFrame = {
@@ -57,27 +55,14 @@ object Transforms {
    * page (16 MB with a 2 GB heap on local[2]) per statistics table, alive
    * until the broadcast is cleaned; a long key builds a hash map sized
    * to the table. The key comparison stays a residual condition, so a
-   * hash collision can never merge two generators.
+   * hash collision can never merge two generators. Shared with the
+   * cloudwatch sink's shape lookup.
    */
-  private def byGenerator(df: DataFrame, table: DataFrame, keys: (String, String)*): DataFrame =
+  private[graft] def byGenerator(df: DataFrame, table: DataFrame, keys: (String, String)*): DataFrame =
     df.join(broadcast(table),
       xxhash64(keys.map(k => col(k._1)): _*) === xxhash64(keys.map(k => col(k._2)): _*) &&
         coalesce(keys.map { case (a, b) => col(a) === col(b) }.reduce(_ && _), lit(false)),
       "left")
-
-  /**
-   * A stage's per-generator bounds: the generators `(id, lo, hi)` lists,
-   * and their bounds joined into the statistics table as `__lo`/`__hi`.
-   */
-  private def bounds(rows: Seq[(String, Double, Double)]): (Column, DataFrame => DataFrame) =
-    col(Gid).isin(rows.map(_._1): _*) -> { stats =>
-      import stats.sparkSession.implicits._
-      byGenerator(stats, rows.toDF("__pg", "__lo", "__hi"), "__sg" -> "__pg").drop("__pg")
-    }
-
-  /** One `[lo, hi]` for every row of the frame. */
-  private def bounds(lo: Double, hi: Double): (Column, DataFrame => DataFrame) =
-    lit(true) -> (_.withColumn("__lo", lit(lo)).withColumn("__hi", lit(hi)))
 
   /**
    * `values(i)` where `index` is `i`: a balanced tree of CASEs, so a row
@@ -89,6 +74,32 @@ object Transforms {
       val (l, r) = values.splitAt(values.size / 2)
       when(index < from + l.size, pick(index, l, from)).otherwise(pick(index, r, from + l.size))
     }
+
+  /** A min-max rescale: the column rescaled, and its fold into `value`. */
+  private type Rescale = (Column, (Column, Column) => Column)
+  private val Scale: Rescale = (col("value"), (_, scaled) => scaled)
+  private def noise(seed: Long): Rescale =
+    (Rng.gaussian(seed, "noise", col(Gid), col("t")), (v, n) => greatest(lit(0.0), v + n))
+
+  /** One min-max statistics stage: one aggregate of each part's column
+    * min/max over the rows its filter keeps; `params` adds `__b`, element
+    * i part i's `(lo, hi)` or null; the parts fold into `value` in order. */
+  private def minMaxStage(df: DataFrame, in: Column, params: DataFrame => DataFrame,
+      parts: Seq[(Column, Rescale)]): DataFrame = {
+    val ix = parts.zipWithIndex
+    perGenerator(df, in, ix.flatMap { case ((keep, (x, _)), i) =>
+      Seq(min(when(keep, x)).as(s"__mn$i"), max(when(keep, x)).as(s"__mx$i")) }, params)(
+      ix.foldLeft(col("value")) { case (v, ((_, (x, f)), i)) =>
+        val b = col("__b")(i)
+        when(b.isNull, v).otherwise(f(v,
+          scaledExpr(x, col(s"__mn$i"), col(s"__mx$i"), b("_1"), b("_2"))))
+      })
+  }
+
+  /** [[minMaxStage]] with one `[lo, hi]` for every row of the frame. */
+  private def minMaxStage(df: DataFrame, lo: Double, hi: Double, part: Rescale): DataFrame =
+    minMaxStage(df, lit(true),
+      _.withColumn("__b", array(struct(lit(lo).as("_1"), lit(hi).as("_2")))), Seq(lit(true) -> part))
 
   /**
    * Min-max rescale each generator's series to [lo, hi], then ceil —
@@ -103,27 +114,9 @@ object Transforms {
    *    a 1-ulp difference at the series argmin flips `ceil` by 1).
    */
   def scaleRange(df: DataFrame, lo: Double, hi: Double): DataFrame =
-    minMaxStage(df, bounds(lo, hi), col("value"))(identity)
-
-  /** [[scaleRange]] over a whole blueprint: each listed generator
-    * `(id, lo, hi)` is rescaled to its own bounds; unlisted generators
-    * pass through unscaled. */
-  def scaleRange(df: DataFrame, rows: Seq[(String, Double, Double)]): DataFrame =
-    if (rows.isEmpty) df else minMaxStage(df, bounds(rows), col("value"))(identity)
-
-  /** Min-max rescale `x` per generator to its `[__lo, __hi]` (the stage's
-    * generators only) and fold the result into `value` with `f`. */
-  private def minMaxStage(df: DataFrame, stage: (Column, DataFrame => DataFrame),
-      x: Column)(f: Column => Column): DataFrame =
-    perGenerator(df, stage._1, Seq(min(x).as("__mn"), max(x).as("__mx")), stage._2)(
-      when(col("__lo").isNull, col("value")).otherwise(
-        f(scaledExpr(x, col("__mn"), col("__mx"), col("__lo"), col("__hi")))))
+    minMaxStage(df, lo, hi, Scale)
 
   /** The scale expression itself, reusable on any column. */
-  def scaledExpr(v: Column, mn: Column, mx: Column, lo: Double, hi: Double): Column =
-    scaledExpr(v, mn, mx, lit(lo), lit(hi))
-
-  /** [[scaledExpr]] with the bounds as columns (per-generator data). */
   def scaledExpr(v: Column, mn: Column, mx: Column, lo: Column, hi: Column): Column = {
     val std = (v - mn) / (mx - mn)
     val scaled = std * (hi - lo) + lo
@@ -139,20 +132,24 @@ object Transforms {
    * truthiness gate at src/main.py:599).
    */
   def applyNoise(df: DataFrame, cfg: Config, seed: Long): DataFrame =
-    if (!cfg.noiseEnabled) df else noiseStage(df, bounds(cfg.noiseMin, cfg.noiseMax), seed)
+    if (!cfg.noiseEnabled) df else minMaxStage(df, cfg.noiseMin, cfg.noiseMax, noise(seed))
 
-  /** [[applyNoise]] over a whole blueprint: one noise stage for every
-    * generator whose config enables noise, each at its own bounds. */
-  def applyNoise(df: DataFrame, gens: Seq[ResolvedGenerator], seed: Long): DataFrame = {
-    val noisy = gens.filter(_.config.noiseEnabled)
-      .map(g => (g.id, g.config.noiseMin, g.config.noiseMax))
-    if (noisy.isEmpty) df else noiseStage(df, bounds(noisy), seed)
+  /** [[scaleRange]] then [[applyNoise]] over a whole blueprint, for the
+    * generators `(id, lo, hi)` each lists (others pass), in ONE stage: the
+    * noise draws depend only on `(seed, generator_id, t)`, so their min/max
+    * share the values' `groupBy(generator_id)` and one bounds table. */
+  def scaleAndNoise(df: DataFrame, scale: Seq[(String, Double, Double)],
+      noise: Seq[(String, Double, Double)], seed: Long): DataFrame = {
+    val live = Seq(scale -> Scale, noise -> this.noise(seed)).filter(_._1.nonEmpty)
+    if (live.isEmpty) return df
+    val ids = live.flatMap(_._1.map(_._1)).distinct
+    val byId = live.map(_._1.map(r => r._1 -> (r._2, r._3)).toMap)
+    val table = df.sparkSession.createDataFrame(ids.map(id => (id, byId.map(_.get(id)))))
+      .toDF("__pg", "__b")
+    minMaxStage(df, col(Gid).isin(ids: _*),
+      stats => byGenerator(stats, table, "__sg" -> "__pg").drop("__pg"),
+      live.map { case (rows, part) => col(Gid).isin(rows.map(_._1): _*) -> part })
   }
-
-  private def noiseStage(df: DataFrame, stage: (Column, DataFrame => DataFrame),
-      seed: Long): DataFrame =
-    minMaxStage(df, stage, Rng.gaussian(seed, "noise", col(Gid), col("t")))(
-      noise => greatest(lit(0.0), col("value") + noise))
 
   /**
    * Anomaly injection — reference `apply_anomalies` (src/main.py:606-641).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.blueprint.{Blueprint, TargetSpec}
 import graft.functions.{FakeData, Rng}
+import graft.operators.Transforms
 import graft.operators.Transforms.Gid
 
 /**
@@ -153,13 +154,15 @@ object Sinks {
    * K2 — CloudWatch metric data stand-in (src/main.py:884-913): one row
    * per datapoint, `(ts, shape, id, value)` with MetricName="Timeseries",
    * Unit="Count". Shape is looked up from the blueprint
-   * (`get_generator_shape`, src/main.py:1059-1069) via a broadcast join.
+   * (`get_generator_shape`, src/main.py:1059-1069) via a broadcast join
+   * keyed on the hashed generator id ([[Transforms.byGenerator]], a left
+   * join: an id the blueprint does not name keeps its row, shape null).
    */
   def metricData(routed: DataFrame, bp: Blueprint, timestamp: Column): DataFrame = {
     val spark = routed.sparkSession
     import spark.implicits._
-    val shapes = bp.generators.map(g => (g.id, g.shape)).toDF(Gid, "shape")
-    routed.join(broadcast(shapes), Gid)
+    val shapes = bp.generators.map(g => (g.id, g.shape)).toDF("__sg", "shape")
+    Transforms.byGenerator(routed, shapes, Gid -> "__sg")
       .select(
         timestamp.as("ts"),
         lit("Timeseries").as("metric_name"),

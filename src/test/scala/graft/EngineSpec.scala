@@ -161,16 +161,23 @@ class EngineSpec extends SparkSpec {
     env.getAs[String]("target") should not include "generators"
   }
 
-  test("SampleBlueprint-shaped blueprint runs end to end (full reference surface)") {
-    // Mirrors resources/SampleBlueprint.json structurally (6 generators
-    // incl. a `real` replay file; 3 sensitive-content put targets, a
-    // sliced get target, a grouped lambda target, cloudwatch) with
-    // num_points scaled 10000 → 200 so the spec stays fast. This is the
-    // "a user of the reference switches their blueprint over" golden.
-    val replayFile = java.nio.file.Files.createTempFile("graft-replay", ".dat")
-    java.nio.file.Files.writeString(replayFile,
+  /** A replay file for the `real` shape: one value per line, blank lines
+    * between. */
+  private def replayFile(): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile("graft-replay", ".dat")
+    java.nio.file.Files.writeString(f,
       (1 to 120).map(i => if (i % 7 == 0) "" else s"${i % 30}").mkString("\n"))
-    val bp = BlueprintParser.parse(
+  }
+
+  private val Ts = to_timestamp(lit("2026-01-01 00:00:00"))
+
+  /** Mirrors resources/SampleBlueprint.json structurally (6 generators
+    * incl. a `real` replay of `replay`; 3 sensitive-content put targets, a
+    * sliced get target, a grouped lambda target, cloudwatch) with
+    * num_points scaled 10000 → 200 so the specs stay fast; `moreTargets`
+    * are appended to the targets. */
+  private def sampleBlueprint(replay: java.nio.file.Path, moreTargets: String = "") =
+    BlueprintParser.parse(
       s"""{
          | "commons": {"num_points": 200, "signal_min": 1, "signal_max": 10,
          |             "noise_min": -5, "noise_max": 5,
@@ -182,7 +189,7 @@ class EngineSpec extends SparkSpec {
          |      "anomalies":{"start":80,"end":85,"counts":1}}},
          |  {"id":"ts3","shape":"random","config":{"type":"uniform"}},
          |  {"id":"ts4","shape":"square","config":{"high_value":40,"low_value":10,"high_width":5,"low_width":10}},
-         |  {"id":"ts5","shape":"real","config":{"bucket":"test-bucket","key":"${replayFile.toString}"}},
+         |  {"id":"ts5","shape":"real","config":{"bucket":"test-bucket","key":"${replay.toString}"}},
          |  {"id":"ts6","shape":"custom","config":{"formula":"t * 10"}}
          | ],
          | "targets": [
@@ -198,8 +205,14 @@ class EngineSpec extends SparkSpec {
          |   "generators":["ts3","ts4"]},
          |  {"type":"lambda","function":"test","generators":["ts1"],"group_datapoints":true},
          |  {"type":"cloudwatch","namespace":"Test/Timeseries",
-         |   "generators":["ts1","ts2","ts3","ts4","ts5","ts6"],"group_datapoints":true}
+         |   "generators":["ts1","ts2","ts3","ts4","ts5","ts6"],"group_datapoints":true}$moreTargets
          | ]}""".stripMargin)
+
+  test("SampleBlueprint-shaped blueprint runs end to end (full reference surface)") {
+    // This is the "a user of the reference switches their blueprint over"
+    // golden.
+    val replay = replayFile()
+    val bp = sampleBlueprint(replay)
 
     val series = Engine.materialize(spark, bp, 42L).cache()
     // every generator materializes at its own length; values are longs
@@ -208,8 +221,7 @@ class EngineSpec extends SparkSpec {
     lens shouldBe Map("ts1" -> 200L, "ts2" -> 50L, "ts3" -> 200L,
       "ts4" -> 200L, "ts5" -> 200L, "ts6" -> 200L)
 
-    val frames = Engine.execute(spark, bp, 42L,
-      to_timestamp(lit("2026-01-01 00:00:00")))
+    val frames = Engine.execute(spark, bp, 42L, Ts)
     frames.map(_._2) shouldBe Seq("s3", "s3", "s3", "s3", "lambda", "cloudwatch")
 
     def routedSum(gens: Seq[String]): Long = series
@@ -243,11 +255,59 @@ class EngineSpec extends SparkSpec {
 
     // end-to-end determinism: a second execution produces byte-identical
     // activity (same seed → same noise, anomalies, draws, fake content)
-    val again = Engine.execute(spark, bp, 42L,
-      to_timestamp(lit("2026-01-01 00:00:00")))
+    val again = Engine.execute(spark, bp, 42L, Ts)
     again(0)._3.collect().map(_.toString).sorted shouldBe
       putRows.collect().map(_.toString).sorted
-    java.nio.file.Files.delete(replayFile)
+    java.nio.file.Files.delete(replay)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("execute derives the series once") {
+    val replay = replayFile()
+    val bp = sampleBlueprint(replay, moreTargets =
+      """,{"type":"lambda","function":"idle","generators":["absent"],"group_datapoints":true}""")
+    val frames = Engine.execute(spark, bp, 42L, Ts)
+    frames.size shouldBe 7
+    // every target frame reads the checkpoint: no generator source left
+    for ((i, _, frame) <- frames; plan = frame.queryExecution.executedPlan.toString)
+      withClue(s"target $i: ") {
+        plan should not include "Range ("
+        plan should not include "FileScan"
+      }
+    // each target equals its own sub-blueprint materialized on its own and
+    // routed (values depend only on (seed, generator_id, t) and the
+    // generator's own statistics)
+    for ((i, _, frame) <- frames.init) withClue(s"target $i: ") {
+      val target = bp.targets(i)
+      val own = bp.copy(generators = bp.generators.filter(g => target.generators.contains(g.id)),
+        targets = Seq(target))
+      sortedRows(frame) shouldBe sortedRows(Engine.execute(spark, own, 42L, Ts).head._3)
+    }
+    // a target naming no generator of the blueprint: no rows, usual schema
+    frames.last._3.count() shouldBe 0L
+    frames.last._3.schema shouldBe frames(4)._3.schema
+    java.nio.file.Files.delete(replay)
+  }
+
+  test("execute derives afresh on every call: a rewritten replay file is followed") {
+    val replay = replayFile()
+    val bp = sampleBlueprint(replay)
+    def real(frames: Seq[(Int, String, org.apache.spark.sql.DataFrame)]): Seq[Double] =
+      frames.last._3.where(col("id") === "ts5").select("value").collect().map(_.getDouble(0)).toSeq.sorted
+    def materialized: Seq[Double] = Engine.materialize(spark, bp, 42L)
+      .where(col("generator_id") === "ts5").select("value").collect().map(_.getLong(0).toDouble).toSeq.sorted
+    val before = materialized
+    val first = Engine.execute(spark, bp, 42L, Ts)
+    real(first) shouldBe before
+    java.nio.file.Files.writeString(replay, (1 to 150).map(i => s"${(i * 7) % 11}").mkString("\n"))
+    val after = materialized
+    after should not be before
+    real(Engine.execute(spark, bp, 42L, Ts)) shouldBe after
+    // the first call's frames keep the series derived when it ran
+    real(first) shouldBe before
+    java.nio.file.Files.delete(replay)
   }
 
   test("batched delivery chunks per partition (D2, ≤10 per call)") {
