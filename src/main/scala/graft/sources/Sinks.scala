@@ -171,15 +171,9 @@ object Sinks {
         lit("Count").as("unit"))
   }
 
-  /**
-   * K3 — Lambda-callback stand-in (src/main.py:915-929): the delivery log
-   * is simply the envelope frame persisted; callers may also register a
-   * local callback executed via foreachPartition.
-   */
-  def deliveryLog(envelopes: DataFrame): DataFrame = envelopes
-
-  /** Side-effecting delivery for K3 when a real callback is registered —
-    * the only imperative escape hatch, executed per partition. */
+  /** K3 — Lambda-callback stand-in (src/main.py:915-929): side-effecting
+    * delivery when a real callback is registered — the only imperative
+    * escape hatch, executed per partition. */
   def deliver(envelopes: DataFrame, callback: String => Unit): Unit =
     envelopes.toJSON.foreachPartition { it: Iterator[String] => it.foreach(callback) }
 

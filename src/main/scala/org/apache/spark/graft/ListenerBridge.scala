@@ -9,5 +9,8 @@ import org.apache.spark.SparkContext
 object ListenerBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMs: Long): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
-    catch { case _: java.util.concurrent.TimeoutException => () }
+    catch { case _: java.util.concurrent.TimeoutException =>
+      System.err.println(s"[listener] bus not drained after $timeoutMs ms; " +
+        "counts read now may miss events still queued")
+    }
 }

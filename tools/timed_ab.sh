@@ -1,7 +1,7 @@
 #!/bin/bash
-# Load-gated TimeQueries runner for the noisy-neighbor box (r21 protocol):
+# Load-gated `Probe time` runner for the noisy-neighbor box (r21 protocol):
 # waits for 1-min loadavg < 0.5 (up to 90x10 s; a timed-out wait is
-# logged and the try launches anyway), runs TimeQueries min-of-4 on the given
+# logged and the try launches anyway), runs `Probe time` min-of-4 on the given
 # queries (x_vocab_stats control always prepended), and accepts the session
 # only if the control min is <= $CONTROL_MAX (default 0.30 s; committed
 # uncontended band is 0.19-0.28). Retries up to $TRIES sessions.
@@ -18,7 +18,7 @@ for t in $(seq 1 "$TRIES"); do
   done
   [ "$gated" = 1 ] || echo "[timed_ab] WARNING: try $t load gate timed out after 90x10 s; launching anyway" >&2
   echo "[timed_ab] try $t launching at load $(cut -d' ' -f1 /proc/loadavg)" >&2
-  SPARK_GRAFT_TIME_RUNS=4 sbt "runMain graft.examples.TimeQueries /root/testdata/sf0.1 x_vocab_stats $*" 2>/dev/null \
+  SPARK_GRAFT_BENCH_RUNS=4 sbt "runMain graft.examples.Probe time /root/testdata/sf0.1 x_vocab_stats $*" 2>/dev/null \
     | grep TIME_MIN > "$OUT.try$t"
   CTRL=$(awk '$2=="x_vocab_stats"{print $3}' "$OUT.try$t")
   if [ -n "$CTRL" ] && awk -v c="$CTRL" -v m="$CONTROL_MAX" 'BEGIN{exit !(c <= m)}'; then
