@@ -3,8 +3,10 @@ package graft.examples
 import scala.collection.mutable
 
 import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.{Bench, SparkEntry}
 
@@ -17,17 +19,21 @@ import graft.{Bench, SparkEntry}
  *    query, as `TIME <q> run<i> <s> s` lines and `TIME_MIN <q> <s> s`.
  *  - `scaling <root>`: the SCALING.md family (by default) at
  *    `<root>/sf0.001`, `sf0.01` and `sf0.1`, one JSON line per (query, sf).
- *  - `cost <sfDir>`: two runs per query, each a `STATS` line of totals and
- *    one `JOB` line per Spark job — the per-round job overhead of
- *    loop-shaped queries that no final plan shows.
+ *  - `cost <sfDir>`: two runs per query, each a `STATS` line of totals
+ *    (with the whole-stage and expression classes the run compiled, and
+ *    their compile time) and one `JOB` line per Spark job — the
+ *    per-round job overhead of loop-shaped queries that no final plan
+ *    shows.
  *  - `explain <sfDir>`: the formatted physical plan.
  *  - `plan <sfDir>`: the executed plan after `collect`, and its `Exchange`
  *    lines and their count.
+ *  - `entry`: the row count of `SparkEntry.entry`'s frame, as
+ *    `ENTRY_ROWS=<n>` (no directory).
  *
  * usage: runMain graft.examples.Probe <mode> <dir> [query ...]
  */
 object Probe {
-  private val Usage = "usage: Probe <time|scaling|cost|explain|plan> <dir> [query ...]"
+  private val Usage = "usage: Probe <time|scaling|cost|explain|plan> <dir> [query ...] | Probe entry"
 
   private val ScalingQueries = Seq("x_minhash_pairs", "x_substring_dedup",
     "x_jaccard_pairs", "x_dedup_clusters", "x_recipe_e2e",
@@ -94,9 +100,11 @@ object Probe {
       copy(stages = stages + s, tasks = tasks + t, taskMs = taskMs + ms)
   }
 
-  /** One run's wall time, its scheduler totals, and its jobs in start order. */
+  /** One run's wall time, its scheduler totals, the generated classes it
+    * compiled and their compile time (Spark's codegen cache misses), and
+    * its jobs in start order. */
   final case class RunCost(wall: Double, jobs: Int, stages: Int, tasks: Int,
-      taskMs: Long, perJob: Seq[JobCost])
+      taskMs: Long, compiles: Long, compileMs: Double, perJob: Seq[JobCost])
 
   /** Counts every job, completed stage and ended task since `reset`, in
     * total and per job (a stage belongs to the last started job that
@@ -124,15 +132,18 @@ object Probe {
     def reset(): Unit = synchronized {
       jobs.clear(); stageJob.clear(); total = JobCost(-1, "", 0, 0, 0L)
     }
-    def result(wall: Double): RunCost = synchronized {
-      RunCost(wall, jobs.size, total.stages, total.tasks, total.taskMs, jobs.values.toList)
+    def result(wall: Double, compiles: Long, compileMs: Double): RunCost = synchronized {
+      RunCost(wall, jobs.size, total.stages, total.tasks, total.taskMs,
+        compiles, compileMs, jobs.values.toList)
     }
   }
 
   /** Runs `name` twice in Bench's timed region under one listener; the
     * first run pays one-off work (caches, codegen) that the second
     * reuses. The bus is drained around each run, so a run counts only
-    * its own events. */
+    * its own events. Compiles and compile time are the deltas of Spark's
+    * JVM-wide codegen counters (`CodegenMetrics`, `CodeGenerator`)
+    * around the run. */
   def cost(spark: SparkSession, sfDir: String, name: String): Seq[RunCost] = {
     val sc = spark.sparkContext
     val listener = new CostListener
@@ -140,11 +151,19 @@ object Probe {
     try (1 to 2).map { _ =>
       ListenerBridge.waitUntilListenerBusEmpty(sc, 10000)
       listener.reset()
+      val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       val wall = Bench.timed(spark, sfDir, SparkEntry.queries(name))
+      val (c1, ns1) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       ListenerBridge.waitUntilListenerBusEmpty(sc, 10000)
-      listener.result(wall)
+      listener.result(wall, c1 - c0, (ns1 - ns0) / 1e6)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The `STATS` line of run `i` of query `name`. */
+  def statsLine(name: String, i: Int, r: RunCost): String =
+    f"STATS $name run$i wall=${r.wall}%.2f s jobs=${r.jobs}%d " +
+      f"stages=${r.stages}%d tasks=${r.tasks}%d taskTime=${r.taskMs / 1000.0}%.1f s " +
+      f"compiles=${r.compiles}%d compile_ms=${r.compileMs}%.1f"
 
   /** Collects `name`, then returns its executed (final adaptive) plan and
     * that plan's `Exchange` lines. */
@@ -156,6 +175,12 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
+    if (args.toSeq == Seq("entry")) {
+      val spark = Bench.session()
+      println("ENTRY_ROWS=" + SparkEntry.entry(spark).count())
+      spark.stop()
+      return
+    }
     require(args.length >= 2, Usage)
     val Array(mode, dir) = args.take(2)
     val names =
@@ -185,8 +210,7 @@ object Probe {
       }
       case "cost" => names.foreach { n =>
         cost(spark, dir, n).zipWithIndex.foreach { case (r, i) =>
-          println(f"STATS $n run${i + 1} wall=${r.wall}%.2f s jobs=${r.jobs}%d " +
-            f"stages=${r.stages}%d tasks=${r.tasks}%d taskTime=${r.taskMs / 1000.0}%.1f s")
+          println(statsLine(n, i + 1, r))
           r.perJob.foreach { j =>
             println(f"  JOB ${j.id}%3d stages=${j.stages}%3d tasks=${j.tasks}%4d " +
               f"taskTime=${j.taskMs / 1000.0}%7.2f s  ${j.site}")

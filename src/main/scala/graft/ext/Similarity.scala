@@ -14,8 +14,11 @@ import org.apache.spark.sql.functions._
  *  - [[lshTopK]]: random-hyperplane LSH bucketing; only colliding buckets
  *    are scored. The 100 TB path — candidate set shrinks ~2^planes-fold.
  *
- * All vector math is codegen'd Column expressions (`zip_with` +
- * `aggregate`), computed in double; no UDFs in the hot path.
+ * Vector math is computed in double by native kernels of
+ * [[graft.plans.Native]]: the dot product, PQ codes and the
+ * nearest-centroid rule as codegen'd expressions, and each k-means
+ * (Lloyd) pass as one fused loop over the raw vectors. No UDFs in the
+ * hot path.
  */
 object Similarity {
 
@@ -216,106 +219,101 @@ object Similarity {
     df.withColumn("bucket", bucketBits.reduce((a: Column, b: Column) => a.bitwiseOR(b)))
   }
 
-  /** Nearest-centroid ids of `v` as a plan-time expression: squared L2
-    * via -2·v·c + ||c||² (||v||² constant per row), ascending sort →
-    * first `probes` centroid ids. Shared by training, assignment, and
-    * probing, so the three can never diverge. No centroids (an empty
-    * or all-null corpus) give a null id array: no cell. */
+  /** Nearest-centroid ids of `v`: squared L2 via ‖c‖² − 2·v·c (‖v‖²
+    * constant per row), ascending, ties to the smaller id → the first
+    * `probes` centroid ids ([[graft.plans.Native.nearestIds]], which the
+    * Lloyd pass calls too). Shared by training, assignment, and probing,
+    * so the three can never diverge. No centroids (an empty or all-null
+    * corpus) give a null id array: no cell. */
   private def nearestCentroidCol(v: Column, cents: Array[Seq[Double]],
-      probes: Int): Column = {
-    val scored = cents.zipWithIndex.map { case (cent, i) =>
-      val centCol = array(cent.map(lit): _*)
-      val normSq = cent.map(x => x * x).sum
-      struct((lit(normSq) - lit(2.0) * dot(v, centCol)).as("d"), lit(i).as("cid"))
-    }
+      probes: Int): Column =
     if (cents.isEmpty) lit(null).cast("array<int>")
-    else slice(transform(array_sort(array(scored: _*)), s => s.getField("cid")), 1, probes)
-  }
+    else graft.plans.NativeFunctions.nearestCentroids(v, cents.toSeq, probes)
 
   /**
    * The one deterministic k-means of this object: `m` independent
    * codebooks of up to `k` centroids, each over a contiguous
    * `dims/m`-wide slice of `vecCol`, trained on the checkpointed
-   * `(idCol, vecCol)` frame `base`. `codes` maps the current codebooks
-   * to an `array<int>` expression holding each row's `m` cell ids.
-   * IVF is `m = 1` with [[nearestCentroidCol]]; PQ is `m` subspaces
-   * with the `pqCodes` kernel.
+   * `(idCol, vecCol)` frame `base`. IVF is `m = 1` over the raw vector
+   * (`pqDims` None; `dims` = the widest init row), assigned by the
+   * nearest-centroid rule; PQ (`pqDims` = Some(dims)) is `m` subspaces
+   * of the L2-normalized vector, assigned by the `pqCodes` argmin.
    *
    *  - Init: the `k` rows first by md5 rank of (seed, id) — replayable
    *    in DuckDB, unlike xxhash64 — the SAME member rows for every
-   *    codebook. Fewer rows give fewer centroids; an empty frame gives
-   *    `m` empty codebooks.
-   *  - Each Lloyd pass is ONE scan job: the assignment and the 1e-9
-   *    grid quantization stay whole-stage codegen in one projection;
-   *    per-partition long partials (sums, counts) merge driver-side
-   *    through `RDD.reduce`. Long additions are order-independent, so
+   *    codebook (PQ normalizes them as the pass does). Fewer rows give
+   *    fewer centroids; an empty frame gives `m` empty codebooks. A
+   *    null element of an init row reads as 0.0, as the distances read
+   *    it.
+   *  - Each Lloyd pass is ONE scan job over the vector column alone:
+   *    [[graft.plans.Native.LloydPartial]] assigns each raw vector,
+   *    normalizes it for PQ, and adds its `round(x * 1e9)` grid values
+   *    to per-partition long partials (sums, counts), which
+   *    `RDD.reduce` merges. Long additions are order-independent, so
    *    the means do not follow partitioning order (a float `avg`
-   *    would). No shuffle; the driver holds one m·k·(dims/m) partial
+   *    would). No shuffle; the merge holds one m·k·(dims/m) partial
    *    at a time. A null vector element adds nothing to its sum but
    *    its row still counts, as in a SQL `sum` / `count(*)` mean.
    *  - An empty cell carries its previous centroid forward.
    *  - A null vector takes no part in init or in any pass. A vector
-   *    shorter than the widest init row fails the pass with Spark's
-   *    array index error (ANSI mode, Spark's default).
+   *    shorter than `dims` fails the pass with Spark's array index
+   *    error, and a NaN, infinite or out-of-range value with its cast
+   *    overflow error (ANSI mode, Spark's default).
    */
   private def lloyd(base: DataFrame, m: Int, k: Int, iters: Int, seed: Long,
-      idCol: String, vecCol: String)(
-      codes: Array[Array[Seq[Double]]] => Column): Array[Array[Seq[Double]]] = {
+      idCol: String, vecCol: String,
+      pqDims: Option[Int]): Array[Array[Array[Double]]] = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
     val live = base.where(col(vecCol).isNotNull)
     val init = live
       .orderBy(graft.functions.Rng.uniform(seed, "ivf/init", col(idCol)), col(idCol))
       .limit(k).select(col(vecCol)).collect()
-      .map(_.getSeq[Any](0).map(x => x.asInstanceOf[Number].doubleValue()))
-    val dims = if (init.isEmpty) 0 else init.map(_.length).max
+      .map(_.getSeq[Any](0).map {
+        case null => 0.0
+        case x => x.asInstanceOf[Number].doubleValue()
+      }.toArray)
+    val dims = if (init.isEmpty) 0 else pqDims.getOrElse(init.map(_.length).max)
+    val starts = if (pqDims.isEmpty) init else init.map { v =>
+      val xs = new Array[Double](dims)
+      graft.plans.Native.loadVector(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
+        isFloat = false, normalize = true, strict = false, xs, null)
+      xs
+    }
     val sub = dims / m
     val kk = init.length
-    var books = Array.tabulate(m)(s => init.map(_.slice(s * sub, (s + 1) * sub)))
+    var books = Array.tabulate(m)(s => starts.map(_.slice(s * sub, (s + 1) * sub)))
+    // the pass reads float or double elements; any other element type
+    // is cast once, as `element_at(v, i).cast("double")` read it
+    val (vec, isFloat) = base.schema(vecCol).dataType match {
+      case ArrayType(FloatType, _) => (col(vecCol), true)
+      case ArrayType(DoubleType, _) => (col(vecCol), false)
+      case _ => (col(vecCol).cast("array<double>"), false)
+    }
+    val vectors = live.select(vec).queryExecution.toRdd
+    val ansi = base.sparkSession.sessionState.conf.ansiEnabled
+    val normalize = pqDims.isDefined
     var it = 0
     while (it < iters && dims > 0) {
-      val proj = live.select((codes(books).as("__codes") +:
-        (0 until dims).map(i =>
-          round(element_at(col(vecCol), i + 1).cast("double") * lit(1e9))
-            .cast("long").as(s"__l$i"))): _*)
-      val (sums, counts) = proj.queryExecution.toRdd.mapPartitions { rows =>
-        val s = Array.ofDim[Long](m, kk, sub)
-        val n = Array.ofDim[Long](m, kk)
-        while (rows.hasNext) {
-          val r = rows.next()
-          val cs = r.getArray(0)
-          var si = 0
-          while (si < m) {
-            val cid = cs.getInt(si)
-            n(si)(cid) += 1L
-            var p = 0
-            while (p < sub) {
-              val c = 1 + si * sub + p
-              if (!r.isNullAt(c)) s(si)(cid)(p) += r.getLong(c)
-              p += 1
-            }
-            si += 1
-          }
-        }
-        Iterator.single((s, n))
+      val cur = books
+      val (sums, counts) = vectors.mapPartitions { rows =>
+        val acc = new graft.plans.Native.LloydPartial(cur, sub, isFloat, normalize, ansi)
+        while (rows.hasNext) acc.add(rows.next().getArray(0))
+        Iterator.single((acc.sums, acc.n))
       }.reduce { case ((s1, n1), (s2, n2)) =>
-        var si = 0
-        while (si < m) {
-          var ci = 0
-          while (ci < kk) {
-            n1(si)(ci) += n2(si)(ci)
-            var p = 0
-            while (p < sub) { s1(si)(ci)(p) += s2(si)(ci)(p); p += 1 }
-            ci += 1
-          }
-          si += 1
-        }
+        var i = 0
+        while (i < s1.length) { s1(i) += s2(i); i += 1 }
+        i = 0
+        while (i < n1.length) { n1(i) += n2(i); i += 1 }
         (s1, n1)
       }
       // same op order as the SQL mean the oracle replays:
       // sum.cast(double) / (count.cast(double) * 1e9)
       books = Array.tabulate(m, kk) { (si, j) =>
-        if (counts(si)(j) == 0L) books(si)(j)
-        else (0 until sub).map(p =>
-          sums(si)(j)(p).toDouble / (counts(si)(j).toDouble * 1e9))
+        val cell = si * kk + j
+        if (counts(cell) == 0L) books(si)(j)
+        else Array.tabulate(sub)(p =>
+          sums(cell * sub + p).toDouble / (counts(cell).toDouble * 1e9))
       }
       it += 1
     }
@@ -330,8 +328,8 @@ object Similarity {
   private def trainAndAssign(corpus: DataFrame, nCentroids: Int, iters: Int,
       seed: Long, idCol: String, vecCol: String): (Array[Seq[Double]], DataFrame) = {
     val base = corpus.select(col(idCol), col(vecCol)).localCheckpoint()
-    val centroids = lloyd(base, 1, nCentroids, iters, seed, idCol, vecCol)(
-      cs => nearestCentroidCol(col(vecCol), cs.head, 1)).head
+    val centroids = lloyd(base, 1, nCentroids, iters, seed, idCol, vecCol, None)
+      .head.map(_.toSeq)
     (centroids, base.withColumn("cid",
       element_at(nearestCentroidCol(col(vecCol), centroids, 1), 1)))
   }
@@ -350,7 +348,8 @@ object Similarity {
   // ===== Product quantization (PQ) ====================================
 
   /** L2-normalized `sub`-dim slice starting at 0-based `off` — the
-    * PQ preprocessing that makes squared-L2 ranking ≡ cosine ranking.
+    * PQ query preprocessing of [[pqAdcRank]] that makes squared-L2
+    * ranking ≡ cosine ranking.
     * Deliberately UNROLLED (`element_at`/`cast`/`when` per element,
     * no `transform`): higher-order functions are CodegenFallback, and
     * a fallback normalize referenced by every per-centroid distance
@@ -358,7 +357,8 @@ object Similarity {
     * slower. The unrolled form stays inside whole-stage codegen where
     * common-subexpression elimination computes each element once.
     * Values are bit-identical to the per-element `v[i]/nrm` fold the
-    * oracle runs; zero vectors normalize to zero (no NaNs). */
+    * oracle runs, and to the `x/nrm` fold of the `pqCodes` kernel and
+    * the Lloyd pass; zero vectors normalize to zero (no NaNs). */
   private def pqNormSlice(v: Column, nrm: Column, off: Int, sub: Int): Column =
     array((off until off + sub).map { i =>
       when(nrm === lit(0.0), lit(0.0))
@@ -369,11 +369,11 @@ object Similarity {
    * Product-quantization codebooks: the `dims`-dim space split into
    * `m` contiguous `dims/m`-dim subspaces, each clustered into `k`
    * sub-centroids by the shared Lloyd pass (`lloyd`, the same one as
-   * [[trainIvfCentroids]]) over the L2-normalized corpus, checkpointed
-   * once. Every subspace's assignment comes from one `pqCodes` kernel
-   * call per row (normalize = false — the frame already holds the
-   * normalized vector, and re-normalizing an L2-unit vector is NOT a
-   * bit-level no-op). Returns `m` codebooks of `k` sub-centroids.
+   * [[trainIvfCentroids]]) over the L2-normalized corpus. The raw
+   * `(idCol, vecCol)` projection is checkpointed once; each pass
+   * normalizes every vector as it reads it, with the `x/nrm` fold of
+   * [[pqEncode]]'s `pqCodes` kernel, which also assigns it. Returns
+   * `m` codebooks of `k` sub-centroids.
    * After encoding a vector is `m` small codes (k ≤ 256 ⇒ m bytes)
    * instead of `dims·4` float bytes — the classic ~32× compression
    * that keeps billion-vector indexes in RAM; the codebooks are
@@ -384,15 +384,9 @@ object Similarity {
       seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding", dims: Int = 64): Array[Array[Seq[Double]]] = {
     require(m > 0 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val v = col(vecCol)
-    // a null vector stays null (pqNormSlice alone gives an array of
-    // nulls, which the Lloyd pass could not tell from a vector)
-    val base = corpus.select(col(idCol),
-        when(v.isNotNull, pqNormSlice(v, norm(v), 0, dims)).as("__vn"))
-      .localCheckpoint()
-    lloyd(base, m, k, iters, seed, idCol, "__vn")(books =>
-      graft.plans.NativeFunctions.pqCodes(col("__vn"),
-        books.map(_.toSeq).toSeq, normalize = false))
+    val base = corpus.select(col(idCol), col(vecCol)).localCheckpoint()
+    lloyd(base, m, k, iters, seed, idCol, vecCol, Some(dims))
+      .map(_.map(_.toSeq))
   }
 
   /** PQ encoding: each (normalized) vector → its `m` nearest

@@ -2,8 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, ElementAt, EvalMode, Expression, GenericInternalRow, Literal, TernaryExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -765,28 +766,50 @@ object Native {
     acc
   }
 
-  /** All `m` PQ sub-centroid codes of one vector in a single pass —
-    * the [[PqCodesExpr]] kernel. When `normalize` is set the input is
-    * L2-normalized on the fly (per-element `x/nrm` BEFORE the product,
-    * matching the oracle's `vn[i]*cv[i]` fold bit for bit; zero
-    * vectors contribute zero dots); otherwise the input is taken as
-    * already normalized. Argmin per subspace is (distance, code)
-    * ascending under java.lang.Double total order — exactly the
-    * `least(struct(d, cid))` choice. */
-  def pqCodes(v: ArrayData, flat: Array[Double], normSq: Array[Double],
-      m: Int, k: Int, sub: Int, isFloat: Boolean,
-      normalize: Boolean): ArrayData = {
+  /** Loads the first `xs.length` elements of `v` into `xs` as doubles —
+    * the vector input of [[pqCodes]] and [[LloydPartial]]. With
+    * `normalize` each element is divided by the L2 norm of the whole of
+    * `v` (the left fold of [[dot]]) and a zero vector loads as zeros;
+    * the norm is returned (1.0 unnormalized). A null element loads as
+    * 0.0, as [[dot]] reads it, and is flagged in `nulls` when given. A
+    * vector shorter than `xs` fails with Spark's `element_at` index
+    * error when `strict`; otherwise its missing elements load as nulls,
+    * as non-ANSI `element_at` reads them. */
+  def loadVector(v: ArrayData, isFloat: Boolean, normalize: Boolean,
+      strict: Boolean, xs: Array[Double], nulls: Array[Boolean]): Double = {
     def at(i: Int): Double =
       if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+    val n = v.numElements()
+    if (strict && n < xs.length)
+      elementAtError(v, if (isFloat) FloatType else DoubleType, n + 1)
     var nrm = 1.0
     if (normalize) {
       var ss = 0.0
       var i = 0
-      val n = v.numElements()
       while (i < n) { val x = at(i); ss += x * x; i += 1 }
       nrm = math.sqrt(ss)
     }
-    val codes = new Array[Int](m)
+    var i = 0
+    while (i < xs.length) {
+      val missing = i >= n || v.isNullAt(i)
+      if (nulls != null) nulls(i) = missing
+      xs(i) =
+        if (missing || nrm == 0.0) 0.0
+        else if (normalize) at(i) / nrm
+        else at(i)
+      i += 1
+    }
+    nrm
+  }
+
+  /** Each of the `m` subspaces' nearest sub-centroid code of the loaded
+    * vector `xs` into `codes`: squared L2 as `‖c‖² − 2·x·c` over the
+    * flattened codebooks `flat` (`m·k` centroids of `sub` doubles),
+    * argmin by (distance, code) under java.lang.Double order — exactly
+    * the `least(struct(d, cid))` choice. A zero vector (`zero`) has
+    * zero dots. */
+  def pqArgmin(xs: Array[Double], zero: Boolean, flat: Array[Double],
+      normSq: Array[Double], m: Int, k: Int, sub: Int, codes: Array[Int]): Unit = {
     var s = 0
     while (s < m) {
       var bestD = 0.0
@@ -794,14 +817,10 @@ object Native {
       var j = 0
       while (j < k) {
         var acc = 0.0
-        if (nrm != 0.0) {
+        if (!zero) {
           val base = (s * k + j) * sub
           var t = 0
-          while (t < sub) {
-            val x = at(s * sub + t)
-            acc += (if (normalize) x / nrm else x) * flat(base + t)
-            t += 1
-          }
+          while (t < sub) { acc += xs(s * sub + t) * flat(base + t); t += 1 }
         }
         val d = normSq(s * k + j) - 2.0 * acc
         if (bestJ < 0 || java.lang.Double.compare(d, bestD) < 0) {
@@ -812,7 +831,158 @@ object Native {
       codes(s) = bestJ
       s += 1
     }
+  }
+
+  /** All `m` PQ sub-centroid codes of one vector in a single pass —
+    * the [[PqCodesExpr]] kernel. The input is L2-normalized on the fly
+    * (per-element `x/nrm` BEFORE the product, matching the oracle's
+    * `vn[i]*cv[i]` fold bit for bit; zero vectors contribute zero
+    * dots), then [[pqArgmin]] picks each code. A vector shorter than
+    * `m·sub` fails with Spark's index error. */
+  def pqCodes(v: ArrayData, flat: Array[Double], normSq: Array[Double],
+      m: Int, k: Int, sub: Int, isFloat: Boolean): ArrayData = {
+    val xs = new Array[Double](m * sub)
+    val nrm = loadVector(v, isFloat, normalize = true, strict = true, xs, null)
+    val codes = new Array[Int](m)
+    pqArgmin(xs, nrm == 0.0, flat, normSq, m, k, sub, codes)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)
+  }
+
+  /** The nearest-centroid rule of IVF training, assignment and probing:
+    * the first `probes` centroid ids of `v` by squared L2 as
+    * `‖c‖² − 2·v·c` (the [[dot]] fold), ascending under java.lang.Double
+    * order, ties to the smaller id. A centroid whose length differs from
+    * `v`'s has a null distance, as [[DotProductExpr]] gives, and null
+    * sorts first — so a null `v` gets `[0, 1, …]`. A distance is never
+    * −0.0 (`‖c‖²` is a `+0.0`-based sum), so this order equals Spark's
+    * SQL order of the same `(d, id)` structs. */
+  def nearestIds(v: ArrayData, isFloat: Boolean, cents: Array[Array[Double]],
+      normSq: Array[Double], probes: Int): Array[Int] = {
+    val k = cents.length
+    val n = if (v == null) -1 else v.numElements()
+    val d = new Array[Double](k)
+    val known = new Array[Boolean](k)
+    var j = 0
+    while (j < k) {
+      val c = cents(j)
+      if (c.length == n) {
+        var acc = 0.0
+        var i = 0
+        while (i < n) {
+          acc += (if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)) * c(i)
+          i += 1
+        }
+        d(j) = normSq(j) - 2.0 * acc
+        known(j) = true
+      }
+      j += 1
+    }
+    val out = new Array[Int](math.min(probes, k))
+    val taken = new Array[Boolean](k)
+    var p = 0
+    while (p < out.length) {
+      var best = -1
+      j = 0
+      while (j < k) {
+        if (!taken(j) && (best < 0 ||
+            (if (!known(j)) known(best)
+             else known(best) && java.lang.Double.compare(d(j), d(best)) < 0)))
+          best = j
+        j += 1
+      }
+      taken(best) = true
+      out(p) = best
+      p += 1
+    }
+    out
+  }
+
+  /** [[nearestIds]] as the [[NearestCentroidsExpr]] result. */
+  def nearestCentroids(v: ArrayData, isFloat: Boolean,
+      cents: Array[Array[Double]], normSq: Array[Double], probes: Int): ArrayData =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      nearestIds(v, isFloat, cents, normSq, probes))
+
+  /** `round(x * 1e9)` cast to bigint — the 1e-9 grid of the k-means
+    * means, as Spark evaluates it. `Round` rounds HALF_UP on the
+    * double's shortest decimal form (`BigDecimal.valueOf`); off an
+    * exact .5 tie that form and the binary value round alike, so only a
+    * tie takes the BigDecimal path. NaN, ±Infinity and values past the
+    * bigint range fail with Spark's cast overflow error under `ansi`,
+    * and cast as Spark's non-ANSI cast does otherwise. */
+  def gridNanos(x: Double, ansi: Boolean): Long = {
+    val y = x * 1e9
+    val r =
+      if (!java.lang.Double.isFinite(y)) y
+      else {
+        val f = math.floor(y)
+        val frac = y - f
+        if (frac < 0.5) f
+        else if (frac > 0.5) f + 1.0
+        else java.math.BigDecimal.valueOf(y)
+          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+      }
+    if (ansi && !(math.floor(r) <= Long.MaxValue.toDouble &&
+        math.ceil(r) >= Long.MinValue.toDouble))
+      Cast(Literal(r), LongType, None, EvalMode.ANSI).eval()
+    r.toLong
+  }
+
+  /** Throws what `element_at(v, index)` throws under ANSI. */
+  private def elementAtError(v: ArrayData, elementType: DataType, index: Int): Nothing = {
+    ElementAt(Literal(v.copy(), ArrayType(elementType)), Literal(index),
+      None, failOnError = true).eval()
+    throw new IllegalStateException(s"element_at($index) did not fail")
+  }
+
+  /**
+   * One partition's share of a Lloyd pass of [[graft.ext.Similarity]]'s
+   * k-means, fused over the raw vector: `books` holds `m` codebooks of
+   * `k` centroids, each over a `sub`-wide slice of the first `m·sub`
+   * elements. [[add]] assigns a vector and adds its 1e-9 grid values
+   * ([[gridNanos]]) to its cells' long sums.
+   *
+   *  - `normalize` (PQ): each subspace takes its [[pqArgmin]] code of
+   *    the L2-normalized vector, and the normalized values are summed.
+   *  - otherwise (IVF, `m = 1`): the cell is [[nearestIds]]'s first id
+   *    of the raw vector.
+   *
+   * A null element adds nothing to its sum, but its row still counts
+   * (`n`). A vector shorter than `m·sub` fails with Spark's index error
+   * under `ansi`, and reads its missing elements as nulls otherwise.
+   */
+  final class LloydPartial(books: Array[Array[Array[Double]]], sub: Int,
+      isFloat: Boolean, normalize: Boolean, ansi: Boolean) {
+    private val m = books.length
+    private val k = books.head.length
+    private val cents = books.flatten
+    private val normSq = cents.map(c => c.map(x => x * x).sum)
+    private val flat = if (normalize) cents.flatten else null
+    private val xs = new Array[Double](m * sub)
+    private val nulls = new Array[Boolean](m * sub)
+    private val codes = new Array[Int](m)
+    /** Long sums on the 1e-9 grid, by (subspace, cell, element). */
+    val sums = new Array[Long](m * k * sub)
+    /** Rows per (subspace, cell). */
+    val n = new Array[Long](m * k)
+
+    def add(v: ArrayData): Unit = {
+      val nrm = loadVector(v, isFloat, normalize, ansi, xs, nulls)
+      if (normalize) pqArgmin(xs, nrm == 0.0, flat, normSq, m, k, sub, codes)
+      else codes(0) = nearestIds(v, isFloat, cents, normSq, 1)(0)
+      var s = 0
+      while (s < m) {
+        val cell = s * k + codes(s)
+        n(cell) += 1L
+        var p = 0
+        while (p < sub) {
+          val i = s * sub + p
+          if (!nulls(i)) sums(cell * sub + p) += gridNanos(xs(i), ansi)
+          p += 1
+        }
+        s += 1
+      }
+    }
   }
 
   /** 60-bit md5-prefix key of `s` in [0, p) — the [[graft.ext.Dedup.md5Key]]
@@ -2153,8 +2323,8 @@ case class DotProductExpr(left: Expression, right: Expression) extends BinaryExp
   * but compiles a huge codegen unit per plan; this kernel is one
   * method call. Folds are the same left-to-right per-element widening
   * as [[DotProductExpr]], so codes replay in DuckDB (x_pq_recall). */
-case class PqCodesExpr(child: Expression, books: Seq[Seq[Seq[Double]]],
-    normalize: Boolean) extends UnaryExpression {
+case class PqCodesExpr(child: Expression, books: Seq[Seq[Seq[Double]]])
+    extends UnaryExpression {
   require(books.nonEmpty && books.forall(_.nonEmpty),
     "codebooks must be non-empty")
   private val sub = books.head.head.length
@@ -2179,17 +2349,60 @@ case class PqCodesExpr(child: Expression, books: Seq[Seq[Seq[Double]]],
 
   override protected def nullSafeEval(input: Any): Any =
     Native.pqCodes(input.asInstanceOf[ArrayData], flatArr, normSqArr,
-      books.length, k, sub, isFloat, normalize)
+      books.length, k, sub, isFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fRef = ctx.addReferenceObj("pqFlat", flatArr, "double[]")
     val nRef = ctx.addReferenceObj("pqNormSq", normSqArr, "double[]")
     defineCodeGen(ctx, ev, c =>
       s"graft.plans.Native.pqCodes($c, $fRef, $nRef, ${books.length}, $k, " +
-        s"$sub, $isFloat, $normalize)")
+        s"$sub, $isFloat)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqCodesExpr =
+    copy(child = newChild)
+}
+
+/** nearest_centroids(vec) → array<int>: the first `probes` centroid ids
+  * of `vec` by squared L2 ([[Native.nearestIds]]) in ONE call over
+  * plan-shipped centroids — IVF training, assignment and probing share
+  * it. Never null: a null vector gets `[0, 1, …]`, as its all-null
+  * distances sort by id. */
+case class NearestCentroidsExpr(child: Expression, cents: Seq[Seq[Double]],
+    probes: Int) extends UnaryExpression {
+  require(cents.nonEmpty, "centroids must be non-empty")
+  require(probes >= 0, s"probes must be non-negative, got $probes")
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+
+  @transient private lazy val centArr: Array[Array[Double]] =
+    cents.map(_.toArray).toArray
+  @transient private lazy val normSqArr: Array[Double] =
+    cents.map(c => c.map(x => x * x).sum).toArray
+
+  private def isFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  override def eval(input: InternalRow): Any =
+    Native.nearestCentroids(child.eval(input).asInstanceOf[ArrayData],
+      isFloat, centArr, normSqArr, probes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val cRef = ctx.addReferenceObj("ivfCents", centArr, "double[][]")
+    val nRef = ctx.addReferenceObj("ivfNormSq", normSqArr, "double[]")
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.plans.Native.nearestCentroids(${c.isNull} ? null : ${c.value},
+          $isFloat, $cRef, $nRef, $probes);
+    """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroidsExpr =
     copy(child = newChild)
 }
 
@@ -2459,8 +2672,10 @@ object NativeFunctions {
   def hashFeatureStats(text: Column, dims: Int): Column =
     ColumnBridge.column(HashFeatureStatsExpr(ColumnBridge.expression(text), dims))
 
-  def pqCodes(vec: Column, books: Seq[Seq[Seq[Double]]],
-      normalize: Boolean = true): Column =
-    ColumnBridge.column(PqCodesExpr(ColumnBridge.expression(vec), books,
-      normalize))
+  def pqCodes(vec: Column, books: Seq[Seq[Seq[Double]]]): Column =
+    ColumnBridge.column(PqCodesExpr(ColumnBridge.expression(vec), books))
+
+  def nearestCentroids(vec: Column, cents: Seq[Seq[Double]], probes: Int): Column =
+    ColumnBridge.column(NearestCentroidsExpr(ColumnBridge.expression(vec),
+      cents, probes))
 }

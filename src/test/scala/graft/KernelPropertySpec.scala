@@ -549,4 +549,286 @@ class KernelPropertySpec extends SparkSpec {
       }
     }
   }
+
+  // ===== the fused Lloyd pass against its Column formulation =========
+
+  /** The Column formulation the fused Lloyd pass replaced, kept as the
+    * reference: the codes expression plus one generated
+    * `round(element_at(v, i) * 1e9)` column per element, long sums per
+    * cell (collected; the fixtures are small), the same init and mean. */
+  private def refLloyd(base: org.apache.spark.sql.DataFrame, m: Int, k: Int,
+      iters: Int, seed: Long, vecCol: String)(
+      codes: Array[Array[Seq[Double]]] => org.apache.spark.sql.Column)
+      : Array[Array[Seq[Double]]] = {
+    val live = base.where(col(vecCol).isNotNull)
+    val init = live
+      .orderBy(graft.functions.Rng.uniform(seed, "ivf/init", col("vec_id")), col("vec_id"))
+      .limit(k).select(col(vecCol)).collect()
+      .map(_.getSeq[Any](0).map(x => x.asInstanceOf[Number].doubleValue()))
+    val dims = if (init.isEmpty) 0 else init.map(_.length).max
+    val sub = dims / m
+    val kk = init.length
+    var books = Array.tabulate(m)(s => init.map(_.slice(s * sub, (s + 1) * sub)))
+    for (_ <- 0 until iters if dims > 0) {
+      val rows = live.select((codes(books).as("__codes") +:
+        (0 until dims).map(i =>
+          round(element_at(col(vecCol), i + 1).cast("double") * lit(1e9))
+            .cast("long").as(s"__l$i"))): _*).collect()
+      val sums = Array.ofDim[Long](m, kk, sub)
+      val counts = Array.ofDim[Long](m, kk)
+      rows.foreach { r =>
+        val cs = r.getSeq[Int](0)
+        for (si <- 0 until m) {
+          counts(si)(cs(si)) += 1L
+          for (p <- 0 until sub; c = 1 + si * sub + p if !r.isNullAt(c))
+            sums(si)(cs(si))(p) += r.getLong(c)
+        }
+      }
+      books = Array.tabulate(m, kk) { (si, j) =>
+        if (counts(si)(j) == 0L) books(si)(j)
+        else (0 until sub).map(p =>
+          sums(si)(j)(p).toDouble / (counts(si)(j).toDouble * 1e9))
+      }
+    }
+    books
+  }
+
+  /** The IVF nearest-centroid rule as Column expressions: `(d, cid)`
+    * structs sorted by `array_sort`, ids read by `transform`. */
+  private def refNearest(v: org.apache.spark.sql.Column,
+      cents: Seq[Seq[Double]], probes: Int): org.apache.spark.sql.Column = {
+    val scored = cents.zipWithIndex.map { case (cent, i) =>
+      struct((lit(cent.map(x => x * x).sum) - lit(2.0) *
+        graft.ext.Similarity.dot(v, array(cent.map(lit): _*))).as("d"), lit(i).as("cid"))
+    }
+    slice(transform(array_sort(array(scored: _*)), s => s.getField("cid")), 1, probes)
+  }
+
+  private def refIvf(df: org.apache.spark.sql.DataFrame, k: Int, iters: Int,
+      seed: Long): Array[Seq[Double]] = {
+    val base = df.select(col("vec_id"), col("embedding")).localCheckpoint()
+    refLloyd(base, 1, k, iters, seed, "embedding")(bs =>
+      refNearest(col("embedding"), bs.head.toSeq, 1)).head
+  }
+
+  /** PQ as it trained before the fused pass: the unrolled `x / nrm`
+    * normalized slice checkpointed once, codes by `least(struct(d, cid))`
+    * over `aggregate(zip_with(...))` dots (a null element reads 0.0). */
+  private def refPq(df: org.apache.spark.sql.DataFrame, m: Int, k: Int,
+      iters: Int, seed: Long, dims: Int): Array[Array[Seq[Double]]] = {
+    val v = col("embedding")
+    val nrm = graft.ext.Similarity.norm(v)
+    val vn = array((0 until dims).map { i =>
+      when(nrm === lit(0.0), lit(0.0))
+        .otherwise(element_at(v, i + 1).cast("double") / nrm)
+    }: _*)
+    val base = df.select(col("vec_id"), when(v.isNotNull, vn).as("__vn"))
+      .localCheckpoint()
+    val sub = dims / m
+    refLloyd(base, m, k, iters, seed, "__vn")(books => array(books.indices.map { s =>
+      val scored = books(s).toSeq.zipWithIndex.map { case (cent, j) =>
+        val dot = aggregate(
+          zip_with(slice(col("__vn"), s * sub + 1, sub), array(cent.map(lit): _*),
+            (x, y) => coalesce(x, lit(0.0)) * y),
+          lit(0.0), (acc, z) => acc + z)
+        struct((lit(cent.map(x => x * x).sum) - lit(2.0) * dot).as("d"), lit(j).as("cid"))
+      }
+      least(scored: _*).getField("cid")
+    }: _*))
+  }
+
+  private def bits(books: Seq[Seq[Double]]): Seq[Seq[Long]] =
+    books.map(_.map(java.lang.Double.doubleToRawLongBits))
+
+  /** `a / 1024` for odd `a`: `x * 1e9` is exactly `a·5⁹/2`, a .5 tie of the
+    * 1e-9 grid, in float and in double. */
+  private def tie(a: Int): Double = a / 1024.0
+
+  /** Seeded k-means fixture, `dims` = 8, as float or double arrays: ten
+    * noisy clusters whose elements are often exact grid ties (either
+    * sign), a zero vector, `-0.0` elements, a null vector, a null
+    * element in a non-init row, and the first two init rows equal, so
+    * two centroids sit at equal distance from every vector in the
+    * first pass. The double fixture adds unit-norm vectors whose
+    * normalized elements are exact ties (PQ); no float pair has an
+    * exact unit norm. */
+  private def kmeansFixture(floats: Boolean, k: Int, seed: Long)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dims = 8
+    val rnd = new scala.util.Random(7)
+    val centers = Array.fill(10)(Array.fill(dims)(rnd.nextGaussian()))
+    val vecs: Array[Array[Double]] = Array.tabulate(160) { i =>
+      Array.tabulate(dims) { p =>
+        if (rnd.nextInt(4) == 0) tie((rnd.nextInt(1024) * 2 + 1) * (if (rnd.nextBoolean()) 1 else -1))
+        else centers(i % 10)(p) + rnd.nextGaussian() * 0.3
+      }
+    }
+    vecs(5) = Array.fill(dims)(0.0)
+    vecs(6) = Array(-0.0, 1.5, -0.0, tie(-3), 0.0, -0.0, tie(7), -2.0)
+    // |v| == 1.0 exactly, so x / nrm keeps the tie of x
+    val unit = if (floats) Nil else (1 to 800 by 2).iterator.flatMap { a =>
+      val t = tie(a)
+      val c0 = math.sqrt(1.0 - t * t)
+      Seq(c0, math.nextUp(c0), math.nextDown(c0))
+        .find(c => math.sqrt(0.0 + t * t + c * c) == 1.0).map(c => (t, c))
+    }.take(4).toSeq
+    unit.size shouldBe (if (floats) 0 else 4)
+    unit.zipWithIndex.foreach { case ((t, c), j) =>
+      val v = Array.fill(dims)(0.0)
+      v(j % 2 * 4) = if (j < 2) t else -t
+      v(j % 2 * 4 + 2) = c
+      vecs(10 + j) = v
+    }
+    val rank = spark.range(vecs.length)
+      .select(col("id"), graft.functions.Rng.uniform(seed, "ivf/init", col("id")).as("u"))
+      .orderBy("u", "id").collect().map(_.getLong(0).toInt)
+    vecs(rank(1)) = vecs(rank(0)).clone()
+    val nullElem = rank.drop(k).find(_ > 20).get
+    val nullVec = rank.drop(k).find(i => i > 20 && i != nullElem).get
+    val elem: DataType = if (floats) FloatType else DoubleType
+    val rows = vecs.indices.map { i =>
+      val v: Seq[Any] =
+        if (i == nullVec) null
+        else vecs(i).toSeq.zipWithIndex.map { case (x, p) =>
+          if (i == nullElem && p == 3) null
+          else if (floats) x.toFloat else x
+        }
+      Row(i.toLong, v)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("vec_id", LongType), StructField("embedding", ArrayType(elem)))))
+  }
+
+  for (floats <- Seq(true, false))
+    test(s"fused Lloyd pass ≡ the Column formulation bit for bit: IVF and PQ on ${if (floats) "float" else "double"} arrays, grid ties, -0.0, zero and null rows, equal-distance centroids") {
+      import graft.ext.Similarity
+      val (k, iters, seed) = (6, 3, 11L)
+      val df = kmeansFixture(floats, k, seed).cache()
+      // the fixture holds exact .5 ties of the grid, raw and normalized
+      def isTie(x: Double) = { val y = x * 1e9; y - math.floor(y) == 0.5 }
+      val raw = df.collect().flatMap(r => Option(r.getSeq[Any](1)))
+        .map(_.map(x => if (x == null) 0.0 else x.asInstanceOf[Number].doubleValue()))
+      raw.exists(_.exists(isTie)) shouldBe true
+      raw.exists { v =>
+        val nrm = math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
+        nrm > 0.0 && v.exists(x => isTie(x / nrm))
+      } shouldBe !floats
+      val ivf = Similarity.trainIvfCentroids(df, nCentroids = k, iters = iters, seed = seed)
+      val ivfRef = refIvf(df, k, iters, seed)
+      ivf.length shouldBe k
+      bits(ivf.toSeq) shouldBe bits(ivfRef.toSeq)
+      // the first two init centroids are equal: every row's first-pass
+      // distances to them tie
+      val init = Similarity.trainIvfCentroids(df, nCentroids = k, iters = 0, seed = seed)
+      init(0) shouldBe init(1)
+      val pq = Similarity.pqTrain(df, m = 2, k = k, iters = iters, seed = seed, dims = 8)
+      val pqRef = refPq(df, 2, k, iters, seed, 8)
+      pq.map(b => bits(b.toSeq)).toSeq shouldBe pqRef.map(b => bits(b.toSeq)).toSeq
+      // assignment and probing: the native rule is the sorted-struct rule,
+      // null vector and a longer-than-centroid vector included
+      val longer = df.union(Seq((999L, Array.fill(9)(0.25f))).toDF("vec_id", "embedding")
+        .select(col("vec_id"), col("embedding").cast(df.schema("embedding").dataType)))
+      for (probes <- Seq(1, 3, k + 2)) {
+        val got = longer.select(col("vec_id"),
+          NativeFunctions.nearestCentroids(col("embedding"), ivf.toSeq, probes),
+          refNearest(col("embedding"), ivf.toSeq, probes)).collect()
+        got.foreach(r => r.getSeq[Int](1) shouldBe r.getSeq[Int](2))
+        got.find(_.getLong(0) == 999L).get.getSeq[Int](1) shouldBe (0 until math.min(probes, k))
+      }
+      val cells = Similarity.assignCells(df, nCentroids = k, iters = iters, seed = seed)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val refCells = df.select(col("vec_id"),
+          element_at(refNearest(col("embedding"), ivfRef.toSeq, 1), 1)).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      cells shouldBe refCells
+      df.unpersist()
+    }
+
+  test("fused Lloyd pass: a null element of an init row reads as 0.0 (the Column formulation threw an NPE)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = Seq(Row(0L, Seq[Any](1.0, null)), Row(1L, Seq[Any](3.0, 4.0)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("vec_id", LongType), StructField("embedding", ArrayType(DoubleType)))))
+    graft.ext.Similarity.trainIvfCentroids(df, nCentroids = 2, iters = 0)
+      .map(_.toSet).toSet shouldBe Set(Set(1.0, 0.0), Set(3.0, 4.0))
+    graft.ext.Similarity.pqTrain(df, m = 1, k = 2, iters = 0, dims = 2)
+      .head.map(_.toSeq).toSet shouldBe Set(Seq(1.0, 0.0), Seq(0.6, 0.8))
+    an[NullPointerException] should be thrownBy refIvf(df, 2, 0, 42L)
+  }
+
+  test("grid rounding: Native.gridNanos ≡ Spark's round(x * 1e9).cast(\"long\") on 10^5 seeded doubles and the .5 ties") {
+    val rnd = new scala.util.Random(2024)
+    val scales = Seq(1e-12, 1e-9, 1e-6, 1e-3, 1.0, 1e3, 1e6, 1e8)
+    val ties = (1 to 4001 by 2).flatMap(a => Seq(tie(a), -tie(a)))
+    val near = ties.take(200).flatMap(t => Seq(math.nextUp(t), math.nextDown(t)))
+    val grid = (0 until 2000).map(j => (j - 1000 + 0.5) / 1e9)
+    val xs = Seq.fill(100000)(rnd.nextGaussian() * scales(rnd.nextInt(scales.size))) ++
+      ties ++ near ++ grid ++ Seq(0.0, -0.0, 1e-10, -1e-10, 4.999999999e-10, -5e-10)
+    // the fixture really hits exact ties, on both sides of zero
+    xs.count(x => { val y = x * 1e9; y - math.floor(y) == 0.5 && y > 0 }) should be > 100
+    xs.count(x => { val y = x * 1e9; y - math.floor(y) == 0.5 && y < 0 }) should be > 100
+    val got = xs.toDF("x").select(col("x"), round(col("x") * lit(1e9)).cast("long"))
+      .collect()
+    got.length shouldBe xs.length
+    got.foreach { r =>
+      val x = r.getDouble(0)
+      withClue(s"x = $x: ") { graft.plans.Native.gridNanos(x, ansi = true) shouldBe r.getLong(1) }
+    }
+  }
+
+  test("fused Lloyd pass: NaN, ±Infinity and out-of-range values fail with Spark's cast overflow, as the Column formulation did; a short vector fails pqEncode with the index error") {
+    import graft.ext.Similarity
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def failsWith(code: String)(train: => Any): Unit = {
+      val chain = causes(intercept[Exception](train))
+      chain.exists(_.isInstanceOf[NullPointerException]) shouldBe false
+      withClue(chain.map(_.getMessage).mkString(" | ")) {
+        chain.exists(c => String.valueOf(c.getMessage).contains(code)) shouldBe true
+      }
+    }
+    val ok = Seq((0L, Array(1.0, 2.0)), (1L, Array(3.0, -1.0)), (2L, Array(0.5, 0.5)))
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e10)) {
+      val df = (ok :+ ((3L, Array(bad, 1.0)))).toDF("vec_id", "embedding")
+      failsWith("CAST_OVERFLOW")(Similarity.trainIvfCentroids(df, nCentroids = 2, iters = 1))
+      failsWith("CAST_OVERFLOW")(refIvf(df, 2, 1, 42L))
+      if (bad.isNaN || bad.isInfinite) {
+        failsWith("CAST_OVERFLOW")(Similarity.pqTrain(df, m = 1, k = 2, iters = 1, dims = 2))
+        failsWith("CAST_OVERFLOW")(refPq(df, 1, 2, 1, 42L, 2))
+      }
+    }
+    an[ArithmeticException] should be thrownBy graft.plans.Native.gridNanos(Double.NaN, ansi = true)
+    val short = Seq((0L, Array(1.0f, 2.0f, 3.0f, 4.0f)), (1L, Array(1.0f, 2.0f)))
+      .toDF("vec_id", "embedding")
+    val books = Array.fill(2)(Array(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    failsWith("INVALID_ARRAY_INDEX")(Similarity.pqEncode(short, books).collect())
+  }
+
+  test("fused Lloyd pass with ANSI off ≡ the Column formulation: a short vector reads as nulls, a NaN casts to 0") {
+    import graft.ext.Similarity
+    val (k, iters, seed) = (6, 2, 11L)
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    val fixture = kmeansFixture(floats = false, k, seed)
+    val df0 = lenient.createDataFrame(fixture.rdd, fixture.schema)
+    // the two odd rows sit outside the init sample: the reference reads
+    // init rows through Number.doubleValue, which a missing element fails
+    val rank = df0.select(col("vec_id"))
+      .orderBy(graft.functions.Rng.uniform(seed, "ivf/init", col("vec_id")), col("vec_id"))
+      .collect().map(_.getLong(0))
+    val Seq(shortId, nanId) = rank.drop(k).filter(_ > 20).take(2).toSeq
+    val df = df0.select(col("vec_id"),
+      when(col("vec_id") === shortId, slice(col("embedding"), 1, 5))
+        .when(col("vec_id") === nanId,
+          array_insert(slice(col("embedding"), 2, 7), lit(1), lit(Double.NaN)))
+        .otherwise(col("embedding")).as("embedding"))
+    bits(Similarity.trainIvfCentroids(df, nCentroids = k, iters = iters, seed = seed).toSeq) shouldBe
+      bits(refIvf(df, k, iters, seed).toSeq)
+    Similarity.pqTrain(df, m = 2, k = k, iters = iters, seed = seed, dims = 8)
+      .map(b => bits(b.toSeq)).toSeq shouldBe
+      refPq(df, 2, k, iters, seed, 8).map(b => bits(b.toSeq)).toSeq
+  }
 }

@@ -23,6 +23,17 @@ class ProbeSpec extends SparkSpec {
       }
     }
 
+  test("cost: each STATS line reports the run's codegen compiles and compile time, both >= 0") {
+    val runs = Probe.cost(spark, Sf, "g_square")
+    runs.zipWithIndex.foreach { case (r, i) =>
+      r.compiles should be >= 0L
+      r.compileMs should be >= 0.0
+      val line = Probe.statsLine("g_square", i + 1, r)
+      line should include(s"compiles=${r.compiles} ")
+      line should fullyMatch regex """STATS g_square run\d .* compiles=\d+ compile_ms=\d+\.\d"""
+    }
+  }
+
   test("cost: g_anomalies runs more than one job") {
     Probe.cost(spark, Sf, "g_anomalies").head.jobs should be > 1
   }
