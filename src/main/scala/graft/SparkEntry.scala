@@ -1984,7 +1984,7 @@ object SparkEntry {
   /** The merges-applied per-document BPE token count, as DuckDB CTEs
     * `m` (the injected Bpe.StandardMerges ladder) through `dc` =
     * (doc_id, n_tokens) — the separator-wrapped recursive replace
-    * replay of the native BpeTokenCountExpr. Callers prepend
+    * replay of the native bpeTokenCount kernel. Callers prepend
     * `WITH RECURSIVE`. Shared by x_pack_chunks_bpe and
     * x_bpe_compression so the two count under one merges table. */
   /** The injected Bpe.StandardMerges ladder as VALUES rows, plus the

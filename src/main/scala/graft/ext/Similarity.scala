@@ -22,10 +22,12 @@ import org.apache.spark.sql.functions._
  */
 object Similarity {
 
-  /** Sequential-fold dot product in double — a native codegen'd
-    * expression ([[graft.plans.DotProductExpr]]); bit-identical to the
-    * `aggregate(zip_with(...))` formulation it replaces but stays
-    * inside whole-stage codegen (HOFs are interpreted per element). */
+  /** Sequential-fold dot product in double — the native kernel
+    * [[graft.plans.Native.dot]], one static call in generated code;
+    * bit-identical to the `aggregate(zip_with(...))` formulation it
+    * replaces but stays inside whole-stage codegen (HOFs are
+    * interpreted per element). Null when the lengths differ; other
+    * numeric arrays are cast to `array<double>` first. */
   def dot(a: Column, b: Column): Column =
     graft.plans.NativeFunctions.dot(a, b)
 

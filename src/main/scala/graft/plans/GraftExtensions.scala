@@ -6,30 +6,20 @@ import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Expressio
 import org.apache.spark.sql.types.IntegerType
 
 /**
- * SQL surface for the native codegen expressions: register with
+ * SQL surface for the native kernels: register with
  * `spark.sql.extensions=graft.plans.GraftExtensions` (cluster config)
  * or `SparkSession.builder().withExtensions(new GraftExtensions)`, or
  * call [[GraftExtensions.register]] on a live session (notebooks,
  * tests — `withExtensions` is silently ignored by `getOrCreate` when a
  * session already exists).
  *
- * Functions:
- *  - `graft_simhash(array<string>)  -> bigint` — 60-bit SimHash
- *  - `graft_rolling_hash(string)    -> bigint` — rolling document hash
- *  - `graft_hashed_shingles(string, n)-> array<bigint>` — hashed n-grams
- *    (n must be a literal int)
- *  - `graft_dot(array, array)       -> double` — embedding dot product
- *  - `graft_minhash_signature(text, k, n) -> array<bigint>`
- *  - `graft_tokens(text)            -> array<string>` — the engine tokenizer
- *  - `graft_winnow_fps(text, n, w)  -> array<bigint>` — winnowing keys
- *  - `graft_cdc_chunks(text, b)     -> array<string>` — CDC chunks
- *  - `graft_quality_counts(text)    -> struct` — fused quality counters
- *  - `graft_hash_features(text, d)  -> struct` — hashing-trick summary
+ * Functions: every [[Kernel]] row that carries a SQL name (its usage
+ * string is the function's `DESCRIBE FUNCTION` text; every trailing
+ * integer argument must be a literal int — the kernels specialize on
+ * it), plus two compositions of built-ins:
  *  - `graft_normalize_url(url)      -> string` — canonical crawl-dedup key
  *  - `graft_url_domain(url)         -> string` — registered-domain heuristic
  *    of an already-canonical URL
- * (every integer width/dims argument must be a literal int — the
- * kernels specialize on it).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -56,63 +46,20 @@ object GraftExtensions {
       s"$name: n must be a literal int, got $other")
   }
 
-  private val injections: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("graft_simhash",
-      info("graft_simhash", "graft_simhash(tokens) - 60-bit SimHash of a token array"),
-      ch => SimHashExpr(arity("graft_simhash", 1)(ch).head)),
-    ("graft_rolling_hash",
-      info("graft_rolling_hash", "graft_rolling_hash(str) - rolling document fingerprint"),
-      ch => RollingHashExpr(arity("graft_rolling_hash", 1)(ch).head)),
-    ("graft_hashed_shingles",
-      info("graft_hashed_shingles",
-        "graft_hashed_shingles(text, n) - hashed word n-gram keys"),
-      ch => { val c = arity("graft_hashed_shingles", 2)(ch)
-        HashedShinglesExpr(c.head, litInt("graft_hashed_shingles", c(1))) }),
-    ("graft_dot",
-      info("graft_dot", "graft_dot(a, b) - dot product of two numeric arrays"),
-      ch => { val c = arity("graft_dot", 2)(ch)
-        DotProductExpr(c.head, c(1)) }),
-    ("graft_minhash_signature",
-      info("graft_minhash_signature",
-        "graft_minhash_signature(text, numHashes, shingleN) - MinHash " +
-          "signature array from the standard affine family"),
-      ch => { val c = arity("graft_minhash_signature", 3)(ch)
-        val k = litInt("graft_minhash_signature", c(1))
-        require(k > 0, "graft_minhash_signature: numHashes must be positive")
-        val n = litInt("graft_minhash_signature", c(2))
-        require(n > 0, "graft_minhash_signature: shingleN must be positive")
-        val (as, bs) = Native.minhashCoefs(k)
-        MinHashSigExpr(c.head, as, bs, n) }),
-    ("graft_tokens",
-      info("graft_tokens",
-        "graft_tokens(text) - lowercased whitespace tokens, empties dropped"),
-      ch => TokensOfExpr(arity("graft_tokens", 1)(ch).head)),
-    ("graft_winnow_fps",
-      info("graft_winnow_fps",
-        "graft_winnow_fps(text, gramN, window) - winnowing fingerprint keys"),
-      ch => { val c = arity("graft_winnow_fps", 3)(ch)
-        val n = litInt("graft_winnow_fps", c(1))
-        val w = litInt("graft_winnow_fps", c(2))
-        require(n > 0 && w > 0, "graft_winnow_fps: gramN and window must be positive")
-        WinnowFpsExpr(c.head, n, w) }),
-    ("graft_cdc_chunks",
-      info("graft_cdc_chunks",
-        "graft_cdc_chunks(text, boundaryMod) - content-defined chunk strings"),
-      ch => { val c = arity("graft_cdc_chunks", 2)(ch)
-        val b = litInt("graft_cdc_chunks", c(1))
-        require(b > 0, "graft_cdc_chunks: boundaryMod must be positive")
-        CdcChunksExpr(c.head, b) }),
-    ("graft_quality_counts",
-      info("graft_quality_counts",
-        "graft_quality_counts(text) - struct(n_tokens, n_bpeish, n_punct, n_stop)"),
-      ch => QualityCountsExpr(arity("graft_quality_counts", 1)(ch).head)),
-    ("graft_hash_features",
-      info("graft_hash_features",
-        "graft_hash_features(text, dims) - struct(nnz, norm_sq, max_count, argmax_dim)"),
-      ch => { val c = arity("graft_hash_features", 2)(ch)
-        val d = litInt("graft_hash_features", c(1))
-        require(d > 0, "graft_hash_features: dims must be positive")
-        HashFeatureStatsExpr(c.head, d) }),
+  /** `name(columns…, ints…)` of a kernel row: arity, then each int
+    * literal (and positive when the row says so), then the row's call. */
+  private def kernelBuilder(k: Kernel, sql: Sql)(ch: Seq[Expression]): Expression = {
+    val cols = k.inputTypes.length
+    arity(sql.name, cols + sql.ints)(ch)
+    val ints = ch.drop(cols).map(litInt(sql.name, _))
+    require(sql.positive.isEmpty || ints.forall(_ > 0),
+      s"${sql.name}: ${sql.positive} must be positive")
+    k.expr(ch.take(cols), sql.consts(ints))
+  }
+
+  private val injections: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] =
+    Kernel.all.flatMap(k => k.sql.map(sql =>
+      (sql.name, info(sql.name, k.usage), kernelBuilder(k, sql) _))) ++ Seq(
     // the URL family is composed of codegen BUILT-INS (lower +
     // regexp_replace/extract): the builders fold the same shared
     // pattern tables ([[graft.ext.Dedup.UrlNormSteps]] etc.) the Scala

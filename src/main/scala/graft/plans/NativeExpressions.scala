@@ -1,25 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, ElementAt, EvalMode, Expression, GenericInternalRow, Literal, TernaryExpression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Cast, ElementAt, EvalMode, GenericInternalRow, Literal, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the engine's hottest scalar kernels.
+ * The engine's hottest scalar kernels, as static methods.
  *
  * Spark's higher-order functions (`transform`/`aggregate`/`zip_with`)
  * are interpreted per element — fine for occasional use, but a simhash
  * over token arrays or a 64-dim dot product in a candidate join becomes
- * the per-row inner loop of the whole query. These expressions compile
- * to a single static-call in generated code (`doGenCode` emits a call
- * into [[Native]]), keeping the operator inside whole-stage codegen
- * with zero per-element boxing/allocation.
+ * the per-row inner loop of the whole query. Each kernel is one row of
+ * the [[Kernel]] table, whose calls Spark replaces by its own
+ * `StaticInvoke` on this object: one static call in generated code,
+ * inside whole-stage codegen, with zero per-element boxing/allocation.
+ * Plan-time constant tables arrive as [[ConstArray]]s.
  *
  * Semantics are bit-identical to the Column-function formulations they
  * replace (sequential left-fold double accumulation; xxhash64 seed 42),
@@ -125,7 +122,7 @@ object Native {
    * documents → (0, 0, "").
    */
   def scrubSegments(source: UTF8String, text: UTF8String,
-      sortedKeys: Array[Long], segTokens: Int): InternalRow = {
+      sortedKeys: ConstArray[Long], segTokens: Int): InternalRow = {
     val toks = text.toLowerCase.toString.split("\\s+").filter(_.nonEmpty)
     val n = toks.length
     if (n == 0)
@@ -150,7 +147,7 @@ object Native {
       val keyBytes = UTF8String.fromString(srcPrefix + seg)
       val h = XXH64.hashUnsafeBytes(keyBytes.getBaseObject,
         keyBytes.getBaseOffset, keyBytes.numBytes, 42L)
-      if (java.util.Arrays.binarySearch(sortedKeys, h) >= 0) dropped += 1L
+      if (java.util.Arrays.binarySearch(sortedKeys.array, h) >= 0) dropped += 1L
       else {
         if (kept.length > 0) kept.append(' ')
         kept.append(seg)
@@ -349,10 +346,11 @@ object Native {
    * md5 (not xxhash64) so the value family stays exactly replayable in
    * the DuckDB oracle — the same reason the Column path used it.
    */
-  def minhashSignature(text: UTF8String, as: Array[Long], bs: Array[Long],
-      n: Int): ArrayData = {
+  def minhashSignature(text: UTF8String, aConst: ConstArray[Long],
+      bConst: ConstArray[Long], n: Int): ArrayData = {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     val toks = text.toLowerCase.toString.split("\\s+").filter(_.nonEmpty)
+    val (as, bs) = (aConst.array, bConst.array)
     val k = as.length
     val mins = Array.fill(k)(Long.MaxValue)
     val md = Md5Local.get()
@@ -490,8 +488,9 @@ object Native {
    * skips inapplicable merges (symbol adjacency implies substring
    * presence, so the gate is sound).
    */
-  def bpeTokenCount(text: UTF8String, ma: Array[String], mb: Array[String],
-      mab: Array[String]): Long = {
+  def bpeTokenCount(text: UTF8String, maConst: ConstArray[String],
+      mbConst: ConstArray[String], mabConst: ConstArray[String]): Long = {
+    val (ma, mb, mab) = (maConst.array, mbConst.array, mabConst.array)
     val caches = BpeCaches.get()
     var cache = caches.get(ma)
     if (cache == null) {
@@ -552,9 +551,9 @@ object Native {
   /** Merges-applied subword pieces of a single pre-token (ENCODE
     * output as strings; ids are a dictionary lookup away). Same merge
     * application as the count kernel by construction. */
-  def bpePieces(word: UTF8String, ma: Array[String], mb: Array[String],
-      mab: Array[String]): ArrayData = {
-    val syms = bpeSymbolsWord(word.toString, ma, mb, mab)
+  def bpePieces(word: UTF8String, ma: ConstArray[String],
+      mb: ConstArray[String], mab: ConstArray[String]): ArrayData = {
+    val syms = bpeSymbolsWord(word.toString, ma.array, mb.array, mab.array)
     val out = new Array[AnyRef](syms.size)
     var j = 0
     while (j < syms.size) { out(j) = UTF8String.fromString(syms.get(j)); j += 1 }
@@ -630,8 +629,9 @@ object Native {
    * md5 (not xxhash64) so the bucket family replays exactly in the
    * DuckDB oracle — same rationale as [[minhashSignature]].
    */
-  def dsirScore(text: UTF8String, lr9: Array[Long]): InternalRow = {
+  def dsirScore(text: UTF8String, lr9Const: ConstArray[Long]): InternalRow = {
     val toks = text.toLowerCase.toString.split("\\s+").filter(_.nonEmpty)
+    val lr9 = lr9Const.array
     val buckets = lr9.length
     var n = 0L
     var s9 = 0L
@@ -669,8 +669,9 @@ object Native {
    * [[charTrigramHashes]] — the identical family the profile was built
    * with.
    */
-  def langIdScore(text: UTF8String, keys: Array[Long], contribs: Array[Long],
-      miss: Array[Long]): InternalRow = {
+  def langIdScore(text: UTF8String, keysConst: ConstArray[Long],
+      contribsConst: ConstArray[Long], missConst: ConstArray[Long]): InternalRow = {
+    val (keys, contribs, miss) = (keysConst.array, contribsConst.array, missConst.array)
     val nLangs = miss.length
     val sums = new Array[Long](nLangs)
     val hashes = charTrigramHashes(text)
@@ -752,9 +753,13 @@ object Native {
   }
 
   /** Sequential-fold dot product; floats widened to double per element
-    * (matches `aggregate(zip_with(...))` exactly, bit for bit). */
-  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    * (matches `aggregate(zip_with(...))` exactly, bit for bit). Null when
+    * the lengths differ, as `zip_with` null-pads the shorter side and
+    * poisons the sum: a silently truncated dot product would hide data
+    * corruption. */
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -834,17 +839,19 @@ object Native {
   }
 
   /** All `m` PQ sub-centroid codes of one vector in a single pass —
-    * the [[PqCodesExpr]] kernel. The input is L2-normalized on the fly
+    * the [[graft.ext.Similarity.pqEncode]] kernel over the flattened
+    * codebooks `flat` (`m·k` centroids of `sub` doubles, their ‖c‖² in
+    * `normSq`). The input is L2-normalized on the fly
     * (per-element `x/nrm` BEFORE the product, matching the oracle's
     * `vn[i]*cv[i]` fold bit for bit; zero vectors contribute zero
     * dots), then [[pqArgmin]] picks each code. A vector shorter than
     * `m·sub` fails with Spark's index error. */
-  def pqCodes(v: ArrayData, flat: Array[Double], normSq: Array[Double],
-      m: Int, k: Int, sub: Int, isFloat: Boolean): ArrayData = {
+  def pqCodes(v: ArrayData, isFloat: Boolean, flat: ConstArray[Double],
+      normSq: ConstArray[Double], m: Int, k: Int, sub: Int): ArrayData = {
     val xs = new Array[Double](m * sub)
     val nrm = loadVector(v, isFloat, normalize = true, strict = true, xs, null)
     val codes = new Array[Int](m)
-    pqArgmin(xs, nrm == 0.0, flat, normSq, m, k, sub, codes)
+    pqArgmin(xs, nrm == 0.0, flat.array, normSq.array, m, k, sub, codes)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)
   }
 
@@ -852,7 +859,7 @@ object Native {
     * the first `probes` centroid ids of `v` by squared L2 as
     * `‖c‖² − 2·v·c` (the [[dot]] fold), ascending under java.lang.Double
     * order, ties to the smaller id. A centroid whose length differs from
-    * `v`'s has a null distance, as [[DotProductExpr]] gives, and null
+    * `v`'s has a null distance, as [[dot]] gives, and null
     * sorts first — so a null `v` gets `[0, 1, …]`. A distance is never
     * −0.0 (`‖c‖²` is a `+0.0`-based sum), so this order equals Spark's
     * SQL order of the same `(d, id)` structs. */
@@ -897,11 +904,12 @@ object Native {
     out
   }
 
-  /** [[nearestIds]] as the [[NearestCentroidsExpr]] result. */
+  /** [[nearestIds]] as an `array<int>`. */
   def nearestCentroids(v: ArrayData, isFloat: Boolean,
-      cents: Array[Array[Double]], normSq: Array[Double], probes: Int): ArrayData =
+      cents: ConstArray[Array[Double]], normSq: ConstArray[Double],
+      probes: Int): ArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      nearestIds(v, isFloat, cents, normSq, probes))
+      nearestIds(v, isFloat, cents.array, normSq.array, probes))
 
   /** `round(x * 1e9)` cast to bigint — the 1e-9 grid of the k-means
     * means, as Spark evaluates it. `Round` rounds HALF_UP on the
@@ -1108,11 +1116,13 @@ object Native {
    * vocabulary table is unbounded, the bucketed one is `hashMod ×
    * labels` longs by construction.
    */
-  def nbPredict(text: UTF8String, keys: Array[Long], contribs: Array[Long],
-      miss: Array[Long], prior: Array[Long], hashMod: Int): InternalRow = {
+  def nbPredict(text: UTF8String, keysConst: ConstArray[Long],
+      contribsConst: ConstArray[Long], missConst: ConstArray[Long],
+      priorConst: ConstArray[Long], hashMod: Int): InternalRow = {
     val toks = text.toLowerCase.toString.split("\\s+").filter(_.nonEmpty)
+    val (keys, contribs, miss) = (keysConst.array, contribsConst.array, missConst.array)
     val nL = miss.length
-    val sums = prior.clone()
+    val sums = priorConst.array.clone()
     val md = Md5Local.get()
     var i = 0
     while (i < toks.length) {
@@ -1159,9 +1169,10 @@ object Native {
    * worst_start, worst_roll9); the caller nulls the worst fields when
    * n_found < window (the windowed formulation's full-window gate).
    */
-  def worstWindow(text: UTF8String, keys: Array[Long], lp9: Array[Long],
-      window: Int): InternalRow = {
+  def worstWindow(text: UTF8String, keysConst: ConstArray[Long],
+      lp9Const: ConstArray[Long], window: Int): InternalRow = {
     val toks = text.toLowerCase.toString.split("\\s+").filter(_.nonEmpty)
+    val (keys, lp9) = (keysConst.array, lp9Const.array)
     val md = Md5Local.get()
     val posArr = new Array[Int](toks.length)
     val lpArr = new Array[Long](toks.length)
@@ -1788,894 +1799,4 @@ object Native {
     if (v == null) return fail
     new GenericInternalRow(Array[Any](true, UTF8String.fromString(v)))
   }
-}
-
-/** simhash(array<string>) → long. */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
-}
-
-/** char_trigram_hashes(string) → array<long> (positional, seed 42). */
-case class CharTrigramHashesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.charTrigramHashes(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.charTrigramHashes($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharTrigramHashesExpr =
-    copy(child = newChild)
-}
-
-/** mattr_stats(string, window) → struct(n_tokens, n_windows,
-  * sum_distinct) — one-pass sliding-window MATTR inputs. */
-case class MattrStatsExpr(child: Expression, window: Int)
-    extends UnaryExpression {
-  require(window > 0, "window must be positive")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_windows", LongType, nullable = false),
-    StructField("sum_distinct", LongType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.mattrStats(input.asInstanceOf[UTF8String], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.mattrStats($c, $window)")
-
-  override protected def withNewChildInternal(newChild: Expression): MattrStatsExpr =
-    copy(child = newChild)
-}
-
-/** scrub_segments(source, text) → struct(n_segs, n_dropped,
-  * clean_text) — the stateless boilerplate scrub
-  * ([[graft.ext.Corpus.scrubRowStateless]]); the SORTED flag-key array
-  * is a plan-time constant (Seq param for structural equality) shipped
-  * into generated code as a reference object and probed by binary
-  * search per segment. */
-case class ScrubSegmentsExpr(left: Expression, right: Expression,
-    keys: Seq[Long], segTokens: Int) extends BinaryExpression {
-  require(segTokens > 0, "segTokens must be positive")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_segs", LongType, nullable = false),
-    StructField("n_dropped", LongType, nullable = false),
-    StructField("clean_text", StringType, nullable = false)))
-
-  // sorted+deduped ONCE per plan, whatever order the caller passed
-  @transient private lazy val kArr: Array[Long] = {
-    val a = keys.distinct.toArray
-    java.util.Arrays.sort(a)
-    a
-  }
-
-  override protected def nullSafeEval(src: Any, text: Any): Any =
-    Native.scrubSegments(src.asInstanceOf[UTF8String],
-      text.asInstanceOf[UTF8String], kArr, segTokens)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("scrubKeys", kArr, "long[]")
-    defineCodeGen(ctx, ev, (s, t) =>
-      s"graft.plans.Native.scrubSegments($s, $t, $kRef, $segTokens)")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ScrubSegmentsExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** gopher_gram_stats(string) → struct(top2_cnt, top2_len, dup5_chars). */
-case class GopherGramStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("top2_cnt", LongType, nullable = false),
-    StructField("top2_len", LongType, nullable = false),
-    StructField("dup5_chars", LongType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.gopherGramStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.gopherGramStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherGramStatsExpr =
-    copy(child = newChild)
-}
-
-/** char_entropy9(string) → long (grid-quantized code-point entropy). */
-case class CharEntropyExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.charEntropy9(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.charEntropy9($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropyExpr =
-    copy(child = newChild)
-}
-
-/** rolling_hash(string) → long (mod 1e9+7, multiplier 31). */
-case class RollingHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.rollingHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.rollingHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
-    copy(child = newChild)
-}
-
-/** quality_counts(string) → struct(n_tokens, n_bpeish, n_punct,
-  * n_stop) — the fused quality counters. */
-case class QualityCountsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_bpeish", LongType, nullable = false),
-    StructField("n_punct", LongType, nullable = false),
-    StructField("n_stop", LongType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.qualityCounts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.qualityCounts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityCountsExpr =
-    copy(child = newChild)
-}
-
-/** tokens_of(string) → array<string> (lowercased whitespace tokens,
-  * empties dropped — the engine tokenizer as one codegen'd call). */
-case class TokensOfExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.tokensOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.tokensOf($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokensOfExpr =
-    copy(child = newChild)
-}
-
-/** normalized_rolling_hash(string) → long — tokenize + re-join + hash
-  * fused in one pass. */
-case class NormalizedRollingHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.normalizedRollingHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.normalizedRollingHash($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NormalizedRollingHashExpr =
-    copy(child = newChild)
-}
-
-/** winnow_fps(string, n, window) → array<long> (distinct kept
-  * fingerprints, first-kept order — md5 family, oracle-replayable). */
-case class WinnowFpsExpr(child: Expression, n: Int, window: Int)
-    extends UnaryExpression {
-  require(n > 0 && window > 0, "n and window must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.winnowFps(input.asInstanceOf[UTF8String], n, window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.winnowFps($c, $n, $window)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFpsExpr =
-    copy(child = newChild)
-}
-
-/** cdc_chunks(string, boundaryMod) → array<string> (content-defined
-  * chunks in document order — md5 boundary family, oracle-replayable). */
-case class CdcChunksExpr(child: Expression, boundaryMod: Int)
-    extends UnaryExpression {
-  require(boundaryMod > 0, "boundaryMod must be positive")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.cdcChunks(input.asInstanceOf[UTF8String], boundaryMod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.cdcChunks($c, $boundaryMod)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunksExpr =
-    copy(child = newChild)
-}
-
-/** nb_predict(string) → struct(n_tokens, best_idx, best_lp9) — the
-  * Naive Bayes lookup scorer; key/contribution tables are plan-time
-  * constants (Seq params for structural equality), shipped into
-  * generated code as reference objects. */
-case class NbPredictExpr(child: Expression, keys: Seq[Long],
-    contribs: Seq[Long], miss: Seq[Long], prior: Seq[Long],
-    hashMod: Int = 0) extends UnaryExpression {
-  require(miss.nonEmpty, "miss row must be non-empty")
-  require(prior.length == miss.length, "prior row must match label count")
-  require(contribs.length == keys.length * miss.length,
-    "contribution table shape mismatch")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("best_idx", IntegerType, nullable = false),
-    StructField("best_lp9", LongType, nullable = false),
-    StructField("second_lp9", LongType, nullable = false)))
-
-  @transient private lazy val kArr = keys.toArray
-  @transient private lazy val cArr = contribs.toArray
-  @transient private lazy val mArr = miss.toArray
-  @transient private lazy val pArr = prior.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.nbPredict(input.asInstanceOf[UTF8String], kArr, cArr, mArr, pArr,
-      hashMod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("nbKeys", kArr, "long[]")
-    val cRef = ctx.addReferenceObj("nbContribs", cArr, "long[]")
-    val mRef = ctx.addReferenceObj("nbMiss", mArr, "long[]")
-    val pRef = ctx.addReferenceObj("nbPrior", pArr, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.nbPredict($c, $kRef, $cRef, $mRef, $pRef, $hashMod)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NbPredictExpr =
-    copy(child = newChild)
-}
-
-/** worst_window(string) → struct(n_tokens, n_found, worst_start,
-  * worst_roll9) — the fused worst-window scan; key/log-prob tables are
-  * plan-time constants shipped as reference objects. */
-case class WorstWindowExpr(child: Expression, keys: Seq[Long],
-    lp9: Seq[Long], window: Int) extends UnaryExpression {
-  require(window > 0, "window must be positive")
-  require(keys.length == lp9.length, "key/lp9 tables must align")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_found", LongType, nullable = false),
-    StructField("worst_start", LongType, nullable = false),
-    StructField("worst_roll9", LongType, nullable = false)))
-
-  @transient private lazy val kArr = keys.toArray
-  @transient private lazy val lArr = lp9.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.worstWindow(input.asInstanceOf[UTF8String], kArr, lArr, window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("wwKeys", kArr, "long[]")
-    val lRef = ctx.addReferenceObj("wwLp9", lArr, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.worstWindow($c, $kRef, $lRef, $window)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WorstWindowExpr =
-    copy(child = newChild)
-}
-
-/** hash_feature_stats(string, dims) →
-  * struct(nnz, norm_sq, max_count, argmax_dim). */
-case class HashFeatureStatsExpr(child: Expression, dims: Int)
-    extends UnaryExpression {
-  require(dims > 0, "dims must be positive")
-  override def dataType: DataType = StructType(Seq(
-    StructField("nnz", LongType, nullable = false),
-    StructField("norm_sq", LongType, nullable = false),
-    StructField("max_count", LongType, nullable = false),
-    StructField("argmax_dim", IntegerType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.hashFeatureStats(input.asInstanceOf[UTF8String], dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.hashFeatureStats($c, $dims)")
-
-  override protected def withNewChildInternal(newChild: Expression): HashFeatureStatsExpr =
-    copy(child = newChild)
-}
-
-/** hashed_shingles(string, n) → array<long> (distinct, doc order). */
-case class HashedShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.hashedShingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.hashedShingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedShinglesExpr =
-    copy(child = newChild)
-}
-
-/** minhash_signature(string) → array<long> of `as.length` affine mins.
-  * Coefficients are plan-time constants (case-class params as Seq so
-  * equality/canonicalization stay structural), shipped into generated
-  * code as reference objects. */
-case class MinHashSigExpr(child: Expression, as: Seq[Long], bs: Seq[Long],
-    shingleN: Int) extends UnaryExpression {
-  require(as.length == bs.length && as.nonEmpty,
-    "coefficient seqs must be same-length and non-empty")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  @transient private lazy val asArr = as.toArray
-  @transient private lazy val bsArr = bs.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.minhashSignature(input.asInstanceOf[UTF8String], asArr, bsArr, shingleN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asRef = ctx.addReferenceObj("minhashAs", asArr, "long[]")
-    val bsRef = ctx.addReferenceObj("minhashBs", bsArr, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.minhashSignature($c, $asRef, $bsRef, $shingleN)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
-}
-
-/** simhash_md5(string) → long (60-bit, oracle-replayable md5 family —
-  * see [[Native.simhashMd5]]). */
-case class SimHashMd5Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.simhashMd5(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.simhashMd5($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashMd5Expr =
-    copy(child = newChild)
-}
-
-/** quantize_int8(array<float|double>) → array<double> of int8-grid
-  * values (see [[Native.quantizeInt8]]). */
-case class QuantizeInt8Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.quantizeInt8(input.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.quantizeInt8($c, $isFloat)")
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8Expr =
-    copy(child = newChild)
-}
-
-/** bpe_token_count(string) → long over a plan-time-constant merges
-  * table (case-class param as Seq of pairs so equality/
-  * canonicalization stay structural), shipped into generated code as
-  * reference arrays. */
-case class BpeTokenCountExpr(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  @transient private lazy val maArr = merges.map(_._1).toArray
-  @transient private lazy val mbArr = merges.map(_._2).toArray
-  @transient private lazy val mabArr = merges.map(p => p._1 + p._2).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.bpeTokenCount(input.asInstanceOf[UTF8String], maArr, mbArr, mabArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val maRef = ctx.addReferenceObj("bpeMa", maArr, "java.lang.String[]")
-    val mbRef = ctx.addReferenceObj("bpeMb", mbArr, "java.lang.String[]")
-    val mabRef = ctx.addReferenceObj("bpeMab", mabArr, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.bpeTokenCount($c, $maRef, $mbRef, $mabRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeTokenCountExpr =
-    copy(child = newChild)
-}
-
-/** bpe_pieces(word) → array<string> of merges-applied subword pieces. */
-case class BpePiecesExpr(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  @transient private lazy val maArr = merges.map(_._1).toArray
-  @transient private lazy val mbArr = merges.map(_._2).toArray
-  @transient private lazy val mabArr = merges.map(p => p._1 + p._2).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.bpePieces(input.asInstanceOf[UTF8String], maArr, mbArr, mabArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val maRef = ctx.addReferenceObj("bpeMa", maArr, "java.lang.String[]")
-    val mbRef = ctx.addReferenceObj("bpeMb", mbArr, "java.lang.String[]")
-    val mabRef = ctx.addReferenceObj("bpeMab", mabArr, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.bpePieces($c, $maRef, $mbRef, $mabRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpePiecesExpr =
-    copy(child = newChild)
-}
-
-/** dot(array<float|double>, array<float|double>) → double.
-  * Length mismatch → null, matching `aggregate(zip_with(...))`
-  * (zip_with null-pads the shorter side, poisoning the sum) — a
-  * silently truncated dot product would hide data corruption. */
-/** dsir_score(text) → struct(n_feats, s9) under a plan-time dense
-  * per-bucket 1e-9-grid log-ratio table (length = bucket count). */
-case class DsirScoreExpr(child: Expression, lr9: Seq[Long])
-    extends UnaryExpression {
-  require(lr9.nonEmpty, "ratio table must be non-empty")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_feats", LongType, nullable = false),
-    StructField("s9", LongType, nullable = false)))
-
-  @transient private lazy val lrArr = lr9.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.dsirScore(input.asInstanceOf[UTF8String], lrArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lrRef = ctx.addReferenceObj("dsirLr9", lrArr, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.dsirScore($c, $lrRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DsirScoreExpr =
-    copy(child = newChild)
-}
-
-/** langid_score(string) → struct(n_trigrams, s_<lang>…): fused
-  * trigram-profile scoring over a precomputed contribution table (see
-  * [[Native.langIdScore]]). The table ships once per plan via
-  * `addReferenceObj` (bounded by the trigram SPACE, not the corpus —
-  * the same boundedness that lets the profile broadcast). */
-case class LangIdScoreExpr(child: Expression, langs: Seq[String],
-    keys: Seq[Long], contribs: Seq[Long], miss: Seq[Long])
-    extends UnaryExpression {
-  require(langs.nonEmpty, "langs must be non-empty")
-  require(miss.length == langs.length, "miss row must have one entry per language")
-  require(contribs.length == keys.length * langs.length,
-    "contribution table shape mismatch")
-
-  override def dataType: DataType = StructType(
-    StructField("n_trigrams", LongType, nullable = false) +:
-      langs.map(l => StructField(s"s_$l", LongType, nullable = false)))
-
-  @transient private lazy val kArr = keys.toArray
-  @transient private lazy val cArr = contribs.toArray
-  @transient private lazy val mArr = miss.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.langIdScore(input.asInstanceOf[UTF8String], kArr, cArr, mArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("langidKeys", kArr, "long[]")
-    val cRef = ctx.addReferenceObj("langidContribs", cArr, "long[]")
-    val mRef = ctx.addReferenceObj("langidMiss", mArr, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.langIdScore($c, $kRef, $cRef, $mRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangIdScoreExpr =
-    copy(child = newChild)
-}
-
-case class DotProductExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (x.numElements() != y.numElements()) null
-    else Native.dot(x, y, isFloat(left), isFloat(right))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.plans.Native.dot($a, $b, ${isFloat(left)}, ${isFloat(right)});
-         |}
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** pq_codes(vec) → array<int>: every PQ subspace's nearest-sub-centroid
-  * code in ONE call over a plan-shipped flattened codebook — the
-  * [[graft.ext.Similarity.pqEncode]] kernel. A Column formulation (k·m
-  * dot structs over an unrolled normalize) is semantically identical
-  * but compiles a huge codegen unit per plan; this kernel is one
-  * method call. Folds are the same left-to-right per-element widening
-  * as [[DotProductExpr]], so codes replay in DuckDB (x_pq_recall). */
-case class PqCodesExpr(child: Expression, books: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
-  require(books.nonEmpty && books.forall(_.nonEmpty),
-    "codebooks must be non-empty")
-  private val sub = books.head.head.length
-  require(books.forall(_.forall(_.length == sub)),
-    "all sub-centroids must share one subspace dim")
-  private val k = books.head.length
-  require(books.forall(_.length == k),
-    "all codebooks must share one size")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  @transient private lazy val flatArr: Array[Double] =
-    books.flatten.flatten.toArray
-  // ‖c‖² via the same left fold as the Column/oracle formulation
-  @transient private lazy val normSqArr: Array[Double] =
-    books.flatten.map(c => c.map(x => x * x).sum).toArray
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.pqCodes(input.asInstanceOf[ArrayData], flatArr, normSqArr,
-      books.length, k, sub, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fRef = ctx.addReferenceObj("pqFlat", flatArr, "double[]")
-    val nRef = ctx.addReferenceObj("pqNormSq", normSqArr, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.Native.pqCodes($c, $fRef, $nRef, ${books.length}, $k, " +
-        s"$sub, $isFloat)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqCodesExpr =
-    copy(child = newChild)
-}
-
-/** nearest_centroids(vec) → array<int>: the first `probes` centroid ids
-  * of `vec` by squared L2 ([[Native.nearestIds]]) in ONE call over
-  * plan-shipped centroids — IVF training, assignment and probing share
-  * it. Never null: a null vector gets `[0, 1, …]`, as its all-null
-  * distances sort by id. */
-case class NearestCentroidsExpr(child: Expression, cents: Seq[Seq[Double]],
-    probes: Int) extends UnaryExpression {
-  require(cents.nonEmpty, "centroids must be non-empty")
-  require(probes >= 0, s"probes must be non-negative, got $probes")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-
-  @transient private lazy val centArr: Array[Array[Double]] =
-    cents.map(_.toArray).toArray
-  @transient private lazy val normSqArr: Array[Double] =
-    cents.map(c => c.map(x => x * x).sum).toArray
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def eval(input: InternalRow): Any =
-    Native.nearestCentroids(child.eval(input).asInstanceOf[ArrayData],
-      isFloat, centArr, normSqArr, probes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cRef = ctx.addReferenceObj("ivfCents", centArr, "double[][]")
-    val nRef = ctx.addReferenceObj("ivfNormSq", normSqArr, "double[]")
-    ev.copy(code = code"""
-      ${c.code}
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        graft.plans.Native.nearestCentroids(${c.isNull} ? null : ${c.value},
-          $isFloat, $cRef, $nRef, $probes);
-    """, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidsExpr =
-    copy(child = newChild)
-}
-
-/** decode_entities(string) → string — fused HTML entity decode
-  * (named + numeric refs, `&amp;` last), one codegen'd call replacing
-  * the interpreted `transform`/`zip_with` reference-mapping chain. */
-case class DecodeEntitiesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.decodeEntities(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.decodeEntities($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodeEntitiesExpr =
-    copy(child = newChild)
-}
-
-/** remove_dot_segments(string) → string — RFC 3986 §5.2.4 over a
-  * rooted path, one codegen'd call. */
-case class RemoveDotSegmentsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.removeDotSegments(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.removeDotSegments($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RemoveDotSegmentsExpr =
-    copy(child = newChild)
-}
-
-/** resolve_href(base, href) → string — RFC 3986 §5.2 merge + §5.2.4
-  * dot-segment removal, one codegen'd call. */
-case class ResolveHrefExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(base: Any, href: Any): Any =
-    Native.resolveHref(base.asInstanceOf[UTF8String],
-      href.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, h) => s"graft.plans.Native.resolveHref($b, $h)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ResolveHrefExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** gzip(binary) → binary — one deterministic RFC 1952 member. */
-case class GzipMemberExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.gzipMember(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.gzipMember($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GzipMemberExpr =
-    copy(child = newChild)
-}
-
-/** zlib(binary) → binary: one deterministic RFC 1950 zlib stream —
-  * the `Content-Encoding: deflate` render twin of [[GzipMemberExpr]]. */
-case class ZlibMemberExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.zlibMember(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.zlibMember($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ZlibMemberExpr =
-    copy(child = newChild)
-}
-
-/** gunzip_try(binary) → struct(ok, data) — member-walking inflate,
-  * corruption degraded to (false, null). */
-case class GunzipTryExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("ok", BooleanType, nullable = false),
-    StructField("data", BinaryType, nullable = true)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.gunzipTry(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.gunzipTry($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): GunzipTryExpr =
-    copy(child = newChild)
-}
-
-/** decode_charset(binary, string) → string — per-row bounded-table
-  * multi-byte charset decode, malformed bytes → U+FFFD. */
-case class DecodeCharsetExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(bytes: Any, charset: Any): Any =
-    Native.decodeCharset(bytes.asInstanceOf[Array[Byte]],
-      charset.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, c) => s"graft.plans.Native.decodeCharset($b, $c)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DecodeCharsetExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** decode_http_body(view, te, ce) → struct(ok, body) — fused
-  * chunked-then-gzip wire-coding decode, one pass per row. */
-case class DecodeHttpBodyExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("ok", BooleanType, nullable = false),
-    StructField("body", StringType, nullable = true)))
-
-  override protected def nullSafeEval(view: Any, te: Any, ce: Any): Any =
-    Native.decodeHttpBody(view.asInstanceOf[UTF8String],
-      te.asInstanceOf[UTF8String], ce.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (v, t, c) => s"graft.plans.Native.decodeHttpBody($v, $t, $c)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): DecodeHttpBodyExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** dechunk_try(string) → struct(ok, text) — HTTP/1.1 chunked
-  * transfer framing removed from a latin-1 byte-view string,
-  * malformed framing degraded to (false, null). */
-case class DechunkTryExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("ok", BooleanType, nullable = false),
-    StructField("text", StringType, nullable = true)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    Native.dechunkTry(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Native.dechunkTry($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DechunkTryExpr =
-    copy(child = newChild)
-}
-
-/** Column-level entry points. */
-object NativeFunctions {
-  def removeDotSegments(path: Column): Column =
-    ColumnBridge.column(RemoveDotSegmentsExpr(ColumnBridge.expression(path)))
-
-  def resolveHref(base: Column, href: Column): Column =
-    ColumnBridge.column(ResolveHrefExpr(ColumnBridge.expression(base),
-      ColumnBridge.expression(href)))
-
-  def gzip(bytes: Column): Column =
-    ColumnBridge.column(GzipMemberExpr(ColumnBridge.expression(bytes)))
-
-  def zlib(bytes: Column): Column =
-    ColumnBridge.column(ZlibMemberExpr(ColumnBridge.expression(bytes)))
-
-  def gunzipTry(bytes: Column): Column =
-    ColumnBridge.column(GunzipTryExpr(ColumnBridge.expression(bytes)))
-
-  def dechunkTry(view: Column): Column =
-    ColumnBridge.column(DechunkTryExpr(ColumnBridge.expression(view)))
-
-  def decodeCharset(bytes: Column, charset: Column): Column =
-    ColumnBridge.column(DecodeCharsetExpr(ColumnBridge.expression(bytes),
-      ColumnBridge.expression(charset)))
-
-  def decodeHttpBody(view: Column, te: Column, ce: Column): Column =
-    ColumnBridge.column(DecodeHttpBodyExpr(ColumnBridge.expression(view),
-      ColumnBridge.expression(te), ColumnBridge.expression(ce)))
-  def simhash(tokens: Column): Column =
-    ColumnBridge.column(SimHashExpr(ColumnBridge.expression(tokens)))
-
-  def decodeEntities(str: Column): Column =
-    ColumnBridge.column(DecodeEntitiesExpr(ColumnBridge.expression(str)))
-
-  def rollingHash(str: Column): Column =
-    ColumnBridge.column(RollingHashExpr(ColumnBridge.expression(str)))
-
-  def normalizedRollingHash(str: Column): Column =
-    ColumnBridge.column(NormalizedRollingHashExpr(ColumnBridge.expression(str)))
-
-  def tokensOf(str: Column): Column =
-    ColumnBridge.column(TokensOfExpr(ColumnBridge.expression(str)))
-
-  def qualityCounts(str: Column): Column =
-    ColumnBridge.column(QualityCountsExpr(ColumnBridge.expression(str)))
-
-  def charEntropy9(str: Column): Column =
-    ColumnBridge.column(CharEntropyExpr(ColumnBridge.expression(str)))
-
-  def hashedShingles(text: Column, n: Int): Column =
-    ColumnBridge.column(HashedShinglesExpr(ColumnBridge.expression(text), n))
-
-  def minhashSignature(text: Column, as: Seq[Long], bs: Seq[Long],
-      shingleN: Int): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(text), as, bs, shingleN))
-
-  def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def quantizeInt8(v: Column): Column =
-    ColumnBridge.column(QuantizeInt8Expr(ColumnBridge.expression(v)))
-
-  def simhashMd5(text: Column): Column =
-    ColumnBridge.column(SimHashMd5Expr(ColumnBridge.expression(text)))
-
-  def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(BpeTokenCountExpr(ColumnBridge.expression(text), merges))
-
-  def gopherGramStats(text: Column): Column =
-    ColumnBridge.column(GopherGramStatsExpr(ColumnBridge.expression(text)))
-
-  def mattrStats(text: Column, window: Int): Column =
-    ColumnBridge.column(MattrStatsExpr(ColumnBridge.expression(text), window))
-
-  def scrubSegments(source: Column, text: Column, keys: Seq[Long],
-      segTokens: Int): Column =
-    ColumnBridge.column(ScrubSegmentsExpr(ColumnBridge.expression(source),
-      ColumnBridge.expression(text), keys, segTokens))
-
-  def charTrigramHashes(text: Column): Column =
-    ColumnBridge.column(CharTrigramHashesExpr(ColumnBridge.expression(text)))
-
-  def bpePieces(word: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(BpePiecesExpr(ColumnBridge.expression(word), merges))
-
-  def dsirScore(text: Column, lr9: Seq[Long]): Column =
-    ColumnBridge.column(DsirScoreExpr(ColumnBridge.expression(text), lr9))
-
-  def langIdScore(text: Column, langs: Seq[String], keys: Seq[Long],
-      contribs: Seq[Long], miss: Seq[Long]): Column =
-    ColumnBridge.column(LangIdScoreExpr(ColumnBridge.expression(text),
-      langs, keys, contribs, miss))
-
-  def nbPredict(text: Column, keys: Seq[Long], contribs: Seq[Long],
-      miss: Seq[Long], prior: Seq[Long], hashMod: Int = 0): Column =
-    ColumnBridge.column(NbPredictExpr(ColumnBridge.expression(text),
-      keys, contribs, miss, prior, hashMod))
-
-  def worstWindow(text: Column, keys: Seq[Long], lp9: Seq[Long],
-      window: Int): Column =
-    ColumnBridge.column(WorstWindowExpr(ColumnBridge.expression(text),
-      keys, lp9, window))
-
-  def winnowFps(text: Column, n: Int, window: Int): Column =
-    ColumnBridge.column(WinnowFpsExpr(ColumnBridge.expression(text), n, window))
-
-  def cdcChunks(text: Column, boundaryMod: Int): Column =
-    ColumnBridge.column(CdcChunksExpr(ColumnBridge.expression(text), boundaryMod))
-
-  def hashFeatureStats(text: Column, dims: Int): Column =
-    ColumnBridge.column(HashFeatureStatsExpr(ColumnBridge.expression(text), dims))
-
-  def pqCodes(vec: Column, books: Seq[Seq[Seq[Double]]]): Column =
-    ColumnBridge.column(PqCodesExpr(ColumnBridge.expression(vec), books))
-
-  def nearestCentroids(vec: Column, cents: Seq[Seq[Double]], probes: Int): Column =
-    ColumnBridge.column(NearestCentroidsExpr(ColumnBridge.expression(vec),
-      cents, probes))
 }

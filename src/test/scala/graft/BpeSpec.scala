@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.{Bpe, TextStats}
 
 /** BPE merge training + merges-based counting (ext/Bpe.scala,
-  * plans/NativeExpressions.scala BpeTokenCountExpr). */
+  * the bpeTokenCount kernel of plans/NativeExpressions.scala). */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 

@@ -2373,6 +2373,26 @@ class ExtSpec extends SparkSpec {
       spark.sql("SELECT graft_hashed_shingles(text, id + 1) FROM ext_probe").collect()
     }
     ex.getMessage should include("literal")
+    // ... and so is every other literal-int parameter
+    Seq("graft_minhash_signature(text, id + 1, 3)",
+      "graft_minhash_signature(text, 8, id + 1)", "graft_winnow_fps(text, id + 1, 4)",
+      "graft_winnow_fps(text, 3, id + 1)", "graft_cdc_chunks(text, id + 1)",
+      "graft_hash_features(text, id + 1)").foreach { call =>
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM ext_probe").collect())
+      withClue(call) { e.getMessage should include("literal") }
+    }
+    // every registered name resolves, and a wrong arity says so
+    Seq("graft_simhash" -> 1, "graft_rolling_hash" -> 1,
+      "graft_hashed_shingles" -> 2, "graft_dot" -> 2,
+      "graft_minhash_signature" -> 3, "graft_tokens" -> 1,
+      "graft_winnow_fps" -> 3, "graft_cdc_chunks" -> 2,
+      "graft_quality_counts" -> 1, "graft_hash_features" -> 2,
+      "graft_normalize_url" -> 1, "graft_url_domain" -> 1).foreach { case (name, n) =>
+      spark.catalog.functionExists(name) shouldBe true
+      val args = Seq.fill(n + 1)("text").mkString(", ")
+      val e = intercept[Exception](spark.sql(s"SELECT $name($args) FROM ext_probe").collect())
+      e.getMessage should include(s"$name expects $n argument(s), got ${n + 1}")
+    }
     // the round-12 kernels are registered too, and match their Column
     // twins exactly
     val r12 = spark.sql(

@@ -557,7 +557,7 @@ class ScaleSpec extends SparkSpec {
     gPlan should not include "Exchange"
     gPlan should not include "Generate"
     gPlan should not include "Join"
-    gPlan should include("gophergramstats")
+    gPlan should include("Native.gopherGramStats(")
   }
 
   test("cms: grid aggregates partially over a constant key space; probe join is broadcast") {
@@ -721,7 +721,7 @@ class ScaleSpec extends SparkSpec {
     // collect over the ≤buckets-row joined profiles — the IVF-centroid
     // posture); the QUERY is then one stateless codegen projection,
     // which is also what makes the same call legal on a readStream
-    plan should include("dsirscore")
+    plan should include("Native.dsirScore(")
     plan should not include "Exchange"
     plan should not include "Generate"
     plan should not include "Join"
@@ -774,15 +774,15 @@ class ScaleSpec extends SparkSpec {
     val perQuery = Similarity.pqTopK(emb, queries, cb, kNeighbors = 5)
       .orderBy("query_id", "rank")
     probe.collect().toSeq shouldBe perQuery.collect().toSeq
-    // the probe plan reads the persisted code table — the pqcodesexpr
+    // the probe plan reads the persisted code table — the pqCodes
     // kernel (encoding) never runs at probe time; the only Generate is
     // the TopK buffer explode. (Training is driver-side collects and
     // cannot appear in any plan — its absence is the ensure guard.)
     val plan = probe.queryExecution.executedPlan.toString
-    plan.toLowerCase should not include "pqcodesexpr"
+    plan should not include "Native.pqCodes("
     plan should include("FileScan")
     Similarity.pqEncode(emb, cb).queryExecution.executedPlan
-      .toString.toLowerCase should include("pqcodesexpr")
+      .toString should include("Native.pqCodes(")
     // re-ensure is idempotent; probe repeats
     Similarity.ensurePqIndex(emb, name)
     Similarity.pqProbeTopK(spark, name, queries, kNeighbors = 5)
