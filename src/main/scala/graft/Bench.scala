@@ -1,5 +1,14 @@
 package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
 object Bench {
   /** Core count of every graft main's session (`SPARK_GRAFT_CPUS`). */
   val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -33,227 +42,206 @@ object Bench {
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
   }
+
+  /** Scheduler counts of one Spark job, or of a whole run (id -1):
+    * completed stages, ended tasks and their summed duration, and the
+    * tasks' shuffle read/write and spill (memory + disk) bytes. `site`
+    * names the action that launched the job. */
+  final case class JobCost(id: Int, site: String, stages: Int = 0, tasks: Int = 0,
+      taskMs: Long = 0L, shuffleRead: Long = 0L, shuffleWrite: Long = 0L, spill: Long = 0L) {
+    def +(o: JobCost): JobCost = copy(stages = stages + o.stages, tasks = tasks + o.tasks,
+      taskMs = taskMs + o.taskMs, shuffleRead = shuffleRead + o.shuffleRead,
+      shuffleWrite = shuffleWrite + o.shuffleWrite, spill = spill + o.spill)
+  }
+
+  /** One run's wall time, its scheduler totals, the generated classes it
+    * compiled and their compile time (Spark's codegen cache misses), and
+    * its jobs in start order. */
+  final case class RunCost(wall: Double, total: JobCost, compiles: Long,
+      compileMs: Double, perJob: Seq[JobCost]) {
+    def jobs: Int = perJob.size
+    def stages: Int = total.stages
+    def tasks: Int = total.tasks
+    def taskMs: Long = total.taskMs
+  }
+
+  /** Counts every job, completed stage and ended task since `reset`, in
+    * total and per job (a stage belongs to the last started job that
+    * lists it). A job that runs for a SQL execution — AQE's stage jobs
+    * included — is named by the action that started the execution's root;
+    * a job outside any execution (an `RDD` action) by its result stage,
+    * whose name is its call site. The listener bus calls it from its own
+    * thread. */
+  final class CostListener extends SparkListener {
+    private val jobs = mutable.LinkedHashMap[Int, JobCost]()
+    private val stageJob = mutable.Map[Int, Int]()
+    private val executions = mutable.Map[Long, String]()
+    private var total = JobCost(-1, "")
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        executions(s.executionId) =
+          s.rootExecutionId.flatMap(executions.get).getOrElse(s.description)
+      }
+      case _ =>
+    }
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      val execution = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      jobs(j.jobId) = JobCost(j.jobId, execution.flatMap(id => executions.get(id.toLong))
+        .getOrElse(j.stageInfos.lastOption.map(_.name).getOrElse("?")))
+      j.stageIds.foreach(stageJob(_) = j.jobId)
+    }
+    private def add(stageId: Int, c: JobCost): Unit = synchronized {
+      total += c
+      stageJob.get(stageId).foreach(id => jobs(id) += c)
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      add(s.stageInfo.stageId, JobCost(-1, "", stages = 1))
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val m = Option(t.taskMetrics)
+      add(t.stageId, JobCost(-1, "", tasks = 1,
+        taskMs = if (t.taskInfo != null) t.taskInfo.duration else 0L,
+        shuffleRead = m.fold(0L)(_.shuffleReadMetrics.totalBytesRead),
+        shuffleWrite = m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+        spill = m.fold(0L)(x => x.memoryBytesSpilled + x.diskBytesSpilled)))
+    }
+    def reset(): Unit = synchronized {
+      jobs.clear(); stageJob.clear(); executions.clear(); total = JobCost(-1, "")
+    }
+    def result(wall: Double, compiles: Long, compileMs: Double): RunCost = synchronized {
+      RunCost(wall, total, compiles, compileMs, jobs.values.toList)
+    }
+  }
+
+  /** `body` with one [[CostListener]] attached to the session. */
+  def withCostListener[A](spark: SparkSession)(body: CostListener => A): A = {
+    val listener = new CostListener
+    spark.sparkContext.addSparkListener(listener)
+    try body(listener) finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** One [[timed]] run of `fn` counted by `listener`. The bus is drained
+    * before and after, outside the timed region, so the run counts only
+    * its own events. Compiles and compile time are the deltas of Spark's
+    * JVM-wide codegen counters (`CodegenMetrics`, `CodeGenerator`). */
+  def costed(spark: SparkSession, sfDir: String, fn: (SparkSession, String) => DataFrame,
+      listener: CostListener): RunCost = {
+    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 10000)
+    listener.reset()
+    val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val wall = timed(spark, sfDir, fn)
+    val (c1, ns1) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 10000)
+    listener.result(wall, c1 - c0, (ns1 - ns0) / 1e6)
+  }
+
+  /** One query's record: the min and median wall of its `runs` trials
+    * (-1 when a trial failed) and the counts of its last trial. */
+  final case class Trial(min: Double, median: Double, cost: Option[RunCost])
+
+  /** Per-query values rounded to ~1 ms (half-to-even): full-precision
+    * doubles overflowed a ~2000-char capture of stdout's tail. The
+    * totals are rounded AFTER summing, so the map entries' sum can drift
+    * from them by a few ms. */
+  private def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  /** A sweep's per-query trials and what they sum to. The totals cover
+    * successful queries only (a -1 folded in would corrupt them). The
+    * contention stamp is median_total / total: an uncontended sweep sits
+    * near 1.0–1.1. `id` stamps the detail file and the headline alike, so
+    * matching ids prove the two record the same sweep. */
+  final case class Sweep(sfDir: String, results: Seq[(String, Trial)],
+      id: String = java.lang.Long.toHexString(System.currentTimeMillis())) {
+    val total: Double = r3(results.map(_._2.min).filter(_ >= 0).sum)
+    val medianTotal: Double = r3(results.map(_._2.median).filter(_ >= 0).sum)
+    val contention: Double = if (total > 0) r3(medianTotal / total) else -1.0
+    private def map(v: Trial => String): String =
+      results.map { case (k, t) => s"\"$k\":${v(t)}" }.mkString("{", ",", "}")
+    val mins: String = map(t => r3(t.min).toString)
+    val medians: String = map(t => r3(t.median).toString)
+    val costs: String = map(_.cost.fold("null") { c =>
+      s"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"task_ms":${c.taskMs},""" +
+        s""""shuffle_read_bytes":${c.total.shuffleRead},"shuffle_write_bytes":${c.total.shuffleWrite},""" +
+        s""""spill_bytes":${c.total.spill}}"""
+    })
+    /** The detail file: every per-query map, one per line. */
+    def detail: String =
+      s"""{"sf":"$sfDir","sweep":"$id","cpus":${scala.util.Try(cpus.trim.toInt).getOrElse(-1)},"estimator":"min_of_$runs","total":$total,"median_total":$medianTotal,"contention":$contention,"n_queries":${results.size},
+         |"queries_min":$mins,
+         |"queries_median":$medians,
+         |"queries_cost":$costs}
+         |""".stripMargin
+    /** The stdout headline: map-free, so it stays a few hundred chars at
+      * any query count and survives a capture of stdout's tail. */
+    def headline: String =
+      s"""{"metric":"total","value":$total,"unit":"sec","estimator":"min_of_$runs","median_total":$medianTotal,"contention":$contention,"n_queries":${results.size},"sweep":"$id","sf":"$sfDir"}"""
+  }
+
+  /** Runs each of `names` `runs` times in Bench's timed region, in the
+    * given order, under one [[CostListener]] that counts each query's
+    * last trial. min-of-N is the headline estimator (the fastest trial is
+    * the closest observation of a query's cost under load); the median
+    * shows the spread. A failed trial records -1, never a partial time,
+    * and ends that query's trials. */
+  def sweep(spark: SparkSession, sfDir: String, names: Seq[String]): Sweep =
+    Sweep(sfDir, withCostListener(spark) { listener =>
+      names.map { name =>
+        val fn = SparkEntry.queries(name)
+        try {
+          val early = (1 until runs).map(_ => timed(spark, sfDir, fn))
+          val last = costed(spark, sfDir, fn, listener)
+          val times = (early :+ last.wall).sorted
+          name -> Trial(times.head, times((times.size - 1) / 2), Some(last))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          System.err.println(s"[bench] RESULT INCOMPLETE: $name recorded as -1")
+          name -> Trial(-1.0, -1.0, None)
+        }
+      }
+    })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session()
-    // Numeric cpu stamp for the detail artifact (-1 when the env value
-    // is non-numeric, e.g. local[*]): triage baselines must only be
-    // compared within one core count.
-    val cpusStamp = scala.util.Try(cpus.trim.toInt).getOrElse(-1)
     warmUp(spark, sfDir)
-    // Deterministic (sorted) run order: Map iteration order shifts as
-    // queries are added, which silently reshuffles warm-up/GC effects
-    // between rounds; sorted order keeps per-query numbers comparable.
-    // Median of N runs per query (default 3): a single-shot wall clock on
-    // a shared machine can misreport a 2 s query as 50 s when another
-    // process holds the cores mid-run; the median discards one bad trial
-    // per query, making the reported number load-robust.
-    // min-of-N is the headline estimator: under sustained external load the
-    // median still drifts (3 contended trials → contended median), whereas the
-    // min is the classic load-robust wall-clock estimator — the fastest trial
-    // is the closest observation of the query's true cost. The median is kept
-    // alongside for visibility into run-to-run spread.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Any failed trial records sentinel -1, never a partial elapsed
-      // time — downstream consumers must not mistake a crash for a fast
-      // run (and the total must not silently shrink). A failure ends the
-      // query's trials: the rest would only add wall-clock for no signal.
-      try {
-        val times = (1 to runs).map(_ => timed(spark, sfDir, fn))
-        name -> (times.min, times.sorted.apply((times.size - 1) / 2))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        name -> (-1.0, -1.0)
-      }
-    }
-    results.collect { case (n, (v, _)) if v < 0 => n }.foreach { n =>
-      System.err.println(s"[bench] RESULT INCOMPLETE: $n recorded as -1")
-    }
-    // Per-query values rounded to ~1 ms (math.rint = half-to-even at the
-    // .5 ulp ties): full-precision doubles made the combined line ~4.5k
-    // chars, which overflowed the driver's ~2000-char stdout tail capture
-    // in round 6 (BENCH_r06 parsed:null — the headline totals at the
-    // FRONT of the line were truncated away). NOTE: the headline totals
-    // are rounded AFTER summing full-precision values, so summing the
-    // per-query map entries can drift from "value" by a few ms — that is
-    // rounding, not a bench regression.
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, (mn, _)) => s"\"" + k + "\":" + r3(mn) }
-      .mkString("{", ",", "}")
-    val qsMed = results.map { case (k, (_, md)) => s"\"" + k + "\":" + r3(md) }
-      .mkString("{", ",", "}")
-    // totals sum successful runs only; failures are visible as -1 in
-    // the per-query maps (a -1 folded into the total would corrupt it).
-    val total = r3(results.map(_._2._1).filter(_ >= 0).sum)
-    val totalMed = r3(results.map(_._2._2).filter(_ >= 0).sum)
-    // Detail lines FIRST, compact headline LAST — and the headline must
-    // NOT carry the per-query maps: the driver keeps only a ~2000-char
-    // stdout tail and parses the final JSON line, and at 78 queries a
-    // map-bearing headline (~24 chars/entry even at 1 ms rounding)
-    // overflows that tail and truncates its own totals — the round-6
-    // failure repeated. The min/median maps get their own earlier
-    // lines; the final line stays a few hundred chars at any query
-    // count.
-    // The stdout detail lines above only survive in the driver artifact
-    // for the last ~2000 chars (round-12 finding: only the alphabetical
-    // tail of 205 queries was cross-round comparable). Persist the FULL
-    // per-query min/median maps to a repo file — committed each round,
-    // so git history carries every query's timing across rounds.
+    // Sorted order: map iteration order shifts as queries are added, which
+    // would reshuffle warm-up/GC effects between rounds.
+    val result = sweep(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
+    // Above 1.15 the machine was loaded during the sweep. Times then do not
+    // compare across sweeps, but counts do: they do not change with load.
+    if (result.contention > 1.15)
+      System.err.println(f"[bench] WARNING: sweep contention ${result.contention}%.3f" +
+        " (median/min > 1.15) — machine was loaded; per-query times are NOT" +
+        " comparable across sweeps. Compare queries_cost first: a query whose" +
+        " counts did not change did the same work, and its slower time is load")
+    // The full per-query maps go to a file (the stdout lines below survive
+    // only in a ~2000-char tail capture), committed each round, plus a
+    // round-stamped copy when SPARK_GRAFT_ROUND names the round.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_detail.json")
-    // Sweep id stamped into BOTH the detail file and the stdout
-    // headline: the same Bench binary runs several times a round
-    // (builder iteration + the driver's measured sweep), so matching
-    // ids are the only proof a committed detail file records the SAME
-    // sweep the round's headline came from — unmatched ids mean the
-    // per-query series and the headline must not be diffed against
-    // each other.
-    val sweepId = java.lang.Long.toHexString(System.currentTimeMillis())
-    // Sweep-contention stamp: median_total / total (the "median/min"
-    // ratio). An uncontended sweep sits near 1.0–1.1; three judge
-    // rounds in a row burned time adjudicating 10–23× phantom
-    // per-query regressions manufactured by contended sweeps (r18:
-    // 1.39), so the artifact now self-describes — above 1.15 a
-    // WARNING tells the reader per-query deltas are not comparable
-    // until re-measured in isolation (graft.examples.Probe time).
-    val contention =
-      if (total > 0) math.rint(totalMed / total * 1000) / 1000 else -1.0
-    if (contention > 1.15)
-      System.err.println(f"[bench] WARNING: sweep contention $contention%.3f" +
-        " (median/min > 1.15) — machine was loaded; per-query numbers are" +
-        " NOT comparable across sweeps, re-measure suspects with" +
-        " graft.examples.Probe time before believing any regression")
-    // Ghost AUTO-TRIAGE: a contended sweep manufactures 2-20× phantom
-    // per-query regressions (three judge rounds burned time clearing
-    // them by hand). Runs on EVERY sweep since r21 — both r20 sweeps
-    // ghosted UNDER the old contention>1.15 trigger (g_anomalies 12×
-    // at 1.105, isolated map empty): bursty load inflates a FEW
-    // queries without moving the whole-sweep ratio, so the contention
-    // stamp stays as ANNOTATION while the suspect scan always runs.
-    // Re-run — after the sweep, min-of-2, one query at a time — every
-    // query whose sweep min exceeds the last committed detail's min by
-    // >1.5×, and publish the re-measured numbers as the `isolated`
-    // map: the artifact then adjudicates its own ghosts. Re-runs are
-    // capped (worst-case wall-clock bound); the previous detail comes
-    // from the highest round-stamped BENCH_detail_r*.json next to the
-    // output EXCLUDING the round being written (a re-run within one
-    // round must not baseline against its own earlier numbers),
-    // falling back to BENCH_detail.json.
-    val detailDir = {
-      val d = new java.io.File(detailPath).getAbsoluteFile.getParentFile
-      if (d == null) new java.io.File(".") else d
-    }
-    // Round number, resolved ONCE for both the triage baseline pick
-    // and the round-stamped copy below: SPARK_GRAFT_ROUND, or none —
-    // then no round-stamped copy is written (a number inferred from the
-    // committed BENCH_r*.json files mis-stamps any re-run).
-    val thisRound: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-    def prevMins(dir: java.io.File): Map[String, Double] = {
-      val roundRe = """BENCH_detail_r(\d+)\.json""".r
-      val files = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      val stamped = files.flatMap(f => f.getName match {
-        case roundRe(n) => Some(n.toInt -> f)
-        case _          => None
-      }).filter { case (n, _) => !thisRound.contains(n) }
-      def read(f: java.io.File): Option[String] = scala.util.Try {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString finally src.close()
-      }.toOption
-      // Skip baselines recorded at a DIFFERENT core count: the round-21
-      // driver's post-round 8-core sweep round-stamped itself r22, and
-      // triaging a 32-core sweep against 8-core minima flags everything
-      // (or nothing) wrong. A detail without a cpus stamp (pre-r22
-      // rounds — all 32-core) is accepted, with a warning.
-      def cpusOk(txt: String): Boolean =
-        """"cpus":(-?\d+)""".r.findFirstMatchIn(txt)
-          .forall(_.group(1) == cpusStamp.toString)
-      val chosen: Option[(String, String)] =
-        stamped.sortBy(-_._1).view.flatMap { case (_, f) => read(f).map(f.getName -> _) }
-          .find(c => cpusOk(c._2))
-          .orElse(files.find(_.getName == "BENCH_detail.json")
-            .flatMap(f => read(f).map(f.getName -> _)).filter(c => cpusOk(c._2)))
-      chosen.foreach { case (name, txt) =>
-        if (name == "BENCH_detail.json")
-          System.err.println(s"[bench] WARNING: ghost triage baselines against the " +
-            s"unstamped $name (no round-stamped detail at $cpusStamp cpus)")
-        if (!txt.contains("\"cpus\":"))
-          System.err.println(s"[bench] WARNING: ghost triage baseline $name has no " +
-            s"cpus stamp; its core count is assumed to be $cpusStamp")
-      }
-      chosen.map(_._2).flatMap { txt =>
-        """"queries_min":\{([^}]*)\}""".r.findFirstMatchIn(txt).map {
-          m => m.group(1).split(",").flatMap { kv =>
-            val i = kv.lastIndexOf(':')
-            if (i < 0) None
-            else scala.util.Try(kv.substring(i + 1).trim.toDouble).toOption
-              .map(kv.substring(0, i).trim
-                .stripPrefix("\"").stripSuffix("\"") -> _)
-          }.toMap
-        }
-      }.getOrElse(Map.empty[String, Double])
-    }
-    val isolatedCap = 20
-    val isolated: Seq[(String, Double)] = {
-        val prev = prevMins(detailDir)
-        // worst inflation first: when the cap binds, the 20 re-runs
-        // should be the 20 the adjudicator would ask about first
-        // 1.25× threshold (was 1.5×): the r21 verdict's 11 unattributed
-        // "consistent regressions" sat in the +15-40% band, below the
-        // old trigger — unfalsifiable in-artifact. The 20-re-run cap
-        // (worst inflation first) still bounds wall-clock.
-        val suspects = results.collect {
-          case (n, (mn, _)) if mn > 0 &&
-            prev.get(n).exists(p => p > 0 && mn > p * 1.25) =>
-            n -> (mn / prev(n))
-        }.sortBy(-_._2).map(_._1)
-        if (suspects.size > isolatedCap)
-          System.err.println(s"[bench] ghost triage: ${suspects.size} " +
-            s"suspects exceed the $isolatedCap re-run cap — re-running " +
-            "the " + isolatedCap + " largest inflations; the rest stay " +
-            "sweep-only, re-measure via graft.examples.Probe time")
-        suspects.take(isolatedCap).flatMap { n =>
-          scala.util.Try {
-            val fn = SparkEntry.queries(n)
-            n -> (1 to 2).map(_ => timed(spark, sfDir, fn)).min
-          }.toOption
-        }
-      }
-    if (isolated.nonEmpty)
-      System.err.println(s"[bench] ghost triage re-measured " +
-        s"${isolated.size} suspects in isolation (min-of-2)")
-    val isoJson = isolated.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val detailJson =
-      s"""{"sf":"$sfDir","sweep":"$sweepId","cpus":$cpusStamp,"estimator":"min_of_$runs","total":$total,"median_total":$totalMed,"contention":$contention,"n_queries":${results.size},
-         |"queries_min":$qs,
-         |"queries_median":$qsMed,
-         |"isolated":$isoJson}
-         |""".stripMargin
     def writeDetail(path: String): Unit =
       try {
         val w = new java.io.PrintWriter(new java.io.File(path), "UTF-8")
-        try w.write(detailJson) finally w.close()
+        try w.write(result.detail) finally w.close()
         System.err.println(s"[bench] full per-query detail written to $path")
       } catch {
         case e: Exception =>
           System.err.println(s"[bench] detail write to $path failed: ${e.getMessage}")
       }
     writeDetail(detailPath)
-    // ALSO write a round-stamped copy, BENCH_detail_r{N}.json, when
-    // SPARK_GRAFT_ROUND names the round: every round overwrites
-    // BENCH_detail.json and its BENCH_rN.json keeps only a ~2k-char
-    // stdout tail, so without this the cross-round per-query series
-    // needs git archaeology.
-    thisRound match {
+    sys.env.get("SPARK_GRAFT_ROUND").flatMap(s => scala.util.Try(s.trim.toInt).toOption) match {
       case Some(n) =>
-        writeDetail(new java.io.File(detailDir, s"BENCH_detail_r$n.json").getPath)
+        val dir = Option(new java.io.File(detailPath).getAbsoluteFile.getParentFile)
+          .getOrElse(new java.io.File("."))
+        writeDetail(new java.io.File(dir, s"BENCH_detail_r$n.json").getPath)
       case None =>
         System.err.println("[bench] SPARK_GRAFT_ROUND is not set: no round-stamped " +
           "BENCH_detail_rN.json written")
     }
-    println(s"""{"metric":"detail","queries_median":$qsMed,"sf":"$sfDir"}""")
-    println(s"""{"metric":"detail","queries":$qs,"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","estimator":"min_of_$runs","median_total":$totalMed,"contention":$contention,"isolated_n":${isolated.size},"n_queries":${results.size},"sweep":"$sweepId","sf":"$sfDir"}""")
+    // Detail lines first, the compact headline LAST: a runner parses
+    // the final JSON line of its stdout tail.
+    println(s"""{"metric":"detail","queries_median":${result.medians},"sf":"$sfDir"}""")
+    println(s"""{"metric":"detail","queries":${result.mins},"sf":"$sfDir"}""")
+    println(result.headline)
     spark.stop()
   }
 }

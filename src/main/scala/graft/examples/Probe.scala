@@ -1,14 +1,9 @@
 package graft.examples
 
-import scala.collection.mutable
-
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.{Bench, SparkEntry}
+import graft.Bench.RunCost
 
 /**
  * The diagnostic main over `SparkEntry.queries`, in Bench's session with
@@ -21,9 +16,9 @@ import graft.{Bench, SparkEntry}
  *    `<root>/sf0.001`, `sf0.01` and `sf0.1`, one JSON line per (query, sf).
  *  - `cost <sfDir>`: two runs per query, each a `STATS` line of totals
  *    (with the whole-stage and expression classes the run compiled, and
- *    their compile time) and one `JOB` line per Spark job — the
- *    per-round job overhead of loop-shaped queries that no final plan
- *    shows.
+ *    their compile time) and one `JOB` line per Spark job, named by the
+ *    action behind it — the per-round job overhead of loop-shaped queries
+ *    that no final plan shows.
  *  - `explain <sfDir>`: the formatted physical plan.
  *  - `plan <sfDir>`: the executed plan after `collect`, and its `Exchange`
  *    lines and their count.
@@ -94,70 +89,13 @@ object Probe {
     "x_bpe_encode", "x_pii_scan", "x_pii_redact", "x_decontaminate")
   private val Sfs = Seq("sf0.001", "sf0.01", "sf0.1")
 
-  /** Scheduler counts of one Spark job; `site` is the action that launched it. */
-  final case class JobCost(id: Int, site: String, stages: Int, tasks: Int, taskMs: Long) {
-    def plus(s: Int, t: Int, ms: Long): JobCost =
-      copy(stages = stages + s, tasks = tasks + t, taskMs = taskMs + ms)
-  }
-
-  /** One run's wall time, its scheduler totals, the generated classes it
-    * compiled and their compile time (Spark's codegen cache misses), and
-    * its jobs in start order. */
-  final case class RunCost(wall: Double, jobs: Int, stages: Int, tasks: Int,
-      taskMs: Long, compiles: Long, compileMs: Double, perJob: Seq[JobCost])
-
-  /** Counts every job, completed stage and ended task since `reset`, in
-    * total and per job (a stage belongs to the last started job that
-    * lists it). The listener bus calls it from its own thread. */
-  private final class CostListener extends SparkListener {
-    private val jobs = mutable.LinkedHashMap[Int, JobCost]()
-    private val stageJob = mutable.Map[Int, Int]()
-    private var total = JobCost(-1, "", 0, 0, 0L)
-
-    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      // the result stage's name IS the action call site
-      // ("count at Recipe.scala:66")
-      jobs(j.jobId) = JobCost(j.jobId,
-        j.stageInfos.lastOption.map(_.name).getOrElse("?"), 0, 0, 0L)
-      j.stageIds.foreach(stageJob(_) = j.jobId)
+  /** Runs `name` twice in Bench's timed region under Bench's cost
+    * listener ([[Bench.costed]]); the first run pays one-off work (caches,
+    * codegen) that the second reuses. */
+  def cost(spark: SparkSession, sfDir: String, name: String): Seq[RunCost] =
+    Bench.withCostListener(spark) { listener =>
+      (1 to 2).map(_ => Bench.costed(spark, sfDir, SparkEntry.queries(name), listener))
     }
-    private def add(stageId: Int, stages: Int, tasks: Int, ms: Long): Unit = synchronized {
-      total = total.plus(stages, tasks, ms)
-      stageJob.get(stageId).foreach(id => jobs(id) = jobs(id).plus(stages, tasks, ms))
-    }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      add(s.stageInfo.stageId, 1, 0, 0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      add(t.stageId, 0, 1, if (t.taskInfo != null) t.taskInfo.duration else 0L)
-    def reset(): Unit = synchronized {
-      jobs.clear(); stageJob.clear(); total = JobCost(-1, "", 0, 0, 0L)
-    }
-    def result(wall: Double, compiles: Long, compileMs: Double): RunCost = synchronized {
-      RunCost(wall, jobs.size, total.stages, total.tasks, total.taskMs,
-        compiles, compileMs, jobs.values.toList)
-    }
-  }
-
-  /** Runs `name` twice in Bench's timed region under one listener; the
-    * first run pays one-off work (caches, codegen) that the second
-    * reuses. The bus is drained around each run, so a run counts only
-    * its own events. Compiles and compile time are the deltas of Spark's
-    * JVM-wide codegen counters (`CodegenMetrics`, `CodeGenerator`)
-    * around the run. */
-  def cost(spark: SparkSession, sfDir: String, name: String): Seq[RunCost] = {
-    val sc = spark.sparkContext
-    val listener = new CostListener
-    sc.addSparkListener(listener)
-    try (1 to 2).map { _ =>
-      ListenerBridge.waitUntilListenerBusEmpty(sc, 10000)
-      listener.reset()
-      val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-      val wall = Bench.timed(spark, sfDir, SparkEntry.queries(name))
-      val (c1, ns1) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-      ListenerBridge.waitUntilListenerBusEmpty(sc, 10000)
-      listener.result(wall, c1 - c0, (ns1 - ns0) / 1e6)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** The `STATS` line of run `i` of query `name`. */
   def statsLine(name: String, i: Int, r: RunCost): String =

@@ -324,23 +324,18 @@ object Dedup {
 
   /** The run-family window guard, shared by every pair finder that
     * self-joins `w`-keyed window rows ([[exactSubstringPairs]],
-    * [[longestRunPairs]], [[verbatimSpanScrub]]): with
-    * `pruneRareWindows` ONE doc-frequency pass over the checkpointed
-    * window rows serves both prunes — keep windows some OTHER doc also
-    * holds (result-invariant, spec-pinned: a frequency-1 window cannot
-    * pair) and below the quadratic-cell `maxBucketSize` ceiling; with
-    * the prune off, only the hot-window cap applies
-    * ([[dropOverflowBuckets]]). Routing every finder through here
-    * keeps the guard semantics from forking per operator. */
-  private def sharedWindowRows(wins: DataFrame, pruneRareWindows: Boolean,
-      maxBucketSize: Int): DataFrame =
-    if (pruneRareWindows)
-      wins.join(
-        wins.groupBy("w").agg(count(lit(1)).as("__f"))
-          .where(col("__f") >= 2 && col("__f") <= maxBucketSize)
-          .select("w"),
-        "w")
-    else dropOverflowBuckets(wins, Seq("w"), maxBucketSize)
+    * [[longestRunPairs]], [[verbatimSpanScrub]]): ONE doc-frequency pass
+    * over the checkpointed window rows serves both prunes — keep windows
+    * some OTHER doc also holds (result-invariant: a frequency-1 window
+    * cannot pair) and below the quadratic-cell `maxBucketSize` ceiling.
+    * Routing every finder through here keeps the guard semantics from
+    * forking per operator. */
+  private def sharedWindowRows(wins: DataFrame, maxBucketSize: Int): DataFrame =
+    wins.join(
+      wins.groupBy("w").agg(count(lit(1)).as("__f"))
+        .where(col("__f") >= 2 && col("__f") <= maxBucketSize)
+        .select("w"),
+      "w")
 
   /**
    * MinHash + LSH banding: b bands of r rows (b*r = numHashes); documents
@@ -575,7 +570,7 @@ object Dedup {
    */
   def ngramJaccardPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleN: Int = 3,
-      minJaccard: Double = 0.5, pruneRareGrams: Boolean = false): DataFrame = {
+      minJaccard: Double = 0.5): DataFrame = {
     // Shingles are hashed 64-bit keys (native one-pass expression): the
     // self-join shuffle carries 8-byte keys instead of word strings, and
     // intersection counts are unchanged (2^-64 collision odds).
@@ -591,22 +586,11 @@ object Dedup {
         explode(graft.plans.NativeFunctions.hashedShingles(col(textCol), shingleN)).as("g"))
       .localCheckpoint()
     val sizes = grams.groupBy(col(idCol)).agg(count("*").as("n"))
-    // Rare-gram pruning (opt-in): a gram held by a single document
-    // cannot produce a pair, and in a LARGE natural-text corpus most
-    // shingles are unique — pre-filtering them shrinks the self-join's
-    // input dramatically at 100 TB. It costs one extra aggregation +
-    // join on `g`, which only amortizes once the join input dwarfs the
-    // count — measured at sf0.1 the corpus is too small and the prune
-    // LOSES ~1s, hence default-off; enable for corpus-scale runs.
-    // Result is provably unchanged either way (spec-verified).
-    val shared =
-      if (!pruneRareGrams) grams
-      else grams.join(
-        grams.groupBy("g").agg(count(lit(1)).as("__f"))
-          .where(col("__f") > 1).select("g"),
-        "g")
-    val l = shared.select(col("g"), col(idCol).as("a"))
-    val r = shared.select(col("g"), col(idCol).as("b"))
+    // No rare-gram prune: a gram held by one document cannot pair, but
+    // dropping those grams costs an extra aggregation and join on `g`
+    // that measured ~1 s SLOWER at sf0.1 than the self-join it shrinks.
+    val l = grams.select(col("g"), col(idCol).as("a"))
+    val r = grams.select(col("g"), col(idCol).as("b"))
     val inter = l.join(r, "g").where(col("a") < col("b"))
       .groupBy("a", "b").agg(count("*").as("n_common"))
     // sizes has one narrow row per document — a broadcast would grow
@@ -824,12 +808,12 @@ object Dedup {
    * Shape at scale: one codegen'd projection per doc, explode to
    * (8-byte hash, id) rows, a self-equi-join on the hash, and a count
    * aggregation — never all-pairs, never a string-payload shuffle.
-   * Two guards are wired (both default-on):
-   *   - RARE-WINDOW PRUNE (`pruneRareWindows`): a window held by a
-   *     single document cannot pair, and in natural text most
-   *     `windowTokens`-wide windows ARE unique, so one pre-aggregation
+   * Two guards are wired:
+   *   - RARE-WINDOW PRUNE: a window held by a single document cannot
+   *     pair, and in natural text most `windowTokens`-wide windows ARE
+   *     unique, so one pre-aggregation
    *     on the 8-byte hash discards the bulk of the join input before
-   *     it shuffles. Provably result-invariant (spec-pinned).
+   *     it shuffles. Provably result-invariant.
    *   - HOT-WINDOW CAP (`maxBucketSize`, default 4096): a boilerplate
    *     window shared by k docs emits O(k²) candidate rows; windows
    *     above the cap are dropped from pair generation, same contract
@@ -850,8 +834,7 @@ object Dedup {
    */
   def exactSubstringPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", windowTokens: Int = 8,
-      minShared: Long = 1L, pruneRareWindows: Boolean = true,
-      maxBucketSize: Int = MaxBucketSize): DataFrame = {
+      minShared: Long = 1L, maxBucketSize: Int = MaxBucketSize): DataFrame = {
     require(windowTokens > 0, "windowTokens must be positive")
     require(minShared >= 1, "minShared must be at least 1")
     val wins = docs
@@ -859,7 +842,7 @@ object Dedup {
       .select(col(idCol), explode(
         graft.plans.NativeFunctions.hashedShingles(col(textCol), windowTokens)).as("w"))
       .localCheckpoint() // window rows feed both join sides once
-    val shared = sharedWindowRows(wins, pruneRareWindows, maxBucketSize)
+    val shared = sharedWindowRows(wins, maxBucketSize)
     val l = shared.select(col("w"), col(idCol).as("a"))
     val r = shared.select(col("w"), col(idCol).as("b"))
     l.join(r, "w").where(col("a") < col("b"))
@@ -923,7 +906,7 @@ object Dedup {
    * `(a, b, n_runs, longest_run_tokens)`.
    *
    * Scale shape: the same bucketed window-hash equi-join as
-   * [[exactSubstringPairs]] with the same two default-on guards
+   * [[exactSubstringPairs]] with the same two guards
    * (rare-window prune — result-invariant — and the hot-window cap);
    * the island windows then run PER CANDIDATE PAIR over its matched
    * positions, so post-join work is linear in shared-window matches,
@@ -931,14 +914,13 @@ object Dedup {
    */
   def longestRunPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", windowTokens: Int = 8,
-      pruneRareWindows: Boolean = true,
       maxBucketSize: Int = MaxBucketSize): DataFrame = {
     require(windowTokens > 0, "windowTokens must be positive")
     val eligible = docs.where(size(tokens(col(textCol))) >= windowTokens)
     val wins = positionalGramRows(eligible, idCol, textCol, windowTokens)
       .select(col(idCol), col("pos"), xxhash64(col("__g")).as("w"))
       .localCheckpoint()
-    val shared = sharedWindowRows(wins, pruneRareWindows, maxBucketSize)
+    val shared = sharedWindowRows(wins, maxBucketSize)
     val l = shared.select(col("w"), col(idCol).as("a"), col("pos").as("pa"))
     val r = shared.select(col("w"), col(idCol).as("b"), col("pos").as("pb"))
     val matched = l.join(r, "w").where(col("a") < col("b"))
@@ -973,10 +955,9 @@ object Dedup {
    */
   def verbatimSpanScrub(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", windowTokens: Int = 8,
-      minRunTokens: Int = 8, pruneRareWindows: Boolean = true,
-      maxBucketSize: Int = MaxBucketSize): DataFrame = {
+      minRunTokens: Int = 8, maxBucketSize: Int = MaxBucketSize): DataFrame = {
     val flagged = verbatimSpanFlags(docs, idCol, textCol, windowTokens,
-      minRunTokens, pruneRareWindows, maxBucketSize)
+      minRunTokens, maxBucketSize)
     val toks = docs
       .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "__tok")))
     toks.join(flagged.withColumn("__flag", lit(true)), Seq(idCol, "pos"), "left")
@@ -998,15 +979,14 @@ object Dedup {
     * the batch rebuild does. */
   def verbatimSpanFlags(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", windowTokens: Int = 8,
-      minRunTokens: Int = 8, pruneRareWindows: Boolean = true,
-      maxBucketSize: Int = MaxBucketSize): DataFrame = {
+      minRunTokens: Int = 8, maxBucketSize: Int = MaxBucketSize): DataFrame = {
     require(minRunTokens >= windowTokens,
       "minRunTokens must be at least windowTokens (shorter runs are invisible)")
     val eligible = docs.where(size(tokens(col(textCol))) >= windowTokens)
     val wins = positionalGramRows(eligible, idCol, textCol, windowTokens)
       .select(col(idCol), col("pos"), xxhash64(col("__g")).as("w"))
       .localCheckpoint()
-    val shared = sharedWindowRows(wins, pruneRareWindows, maxBucketSize)
+    val shared = sharedWindowRows(wins, maxBucketSize)
     val l = shared.select(col("w"), col(idCol).as("a"), col("pos").as("pa"))
     val r = shared.select(col("w"), col(idCol).as("b"), col("pos").as("pb"))
     val matched = l.join(r, "w").where(col("a") < col("b"))

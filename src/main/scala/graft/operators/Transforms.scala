@@ -174,13 +174,15 @@ object Transforms {
   /** [[applyAnomalies]] over a whole blueprint, `(id, specs, num_points)`
     * per generator: spec index 0 of every generator in one stage, then
     * index 1, … A generator with fewer specs passes the later stages
-    * unchanged. */
+    * unchanged. Stage `i` ≥ 1 starts from an eager checkpoint of the
+    * frame it would otherwise read twice (rows and statistics), so `d`
+    * specs read the source O(d) times, not 2^(d+1). */
   def applyAnomalies(df: DataFrame, gens: Seq[(String, Seq[AnomalySpec], Long)],
       seed: Long): DataFrame = {
     val depth = if (gens.isEmpty) 0 else gens.map(_._2.size).max
     (0 until depth).foldLeft(df) { (cur, i) =>
       val specs = gens.collect { case (id, s, n) if s.size > i => (id, s(i), n) }
-      anomalyStage(cur, specs, seed, i)
+      anomalyStage(if (i == 0) cur else cur.localCheckpoint(), specs, seed, i)
     }
   }
 

@@ -133,7 +133,7 @@ private[plans] object Kernel {
     sql = Some(Sql("graft_hash_features", 1, "dims")))
   val HashedShingles = Kernel("hashedShingles", Longs, Text,
     "_FUNC_(text, n) - hashed word n-gram keys, distinct, in document order",
-    sql = Some(Sql("graft_hashed_shingles", 1)))
+    sql = Some(Sql("graft_hashed_shingles", 1, "n")))
   val MinhashSignature = Kernel("minhashSignature", Longs, Text,
     "_FUNC_(text, numHashes, shingleN) - MinHash signature array from the " +
       "standard affine family",
@@ -234,7 +234,10 @@ object NativeFunctions {
   def tokensOf(str: Column): Column = TokensOf(str)()
   def qualityCounts(str: Column): Column = QualityCounts(str)()
   def charEntropy9(str: Column): Column = CharEntropy9(str)()
-  def hashedShingles(text: Column, n: Int): Column = HashedShingles(text)(n)
+  def hashedShingles(text: Column, n: Int): Column = {
+    require(n > 0, "n must be positive")
+    HashedShingles(text)(n)
+  }
   def dot(a: Column, b: Column): Column = Dot(a, b)()
   def quantizeInt8(v: Column): Column = QuantizeInt8(v)()
   def simhashMd5(text: Column): Column = SimhashMd5(text)()

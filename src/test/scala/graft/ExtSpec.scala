@@ -203,11 +203,6 @@ class ExtSpec extends SparkSpec {
     out((0L, 1L)) shouldBe 1.0
     out((0L, 2L)) should (be > 0.1 and be < 1.0)
     out.keys.foreach { case (a, b) => a should be < b }
-    // the at-scale rare-gram prune must not change results
-    val pruned = Dedup.ngramJaccardPairs(docs, minJaccard = 0.1,
-      pruneRareGrams = true).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    pruned shouldBe out
   }
 
   test("exact substring pairs: verbatim 8-token quote pairs docs, short docs excluded") {
@@ -230,17 +225,11 @@ class ExtSpec extends SparkSpec {
       (1L, s"alpha beta $quote gamma delta")).toDF("doc_id", "text")
     Dedup.exactSubstringPairs(dup, windowTokens = 8)
       .head().getLong(2) shouldBe 5L // 12 tokens -> 5 distinct windows
-    // the rare-window prune is result-invariant: singleton windows
-    // cannot pair, so dropping them changes nothing
-    Dedup.exactSubstringPairs(d, windowTokens = 8, pruneRareWindows = false)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap shouldBe out
     // the hot-window cap drops flood cells: 50 copies of one text share
     // every window above cap 5 → no pairs at all from the flood
     val flood = (0L until 50L).map(i => (i, s"zeta $quote omega")).toDF("doc_id", "text")
     Dedup.exactSubstringPairs(flood, windowTokens = 8, maxBucketSize = 5)
       .count() shouldBe 0L
-    Dedup.exactSubstringPairs(flood, windowTokens = 8,
-      pruneRareWindows = false, maxBucketSize = 5).count() shouldBe 0L
   }
 
   test("embedding near-dup finds the planted duplicate vector") {
@@ -1806,10 +1795,6 @@ class ExtSpec extends SparkSpec {
     out((0L, 1L)) shouldBe ((1L, 12L)) // one island of 5 windows → 12 tokens
     out((2L, 3L)) shouldBe ((2L, 8L))  // two single-window islands → 8 each
     out.keySet shouldBe Set((0L, 1L), (2L, 3L))
-    // prune-off path agrees (the rare-window prune is result-invariant)
-    Dedup.longestRunPairs(d, windowTokens = 8, pruneRareWindows = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(3)))).toMap shouldBe out
     // consistency with the count finder: every longest-run pair is a
     // substring-dedup pair and vice versa
     Dedup.exactSubstringPairs(d, windowTokens = 8).collect()
@@ -2373,6 +2358,13 @@ class ExtSpec extends SparkSpec {
       spark.sql("SELECT graft_hashed_shingles(text, id + 1) FROM ext_probe").collect()
     }
     ex.getMessage should include("literal")
+    // a width n <= 0 is rejected, from SQL and from the Column call alike
+    Seq(0, -2).foreach { n =>
+      val e = intercept[Exception](
+        spark.sql(s"SELECT graft_hashed_shingles(text, $n) FROM ext_probe").collect())
+      withClue(n) { e.getMessage should include("must be positive") }
+      intercept[IllegalArgumentException](NativeFunctions.hashedShingles($"text", n))
+    }
     // ... and so is every other literal-int parameter
     Seq("graft_minhash_signature(text, id + 1, 3)",
       "graft_minhash_signature(text, 8, id + 1)", "graft_winnow_fps(text, id + 1, 4)",

@@ -2,7 +2,7 @@ package graft
 
 import graft.examples.Probe
 
-/** The probe main's `cost` and `plan` modes, driven in the test session. */
+/** The probe main's `cost` and `plan` modes and Bench's sweep ledger, driven in the test session. */
 class ProbeSpec extends SparkSpec {
   private val Sf = "/root/testdata/sf0.001"
 
@@ -35,7 +35,34 @@ class ProbeSpec extends SparkSpec {
   }
 
   test("cost: g_anomalies runs more than one job") {
-    Probe.cost(spark, Sf, "g_anomalies").head.jobs should be > 1
+    val runs = Probe.cost(spark, Sf, "g_anomalies")
+    runs.head.jobs should be > 1
+    // adaptive stage jobs are named by their query's action, not by the
+    // thread pool that submitted them
+    runs.flatMap(_.perJob).foreach(_.site should not include "withThreadLocalCaptured")
+  }
+
+  test("sweep: two sweeps record equal, positive per-query costs; the detail carries them") {
+    val qs = Seq("g_anomalies", "g_square")
+    val sweeps = (1 to 2).map(_ => Bench.sweep(spark, Sf, qs))
+    def counts(s: Bench.Sweep) = s.results.map { case (q, t) =>
+      val c = t.cost.get
+      q -> Seq(c.jobs.toLong, c.stages.toLong, c.tasks.toLong, c.total.shuffleRead, c.total.shuffleWrite)
+    }
+    counts(sweeps(0)) shouldBe counts(sweeps(1))
+    // g_square reads an ordered range and shuffles nothing; g_anomalies does
+    val byQuery = counts(sweeps(0)).toMap
+    for (q <- qs) withClue(q) { all(byQuery(q).take(3)) should be > 0L }
+    all(byQuery("g_anomalies")) should be > 0L
+    val detail = new com.fasterxml.jackson.databind.ObjectMapper().readTree(sweeps(0).detail)
+    detail.has("isolated") shouldBe false
+    detail.get("n_queries").asInt shouldBe qs.size
+    val cost = detail.get("queries_cost")
+    for (q <- qs; f <- Seq("jobs", "stages", "tasks", "task_ms", "shuffle_read_bytes",
+        "shuffle_write_bytes", "spill_bytes"))
+      withClue(s"$q.$f") { cost.get(q).get(f).isIntegralNumber shouldBe true }
+    cost.get("g_square").get("jobs").asLong shouldBe byQuery("g_square").head
+    sweeps(0).headline should not include "isolated"
   }
 
   test("plan: the exchange count is the Exchange lines of the executed plan") {

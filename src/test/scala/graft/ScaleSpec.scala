@@ -986,6 +986,65 @@ class ScaleSpec extends SparkSpec {
       withClue(re) { count(re, p) shouldBe count(re, six) }
   }
 
+  test("materialize reads its source O(d) times for d anomaly specs, and applies them in order") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Range}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val n = 200
+    def blueprint(d: Int): graft.blueprint.Blueprint = {
+      val specs = Seq.fill(d)("""{"start":5,"end":150,"counts":4}""").mkString("[", ",", "]")
+      val gens = Seq("a" -> 7, "b" -> 9).map { case (id, hi) =>
+        s"""{"id":"$id","shape":"square","config":{"low_value":1,"high_value":$hi,""" +
+          s""""low_width":3,"high_width":2,"anomalies":$specs}}"""
+      }.mkString(",")
+      graft.blueprint.BlueprintParser.parse(
+        s"""{"commons":{"num_points":$n},"generators":[$gens],"targets":[]}""")
+    }
+    // `Range` leaves in the optimized plans of every query `materialize`
+    // runs, plus the plan of the frame it returns
+    def sourceScans(d: Int): Int = {
+      val ran = scala.collection.mutable.Buffer[LogicalPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          ran.synchronized(ran += qe.optimizedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val out = try {
+        val df = graft.operators.Engine.materialize(spark, blueprint(d), 42L)
+        org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 10000)
+        df
+      } finally spark.listenerManager.unregister(listener)
+      (ran.toSeq :+ out.queryExecution.optimizedPlan)
+        .map(_.collect { case r: Range => r }.size).sum
+    }
+    val base = sourceScans(0)
+    base should be > 0
+    withClue(s"d=0 reads the source $base times;") { sourceScans(8) should be <= 9 * base }
+    // the stages' order, slots and pre-injection max, against a driver-side
+    // replay over the anomaly-free series: each spec overwrites its slots
+    // with (floor(max) + 1)^2 of the series as the previous spec left it
+    val plain = graft.operators.Engine.materialize(spark, blueprint(0), 42L).collect()
+      .groupBy(_.getString(0)).map { case (id, rows) =>
+        id -> rows.sortBy(_.getLong(1)).map(_.getLong(2).toDouble)
+      }
+    val d = 3
+    val specs = blueprint(d).generators.head.config.anomalies
+    val expected = plain.map { case (id, v0) =>
+      val v = v0.clone()
+      for (i <- 0 until d) {
+        val m = math.floor(v.max)
+        graft.operators.Transforms.anomalySlots(specs(i), n, 42L, id, i)
+          .foreach(t => v(t.toInt) = math.pow(m + 1, 2))
+      }
+      id -> v.map(_.toLong).toSeq
+    }
+    graft.operators.Engine.materialize(spark, blueprint(d), 42L).collect()
+      .groupBy(_.getString(0)).map { case (id, rows) =>
+        id -> rows.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq
+      } shouldBe expected
+  }
+
   test("typed API: Dataset[DataPoint] round-trips the IR frame") {
     val bp = graft.blueprint.BlueprintParser.parse(
       """{"generators":[{"id":"g","shape":"constant","config":{"num_points":5,"constant":3}}],
